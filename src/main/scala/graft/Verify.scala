@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,29 +8,7 @@ object Verify {
     // Optional extra args restrict the dump to named queries (iteration
     // aid); the driver always runs with exactly two args → full dump.
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // SPARK_GRAFT_MASTER lets the SAME dump run under real executors
-    // (`local-cluster[n,cores,mb]` — separate JVMs, separate shuffle
-    // dirs) to validate the multi-executor scratch claims the
-    // single-JVM sf10 runs can only argue (SCALING.md r12): pass
-    // spark.executor.extraClassPath/-JavaOptions as system properties.
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]"))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // A multi-query dump accumulates every finished stage's shuffle
-      // files until the DRIVER GCs (ContextCleaner removes them only
-      // when their ShuffleDependency is collected) — and a 48 g heap at
-      // sf10 may never GC unprompted, which disk-killed the sf10
-      // rec_blend_fixed dump twice at >70 GB of dead spill. Periodic
-      // driver GC is the single-JVM stand-in for the per-stage shuffle
-      // cleanup a multi-executor cluster performs as executors roll.
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }

@@ -281,7 +281,7 @@ object PageRank {
     var iter = 0
     var delta = Double.MaxValue
     // env-gated per-iteration instrumentation (round-13: the SCALING.md
-    // distributed-loop timing at sf10 — tools/PrDist sets it); zero cost
+    // distributed-loop timing at sf10); zero cost
     // when unset, and it adds no action: the timed reduce below is the
     // loop's one action either way
     val logIters = sys.env.contains("SPARK_GRAFT_PR_LOG")

@@ -196,7 +196,7 @@ object Recommend {
     * ([[Dedup.minhashCandidatesTwoLevelOf]]: salted partial collect →
     * merge, two smaller hash states instead of one wide one) — so it
     * shares `jaccard_lsh`'s DuckDB oracle verbatim and A/Bs against it
-    * under `tools/LshDiag`'s per-stage instrument. Kept as a declared
+    * under `tools/Profile`'s per-stage table. Kept as a declared
     * query (not a branch) so the driver hash-checks both shapes every
     * round; SCALING.md r13 records the measured verdict. */
   def jaccardLshTwoLevel(spark: SparkSession, dir: String, k: Int = 100,

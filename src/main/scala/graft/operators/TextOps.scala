@@ -769,25 +769,10 @@ object TextOps {
     * localCheckpoints of the rewritten corpus. Measured at sf0.1 with
     * the 64-round depth test's workload — see the SCALING.md round-11
     * section for the cadence A/B that picked this value (and the
-    * round-13 section re-validating it for the byte domain). The env
-    * override exists ONLY for the cadence A/B instrument
-    * ([[graft.tools.BpeTime]]) — cadence changes materialization
-    * boundaries, never merge results (BpeSpec's 64-round parity cases
-    * cross checkpoint generations either way). */
-  val BpeCheckpointEvery: Int =
-    sys.env.get("SPARK_GRAFT_BPE_CKPT") match {
-      case None => 16
-      case Some(s) =>
-        // a bare toInt here would turn a typo'd env var into an
-        // ExceptionInInitializerError on EVERY TextOps use, and 0 would
-        // make the `step % cadence` check divide by zero mid-run
-        scala.util.Try(s.trim.toInt).toOption.filter(_ > 0).getOrElse {
-          System.err.println(
-            s"graft: ignoring SPARK_GRAFT_BPE_CKPT='$s' " +
-              "(not a positive integer); using cadence 16")
-          16
-        }
-    }
+    * round-13 section re-validating it for the byte domain). Cadence
+    * changes materialization boundaries, never merge results (BpeSpec's
+    * 64-round parity cases cross checkpoint generations). */
+  val BpeCheckpointEvery: Int = 16
 
   /** [[bpeMerges]] over any (t: array<string>) corpus — the
     * fixture-testable form (same split as reachHopsOf). */
@@ -918,25 +903,6 @@ object TextOps {
       .orderBy("doc_id")
   }
 
-  /** Deep-merge dispatch for CLI/pipeline sessions (r15 verdict item
-    * 5, moved OUT of [[bpeEncode]] per r16 advice: an env var must
-    * never silently change the VALUES of a declared, oracle-pinned
-    * query). The word-level learn loop is measured super-linear past
-    * sf30 at depth (cold sf30→sf100 exp ~1.5; at 64 merges sf100 is a
-    * measured disk wall — SCALING.md r16 §2b), while the byte-level
-    * learner is VOCABULARY-bounded (invariant in corpus size at fixed
-    * vocabulary). At the production merge-budget class (10⁴–10⁵
-    * rounds) byte-level is the only shape that survives 100 TB, so
-    * callers choosing a granularity at runtime dispatch HERE —
-    * `SPARK_GRAFT_BPE_BYTELEVEL=1` selects [[bpeEncodeBytes]] — while
-    * the declared queries stay fixed: `bpe_encode` is always
-    * word-level, `bpe_encode_bytes` always byte-level. */
-  def bpeEncodeAuto(spark: SparkSession, dir: String,
-      nMerges: Int = 4): DataFrame =
-    if (sys.env.get("SPARK_GRAFT_BPE_BYTELEVEL").contains("1"))
-      bpeEncodeBytes(spark, dir, nMerges)
-    else bpeEncode(spark, dir, nMerges)
-
   /** `bpe_merges_bytes`: BYTE/CHAR-level BPE merge learning — the
     * production tokenizer-training shape (Sennrich, Haddow & Birch,
     * ACL 2016, learn_bpe.py's actual granularity), where [[bpeMerges]]
@@ -980,13 +946,9 @@ object TextOps {
 
   /** Max TOTAL SYMBOLS in the type table for the single-task learner
     * ([[bpeMergesBytesLocal]]): ~8M short strings is low hundreds of
-    * MB in one task — conservative for a 4–8 GB production executor,
-    * trivial at local[32]/128G. Overridable per session
-    * (`SPARK_GRAFT_BPE_LOCAL_MAX`; 0 forces the distributed loop —
-    * the A/B lever the SCALING depth cells use). */
-  val BpeLocalMaxSymbols: Long =
-    sys.env.get("SPARK_GRAFT_BPE_LOCAL_MAX").map(_.toLong)
-      .getOrElse(8000000L)
+    * MB in one task — conservative for a 4–8 GB production executor.
+    * Callers pass `localMaxSymbols = 0` to force the distributed loop. */
+  val BpeLocalMaxSymbols: Long = 8000000L
 
   /** [[bpeMergesBytes]] over any (t: array<string>) corpus — the
     * fixture-testable form.

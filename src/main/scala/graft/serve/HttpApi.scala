@@ -49,6 +49,7 @@ import graft.rec.{Engine, RecsApi}
   * matters at top-10-result sizes. */
 final class HttpApi(spark: SparkSession, dir: String, port: Int = 0,
     graph: Option[Engine.ProductGraph] = None) {
+  import HttpApi.{detail, jStr}
 
   // injectable graph: the reference's incidence includes event→product
   // edges the testdata schema cannot carry, so golden-fixture parity
@@ -66,16 +67,6 @@ final class HttpApi(spark: SparkSession, dir: String, port: Int = 0,
 
   def start(): Int = { server.start(); boundPort }
   def stop(): Unit = server.stop(0)
-
-  // ---- JSON (hand-rolled: values are numbers, strings, null only) ----
-
-  private def jStr(s: String): String =
-    "\"" + s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
 
   private def jVal(v: Any): String = v match {
     case null => "null"
@@ -97,8 +88,12 @@ final class HttpApi(spark: SparkSession, dir: String, port: Int = 0,
 
   // ---- request plumbing ----
 
+  // decode the RAW query exactly once: getQuery() is already decoded,
+  // and a second pass would split a value on an escaped '&' and throw
+  // on an escaped '%' (`%25zz`). A malformed escape never reaches a
+  // handler — the JDK server answers it with a 400 itself.
   private def params(ex: HttpExchange): Map[String, String] =
-    Option(ex.getRequestURI.getQuery).getOrElse("").split("&")
+    Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&")
       .filter(_.contains("=")).map { kv =>
         val Array(k, v) = kv.split("=", 2)
         java.net.URLDecoder.decode(k, "UTF-8") ->
@@ -113,15 +108,12 @@ final class HttpApi(spark: SparkSession, dir: String, port: Int = 0,
     ex.close()
   }
 
-  private def detail(msg: String): String =
-    s"""{"detail":${jStr(msg)}}""" // FastAPI's error envelope (main.py:87)
-
   private def handler(f: HttpExchange => (Int, String)) =
     new com.sun.net.httpserver.HttpHandler {
       override def handle(ex: HttpExchange): Unit = {
         val (status, body) =
           try f(ex)
-          catch { case e: Throwable => (500, detail(e.getMessage)) }
+          catch { case e: Throwable => HttpApi.failure(e) }
         send(ex, status, body)
       }
     }
@@ -199,20 +191,33 @@ final class HttpApi(spark: SparkSession, dir: String, port: Int = 0,
   })
 }
 
+object HttpApi {
+  // ---- JSON (hand-rolled: values are numbers, strings, null only) ----
+
+  private def jStr(s: String): String =
+    "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+
+  private def detail(msg: String): String =
+    s"""{"detail":${jStr(msg)}}""" // FastAPI's error envelope (main.py:87)
+
+  /** The catch-all 500. An exception without a message is named by its
+    * class: a null detail would throw inside the handler's own catch and
+    * drop the connection instead of answering. */
+  private[graft] def failure(e: Throwable): (Int, String) =
+    (500, detail(Option(e.getMessage).getOrElse(e.getClass.getName)))
+}
+
 /** Standalone server main: `runMain graft.serve.HttpMain [sfDir] [port]`. */
 object HttpMain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val port = if (args.length > 1) args(1).toInt else 8080
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")}]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     val api = new HttpApi(spark, dir, port)
     println(s"graft http api listening on ${api.start()}")
     Thread.currentThread().join()

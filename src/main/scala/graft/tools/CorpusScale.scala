@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.streaming.CorpusStream
@@ -31,14 +30,7 @@ object CorpusScale {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val chunks = args.lift(1).map(_.toInt).getOrElse(20)
     val compactAt = args.lift(2).map(_.toInt).getOrElse(0)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
 
     val staging = Files.createTempDirectory("graft-corpusscale").toString
     val ck = Files.createTempDirectory("graft-corpusscale-ck").toString

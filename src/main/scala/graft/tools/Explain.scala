@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump formatted physical plans for the declared queries — plan-review
   * aid (SURVEY §4.2 "verify via explain()"). With
   * SPARK_GRAFT_EXPLAIN_UNCACHED=1 the queries build under
@@ -17,13 +15,7 @@ object Explain {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.tail.toSet
       else graft.SparkEntry.queries.keySet
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
     val uncached = sys.env.get("SPARK_GRAFT_EXPLAIN_UNCACHED").contains("1")
     def show(): Unit =
       graft.SparkEntry.queries.filter(q => names(q._1)).toSeq.sortBy(_._1)

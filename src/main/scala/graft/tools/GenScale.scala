@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.model.Tables
@@ -31,15 +30,7 @@ object GenScale {
     val out = args.headOption.getOrElse("/tmp/graft-sf1")
     val factor = args.lift(1).map(_.toInt).getOrElse(10)
     val src = args.lift(2).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session()
     import spark.implicits._
 
     val nDocs = 5000L * factor
@@ -193,7 +184,7 @@ object GenScale {
     // int64 of NANOS — the same VALUES Tables.events reads from the
     // real table under nanosAsLong, but WITHOUT the TIMESTAMP(NANOS)
     // logical annotation Spark cannot write (so this dir feeds
-    // QProfile/Bench only; the DuckDB oracles CAST(ts AS TIMESTAMP)
+    // Profile/Bench only; the DuckDB oracles CAST(ts AS TIMESTAMP)
     // and would reject the bare BIGINT — oracle-gate at the real sf
     // dirs, bench here)
     val nEvents = 100000L * factor

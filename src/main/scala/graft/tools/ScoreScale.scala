@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.streaming.CorpusStream
@@ -21,7 +20,7 @@ import graft.streaming.CorpusStream
   * source `maxFilesPerTrigger=1` → one micro-batch per chunk; the
   * model weights come from the BATCH fit over the SAME source dir
   * (fit offline, hot-swap literals — the production shape); sink is
-  * noop (full projection computed, nothing shipped — the TimeQuery
+  * noop (full projection computed, nothing shipped — the Profile
   * method).
   *
   * Round 16: a `mix` mode replays [[CorpusStream.mixedStream]] — the
@@ -49,18 +48,11 @@ object ScoreScale {
     val mode = args.lift(2).getOrElse("score")
     require(Set("score", "mix", "ingest", "mixingest")(mode),
       s"unknown mode $mode")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // recentProgress is a ring buffer (default 100); size it to the
-      // chunk count so per-batch metrics below see EVERY batch
-      .config("spark.sql.streaming.numRecentProgressUpdates",
-        math.max(chunks + 8, 100).toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session()
+    // recentProgress is a ring buffer (default 100); size it to the
+    // chunk count so per-batch metrics below see EVERY batch
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
+      math.max(chunks + 8, 100).toString)
 
     val staging = Files.createTempDirectory("graft-scorescale").toString
     val ck = Files.createTempDirectory("graft-scorescale-ck").toString

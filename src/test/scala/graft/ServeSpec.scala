@@ -24,6 +24,19 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
     (resp.statusCode(), resp.body())
   }
 
+  // java.net.URI refuses to build a malformed request, so send it raw
+  private def rawStatus(path: String): Int = {
+    val sock = new java.net.Socket("127.0.0.1", port)
+    try {
+      sock.getOutputStream.write(
+        s"GET $path HTTP/1.1\r\nHost: x\r\nConnection: close\r\n\r\n"
+          .getBytes("US-ASCII"))
+      new java.io.BufferedReader(
+        new java.io.InputStreamReader(sock.getInputStream))
+        .readLine().split(" ")(1).toInt
+    } finally sock.close()
+  }
+
   test("GET /health is a liveness probe") {
     val (code, body) = get("/health")
     assert(code == 200 && body.contains("\"ok\":true"), body)
@@ -70,6 +83,27 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
     assert(code == 404)
     val (code2, body2) = get("/customers/1/recommendations?top_n=abc")
     assert(code2 == 200, body2) // unparseable top_n falls back to default 3
+  }
+
+  test("a message-less exception still answers 500 with a JSON detail") {
+    val (code, body) = HttpApi.failure(new RuntimeException())
+    assert(code == 500, body)
+    assert(body == """{"detail":"java.lang.RuntimeException"}""", body)
+  }
+
+  test("malformed percent-encoding is a 400 on every route") {
+    Seq("/recs?strategy=%zz", "/customers/1/recommendations?top_n=%zz",
+      "/customers/1/strategies?top_n=%zz").foreach { path =>
+      assert(rawStatus(path) == 400, path)
+    }
+  }
+
+  test("an escaped '%' in the query is decoded once, to a literal '%'") {
+    val (code, body) = get("/recs?strategy=%25zz")
+    assert(code == 400 && body.contains("Unknown strategy: %zz"), body)
+    // a literal '%zz' top_n is junk like 'abc': the default 3 applies
+    val (code2, body2) = get("/customers/1/recommendations?top_n=%25zz")
+    assert(code2 == 200, body2)
   }
 
   test("per-request caches are released after serving (no cache leak)") {

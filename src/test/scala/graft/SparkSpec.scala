@@ -12,14 +12,10 @@ trait SparkSpec extends AnyFunSuite {
 object SparkSpec {
   lazy val session: SparkSession = {
     val s = SparkSession.builder()
-      .master("local[4]")
+      .config(Session.conf(Map("SPARK_GRAFT_CPUS" -> "4")).toMap)
       .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
