@@ -79,7 +79,7 @@ object PageRank {
     * adjacency was silently REBUILT from the groupByKey shuffle every
     * iteration. Primitive `Array[Long]`/`Array[Double]` pairs hold the
     * same edges at ~16 B each, in memory and on the wire. */
-  private type Adj = (Array[Long], Array[Double])
+  private[graft] type Adj = (Array[Long], Array[Double])
 
   /** Session-level memo of the grouped adjacency, keyed by the edge
     * DataFrame's semantic plan hash: pagerank_global, ppr_seeded and
@@ -182,69 +182,89 @@ object PageRank {
         case (id, Left(p))  => persMap(id) = p
         case (id, Right(a)) => adjRaw += ((id, a))
       }
-      val ids = persMap.keysIterator.toArray
-      java.util.Arrays.sort(ids) // deterministic index order
-      val idx = scala.collection.mutable.LongMap.empty[Int]
-      var i = 0
-      while (i < ids.length) { idx(ids(i)) = i; i += 1 }
-      val nV = ids.length
-      val pers = new Array[Double](nV)
-      i = 0
-      while (i < nV) {
-        val p = persMap(ids(i))
-        pers(i) = if (persTotal > 0) p / persTotal else 1.0 / nV
-        i += 1
-      }
-      // adjacency in index space; srcs/dsts outside the vertex set drop,
-      // exactly as the distributed state joins drop them
-      val isSink = Array.fill(nV)(true)
-      val outIdx = new Array[Array[Int]](nV)
-      val outW = new Array[Array[Double]](nV)
-      adjRaw.foreach { case (src, (dsts, ws)) =>
-        idx.get(src).foreach { si =>
-          isSink(si) = false
-          val ki = Array.newBuilder[Int]
-          val kw = Array.newBuilder[Double]
-          var k = 0
-          while (k < dsts.length) {
-            if (idx.contains(dsts(k))) { ki += idx(dsts(k)); kw += ws(k) }
-            k += 1
-          }
-          outIdx(si) = ki.result()
-          outW(si) = kw.result()
-        }
-      }
-      val d = params.damping
-      var rank = Array.fill(nV)(1.0 / nV)
-      var sinkMass = { var s = 0.0; var j = 0
-        while (j < nV) { if (isSink(j)) s += rank(j); j += 1 }; s }
-      var iter = 0
-      var delta = Double.MaxValue
-      while (iter < params.maxIter && delta >= params.tol) {
-        val contrib = new Array[Double](nV)
-        var u = 0
-        while (u < nV) {
-          val oi = outIdx(u)
-          if (oi != null) {
-            val ow = outW(u); val r = rank(u); var k = 0
-            while (k < oi.length) { contrib(oi(k)) += ow(k) * r; k += 1 }
-          }
-          u += 1
-        }
-        val next = new Array[Double](nV)
-        var dl = 0.0; var sm = 0.0
-        var v = 0
-        while (v < nV) {
-          val nr = (1 - d) * pers(v) + d * (contrib(v) + sinkMass / nV)
-          next(v) = nr
-          dl += math.abs(nr - rank(v))
-          if (isSink(v)) sm += nr
-          v += 1
-        }
-        rank = next; delta = dl; sinkMass = sm; iter += 1
-      }
-      Iterator.range(0, nV).map(j => (ids(j), rank(j)))
+      val (ids, rank) = solveLocal(persMap, persTotal, adjRaw, params)
+      Iterator.range(0, ids.length).map(j => (ids(j), rank(j)))
     }.toDF("id", "rank")
+  }
+
+  /** The in-task power iteration shared by [[runLocal]] and
+    * [[graft.rec.Engine]]'s serving kernel: the one copy of the sink /
+    * teleport / L1 math below the distributed loop.
+    *
+    * Vertices are indexed in ascending id order, and `contrib(v)` sums
+    * its in-edges in that index order, so neither the order rows arrive
+    * in nor the order of `adjRaw` can change a rank (each source lists a
+    * destination at most once).
+    *
+    * @param persMap   raw personalization weight per vertex id
+    * @param persTotal Σ raw weights over the vertex rows; 0 → uniform
+    * @param adjRaw    per-source (dsts, weights)
+    * @return the vertex ids ascending and the rank of each */
+  private[graft] def solveLocal(persMap: scala.collection.Map[Long, Double],
+      persTotal: Double, adjRaw: Iterable[(Long, Adj)],
+      params: Params): (Array[Long], Array[Double]) = {
+    val ids = persMap.keysIterator.toArray
+    java.util.Arrays.sort(ids) // deterministic index order
+    val idx = scala.collection.mutable.LongMap.empty[Int]
+    var i = 0
+    while (i < ids.length) { idx(ids(i)) = i; i += 1 }
+    val nV = ids.length
+    val pers = new Array[Double](nV)
+    i = 0
+    while (i < nV) {
+      val p = persMap(ids(i))
+      pers(i) = if (persTotal > 0) p / persTotal else 1.0 / nV
+      i += 1
+    }
+    // adjacency in index space; srcs/dsts outside the vertex set drop,
+    // exactly as the distributed state joins drop them
+    val isSink = Array.fill(nV)(true)
+    val outIdx = new Array[Array[Int]](nV)
+    val outW = new Array[Array[Double]](nV)
+    adjRaw.foreach { case (src, (dsts, ws)) =>
+      idx.get(src).foreach { si =>
+        isSink(si) = false
+        val ki = Array.newBuilder[Int]
+        val kw = Array.newBuilder[Double]
+        var k = 0
+        while (k < dsts.length) {
+          if (idx.contains(dsts(k))) { ki += idx(dsts(k)); kw += ws(k) }
+          k += 1
+        }
+        outIdx(si) = ki.result()
+        outW(si) = kw.result()
+      }
+    }
+    val d = params.damping
+    var rank = Array.fill(nV)(1.0 / nV)
+    var sinkMass = { var s = 0.0; var j = 0
+      while (j < nV) { if (isSink(j)) s += rank(j); j += 1 }; s }
+    var iter = 0
+    var delta = Double.MaxValue
+    while (iter < params.maxIter && delta >= params.tol) {
+      val contrib = new Array[Double](nV)
+      var u = 0
+      while (u < nV) {
+        val oi = outIdx(u)
+        if (oi != null) {
+          val ow = outW(u); val r = rank(u); var k = 0
+          while (k < oi.length) { contrib(oi(k)) += ow(k) * r; k += 1 }
+        }
+        u += 1
+      }
+      val next = new Array[Double](nV)
+      var dl = 0.0; var sm = 0.0
+      var v = 0
+      while (v < nV) {
+        val nr = (1 - d) * pers(v) + d * (contrib(v) + sinkMass / nV)
+        next(v) = nr
+        dl += math.abs(nr - rank(v))
+        if (isSink(v)) sm += nr
+        v += 1
+      }
+      rank = next; delta = dl; sinkMass = sm; iter += 1
+    }
+    (ids, rank)
   }
 
   def run(spark: SparkSession, vertices: DataFrame, edges: DataFrame,
@@ -253,14 +273,16 @@ object PageRank {
     val vRaw = vertices
       .select(col("id").cast("long"), col("pers").cast("double"))
       .as[(Long, Double)].rdd.cache()
-    val n = vRaw.count()
+    // |V| and Σpers in one action
+    val (n, persTotal) = vRaw.aggregate((0L, 0.0))(
+      (acc, v) => (acc._1 + 1, acc._2 + v._2),
+      (a, b) => (a._1 + b._1, a._2 + b._2))
     if (n == 0) { // empty graph → empty ranks (nothing to rank); a
       // require here would make every composed pipeline (rec blends,
       // declared queries) blow up on a legitimately empty partition/dir
       vRaw.unpersist(blocking = false)
       return spark.range(0).selectExpr("id", "CAST(0.0 AS DOUBLE) AS rank")
     }
-    val persTotal = vRaw.map(_._2).sum()
 
     val (eBySrc, part, m) = groupedAdjacency(spark, edges, n)
     if (n + m <= params.localThreshold)

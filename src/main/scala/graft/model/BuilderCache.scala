@@ -143,7 +143,10 @@ object BuilderCache {
     *
     * Concurrency contract: requests are assumed SERIALIZED (the serving
     * loop answers one request at a time — ServeSpec's zero-cache-growth
-    * property is stated under exactly that assumption). Two concurrent
+    * property is stated under exactly that assumption). Only the
+    * above-threshold DataFrame path of [[graft.rec.Engine]] caches per
+    * request; below `Engine.ServeLocalRows` rows a request is
+    * answered by the one-task kernel, which caches nothing. Two concurrent
     * IDENTICAL requests would share one live entry here, and the first
     * finisher's blocking unpersist drops it under the other — still
     * CORRECT (Spark recomputes the dropped partitions from lineage), but

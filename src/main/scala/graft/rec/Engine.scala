@@ -1,6 +1,10 @@
 package graft.rec
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.collection.mutable
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -93,23 +97,36 @@ object Engine {
       topN: Int = 3): DataFrame =
     recommendInternal(spark, gRaw, customerId, topN)._1
 
-  /** Serving path ([[graft.serve.HttpApi]]): materializes the top-N and
-    * releases the PER-REQUEST caches (this customer's seed set and
-    * candidate table). A long-lived server answering many customers would
-    * otherwise accumulate one cache entry per request; the session-level
-    * builder caches (incidence, cooc, jaccard pairs, PageRank adjacency)
-    * are shared across customers and stay. */
+  /** Serving path ([[graft.serve.HttpApi]]): the rows of [[recommend]].
+    * A graph within [[ServeLocalRows]] rows is answered by the one-task
+    * [[serveLocal]] kernel; a larger one by the DataFrame path, which
+    * materializes the top-N and then releases its PER-REQUEST caches
+    * (this customer's seed set and candidate table). A long-lived server
+    * answering many customers would otherwise accumulate one cache entry
+    * per request; the session-level builder caches (incidence, cooc,
+    * jaccard pairs, PageRank adjacency) are shared across customers and
+    * stay. */
   def recommendRows(spark: SparkSession, gRaw: ProductGraph,
-      customerId: Long, topN: Int = 3)
-      : Array[org.apache.spark.sql.Row] = {
-    val (df, perRequest) = recommendInternal(spark, gRaw, customerId, topN)
-    val rows = df.collect()
-    // blocking: the release must be visible before the response returns
-    // (ServeSpec asserts zero steady-state cache growth); these are
-    // request-sized frames, the synchronous unpersist is microseconds
-    perRequest.foreach(_.unpersist(blocking = true))
-    rows
-  }
+      customerId: Long, topN: Int = 3): Array[Row] =
+    recommendRowsWithin(spark, gRaw, customerId, topN, ServeLocalRows)
+
+  /** [[recommendRows]] with the kernel's row limit as a parameter; limit
+    * 0 sends every request down the DataFrame path. */
+  private[graft] def recommendRowsWithin(spark: SparkSession,
+      gRaw: ProductGraph, customerId: Long, topN: Int,
+      limit: Long): Array[Row] =
+    serveLocal(spark, gRaw, customerId, Some(RecsApi.clampTopN(topN)), limit)
+      .getOrElse {
+        val (df, perRequest) =
+          recommendInternal(spark, gRaw, customerId, topN)
+        val rows = df.collect()
+        // blocking: the release must be visible before the response
+        // returns (ServeSpec asserts zero steady-state cache growth);
+        // these are request-sized frames, the synchronous unpersist is
+        // microseconds
+        perRequest.foreach(_.unpersist(blocking = true))
+        rows
+      }
 
   private def recommendInternal(spark: SparkSession, gRaw: ProductGraph,
       customerId: Long, topN: Int): (DataFrame, Seq[DataFrame]) = {
@@ -219,14 +236,21 @@ object Engine {
     breakdownInternal(spark, g, customerId)._1
 
   /** Serving path twin of [[recommendRows]] for the breakdown endpoint:
-    * collect, then release the per-request seed cache. */
+    * the [[serveLocal]] kernel, else collect the DataFrame path and
+    * release its per-request seed cache. */
   def breakdownRows(spark: SparkSession, g: ProductGraph,
-      customerId: Long): Array[org.apache.spark.sql.Row] = {
-    val (df, perRequest) = breakdownInternal(spark, g, customerId)
-    val rows = df.collect()
-    perRequest.foreach(_.unpersist(blocking = true))
-    rows
-  }
+      customerId: Long): Array[Row] =
+    breakdownRowsWithin(spark, g, customerId, ServeLocalRows)
+
+  /** [[breakdownRows]] with the kernel's row limit as a parameter. */
+  private[graft] def breakdownRowsWithin(spark: SparkSession,
+      g: ProductGraph, customerId: Long, limit: Long): Array[Row] =
+    serveLocal(spark, g, customerId, None, limit).getOrElse {
+      val (df, perRequest) = breakdownInternal(spark, g, customerId)
+      val rows = df.collect()
+      perRequest.foreach(_.unpersist(blocking = true))
+      rows
+    }
 
   private def breakdownInternal(spark: SparkSession, g: ProductGraph,
       customerId: Long): (DataFrame, Seq[DataFrame]) = {
@@ -273,5 +297,228 @@ object Engine {
     (cScore.unionAll(jScore).unionAll(pScore)
       .orderBy(asc("strategy"), desc("score"), asc("product_id")),
       Seq(seeds))
+  }
+
+  /** Rows the one-task serving kernel may read per request: the
+    * customer's row and basket, `engine.cooc`, the Jaccard pairs and
+    * the product ids. Past it a request takes the DataFrame path.
+    *
+    * Measured per warm request on `local[2]`, kernel against DataFrame
+    * path, with the JVM's allocation during a kernel request
+    * (recommendations; breakdowns alike):
+    *   - sf0.001, 38 k rows: 0.36 s against 1.3 s, 58 MB allocated;
+    *   - sf0.01, 1.2 M rows: 0.66 s against 1.35 s, 190 MB allocated;
+    *   - sf0.1, 15 M rows: 3.1 s against 2.5 s, 1.7 GB allocated.
+    * The kernel also reruns the seeded PageRank on every request, where
+    * the DataFrame path reuses its per-customer memo. The bound is held
+    * just above the largest graph a benchmark workload serves (sf0.001)
+    * until a workload measures the kernel on a larger one. */
+  private[graft] final val ServeLocalRows = 1L << 16
+
+  // row tags of the serving kernel's one-task input
+  private final val TagKnown = 0
+  private final val TagSeed = 1
+  private final val TagEdge = 2
+  private final val TagPair = 3
+  private final val TagProduct = 4
+
+  /** Rows of a frame the registry has cached and materialized, from the
+    * cache's own statistics (Spark counts them while it builds the
+    * cached batches), so no job runs; `None` for any other frame. */
+  private def cachedRows(df: DataFrame): Option[BigInt] =
+    df.alias("cached").queryExecution.optimizedPlan match {
+      case r: InMemoryRelation
+          if r.cacheBuilder.isCachedColumnBuffersLoaded =>
+        r.computeStats().rowCount
+      case _ => None
+    }
+
+  /** The one-task serving kernel: everything [[recommend]] (`topN` =
+    * `Some(n)`, n already clamped) or [[strategyBreakdown]] (`None`)
+    * computes, in ONE `coalesce(1).mapPartitions` job. The task reads
+    * the customer's row and incidence rows, `engine.cooc`, the
+    * [[Recommend.jaccardPairsFrom]] memo and the product ids, and
+    * computes the existence check (P5), the seedless fallback (G2), the
+    * co-occurrence and Jaccard sums, and the seeded PageRank through
+    * [[PageRank.solveLocal]], with transition weights cnt / Σcnt per src
+    * taken from the same cooc rows. A warm request is one job and
+    * caches nothing; the DataFrame path runs 14–23 jobs and caches, then
+    * releases, its seeds and candidates.
+    *
+    * This is [[PageRank.run]]'s size-based choice made for the whole
+    * request, and it is made before any job: when the cooc and Jaccard
+    * pair counts the cache already holds sum past `limit`, or either
+    * count is unknown, the answer is `None` and the caller takes the
+    * DataFrame path. The task itself also stops once it has read more
+    * than `limit` rows in all, which only the product ids and the basket
+    * can still cause. Below the limit the answers are the DataFrame
+    * path's, Double for Double (EngineSpec compares every customer).
+    *
+    * @throws IllegalArgumentException for an unknown customer (P5) */
+  private[graft] def serveLocal(spark: SparkSession, g: ProductGraph,
+      customerId: Long, topN: Option[Int],
+      limit: Long = ServeLocalRows): Option[Array[Row]] = {
+    val incidence =
+      BuilderCache.ensureCached(spark, "engine.incidence", g.incidence)
+    val cooc = BuilderCache.ensureCached(spark, "engine.cooc", g.cooc)
+    val pairs = Recommend.jaccardPairsFrom(incidence)
+    val edges = Seq(cooc, pairs).map(cachedRows)
+    if (edges.exists(_.isEmpty) || edges.flatten.sum > limit) return None
+    def tagged(tag: Int, df: DataFrame, a: Column, b: Column = lit(0L),
+        c: Column = lit(0L), w: Column = lit(0.0)): DataFrame =
+      df.select(lit(tag), a.cast("long"), b.cast("long"), c.cast("long"),
+        w.cast("double"))
+    val input = Seq(
+      tagged(TagKnown, g.customers.filter(col("customer_id") === customerId),
+        col("customer_id")),
+      tagged(TagSeed, incidence.filter(col("customer_id") === customerId),
+        col("product_id")),
+      tagged(TagEdge, cooc, col("src"), col("dst"), col("cnt")),
+      tagged(TagPair, pairs, col("p1"), col("p2"), w = col("jaccard")),
+      tagged(TagProduct, g.products, col("id"))).reduce(_ unionAll _)
+    val out = input.coalesce(1).queryExecution.toRdd
+      .mapPartitions(it => Iterator.single(kernel(it, limit, topN)))
+      .collect()
+      // an input Catalyst proves empty is planned as zero partitions
+      .headOption.getOrElse(kernel(Iterator.empty, limit, topN))
+    out.map { case (known, rows) =>
+      require(known, s"unknown customer id: $customerId")
+      rows
+    }
+  }
+
+  /** The task body of [[serveLocal]]: `None` past `limit` rows read,
+    * else whether the customer exists and the answer rows. Cooc rows
+    * are grouped by src as they arrive, so the edges are held once. */
+  private def kernel(it: Iterator[InternalRow], limit: Long,
+      topN: Option[Int]): Option[(Boolean, Array[Row])] = {
+    var read = 0L
+    var known = false
+    val seeds = mutable.LongMap.empty[Unit]
+    val products = new mutable.ArrayBuilder.ofLong
+    val out = mutable.LongMap.empty[OutEdges]
+    val p1, p2 = new mutable.ArrayBuilder.ofLong
+    val jac = new mutable.ArrayBuilder.ofDouble
+    while (read <= limit && it.hasNext) {
+      val r = it.next()
+      read += 1
+      r.getInt(0) match {
+        case TagKnown => known = true
+        case TagSeed => seeds(r.getLong(1)) = ()
+        case TagEdge =>
+          val (d, c) = out.getOrElseUpdate(r.getLong(1),
+            (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofLong))
+          d += r.getLong(2); c += r.getLong(3)
+        case TagPair =>
+          p1 += r.getLong(1); p2 += r.getLong(2); jac += r.getDouble(4)
+        case _ => products += r.getLong(1)
+      }
+    }
+    if (read > limit) None
+    else if (!known) Some((false, Array.empty[Row]))
+    else Some((true, answer(seeds, products.result(), out, p1.result(),
+      p2.result(), jac.result(), topN)))
+  }
+
+  /** One src's cooc out-edges as read: (dst, cnt) builders. */
+  private type OutEdges =
+    (mutable.ArrayBuilder.ofLong, mutable.ArrayBuilder.ofLong)
+
+  /** `round(x, 6)` as Spark evaluates it: HALF_UP on the decimal
+    * rendering of the double. */
+  private def round6(x: Double): Double =
+    BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+
+  /** (-score, product_id) order, the top-N and breakdown tie-break. */
+  private def byScore(idA: Long, a: Double, idB: Long, b: Double): Boolean =
+    a > b || (a == b && idA < idB)
+
+  /** The answer of [[serveLocal]] from its inputs: the arithmetic and
+    * order of [[recommendInternal]] / [[globalFallback]] /
+    * [[breakdownInternal]] over arrays. Empties `out`. */
+  private def answer(seeds: mutable.LongMap[Unit], products: Array[Long],
+      out: mutable.LongMap[OutEdges], p1: Array[Long], p2: Array[Long],
+      jac: Array[Double], topN: Option[Int]): Array[Row] = {
+    // the row-normalized adjacency of [[adjacency]]: cnt / Σcnt per src,
+    // each src's builders dropped as its weights are made; the seeds'
+    // out-edges also give the co-occurrence sums
+    val sCooc = mutable.LongMap.empty[Long]
+    val adj = mutable.LongMap.empty[PageRank.Adj]
+    out.keys.toArray.foreach { s =>
+      val (d, c) = out.remove(s).get
+      val ds = d.result(); val cs = c.result()
+      if (seeds.contains(s)) {
+        var k = 0
+        while (k < ds.length) {
+          sCooc(ds(k)) = sCooc.getOrElse(ds(k), 0L) + cs(k); k += 1
+        }
+      }
+      val total = cs.sum
+      adj(s) = (ds, cs.map(_.toDouble / total))
+    }
+    def ranks(pers: Long => Double): mutable.LongMap[Double] = {
+      val pm = mutable.LongMap.empty[Double]
+      var total = 0.0
+      products.foreach { id => val p = pers(id); pm(id) = p; total += p }
+      val (ids, rank) = PageRank.solveLocal(pm, total, adj, PageRank.Params())
+      mutable.LongMap.from(ids.iterator.zip(rank.iterator))
+    }
+    def sorted(scores: Iterable[(Long, Double)]): Array[(Long, Double)] =
+      scores.toArray.sortWith((a, b) => byScore(a._1, a._2, b._1, b._2))
+
+    if (seeds.isEmpty) { // G2
+      val global = sorted(ranks(_ => 1.0).map { case (id, r) =>
+        (id, round6(r)) })
+      return topN match {
+        case Some(n) => global.take(n).map { case (id, s) =>
+          Row(id, s, 0.0, 0.0, 0.0, s) }
+        case None => global.map { case (id, s) =>
+          Row("global_pagerank", id, s) }
+      }
+    }
+    val sJacc = mutable.LongMap.empty[Double]
+    var i = 0
+    while (i < p1.length) {
+      if (seeds.contains(p1(i)))
+        sJacc(p2(i)) = sJacc.getOrElse(p2(i), 0.0) + jac(i)
+      if (seeds.contains(p2(i)))
+        sJacc(p1(i)) = sJacc.getOrElse(p1(i), 0.0) + jac(i)
+      i += 1
+    }
+    val sPpr = ranks(id => if (seeds.contains(id)) 1.0 else 0.0)
+    topN match {
+      case None =>
+        def strategy(name: String, scores: Iterable[(Long, Double)]) =
+          sorted(scores.filterNot(e => seeds.contains(e._1))
+            .map { case (id, s) => (id, round6(s)) })
+            .map { case (id, s) => Row(name, id, s) }
+        strategy("co_occurrence", sCooc.map { case (id, c) =>
+          (id, c.toDouble) }) ++
+          strategy("personalized_pagerank", sPpr) ++
+          strategy("similarity", sJacc)
+      case Some(n) =>
+        val cand = (sCooc.keySet ++ sJacc.keySet ++ sPpr.keySet)
+          .filterNot(seeds.contains).toArray
+        // cooc/jaccard maxes over the candidates; PPR's over its full
+        // rank vector, seeds included (see recommendInternal)
+        val maxCooc = cand.iterator.map(sCooc.getOrElse(_, 0L))
+          .foldLeft(0L)(math.max)
+        val maxJacc = cand.iterator.map(sJacc.getOrElse(_, 0.0))
+          .foldLeft(0.0)(math.max)
+        val maxPpr = sPpr.valuesIterator.foldLeft(0.0)(math.max)
+        val scored = cand.flatMap { id =>
+          val nc = if (maxCooc > 0)
+            sCooc.getOrElse(id, 0L).toDouble / maxCooc else 0.0
+          val nj = if (maxJacc > 0) sJacc.getOrElse(id, 0.0) / maxJacc else 0.0
+          val np = if (maxPpr > 0) sPpr.getOrElse(id, 0.0) / maxPpr else 0.0
+          val blend = BlendCooc * nc + BlendSim * nj + BlendPpr * np
+          if (blend > 0) Some((id, round6(blend), nc, nj, np)) else None
+        }
+        scored.sortWith((a, b) => byScore(a._1, a._2, b._1, b._2))
+          .take(n).map { case (id, s, nc, nj, np) =>
+            Row(id, s, round6(BlendCooc * nc), round6(BlendSim * nj),
+              round6(BlendPpr * np), 0.0)
+          }
+    }
   }
 }

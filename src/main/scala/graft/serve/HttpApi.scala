@@ -33,12 +33,16 @@ import graft.rec.{Engine, RecsApi}
   * SINGLE-FLIGHT BY CONSTRUCTION — `setExecutor(null)` pins every
   * exchange to the server's dispatcher thread, the same one-worker
   * model as the reference's `uvicorn main:app` deployment
-  * (`tp2/app/main.py`). This is a deliberate pairing with
-  * [[graft.model.BuilderCache.cacheOnce]]'s documented contract: the
-  * per-request seed/candidate frames are cached then blockingly
-  * unpersisted per request, and two IN-FLIGHT identical requests would
-  * share one live cache entry whose first release drops it under the
-  * other (correct via lineage recompute, but silently uncached).
+  * (`tp2/app/main.py`). A blended request over a graph within
+  * `Engine.ServeLocalRows` rows is one Spark job that
+  * caches nothing ([[graft.rec.Engine.serveLocal]]), so it shares no
+  * per-request state. The above-threshold DataFrame path is the
+  * deliberate pairing with [[graft.model.BuilderCache.cacheOnce]]'s
+  * documented contract: its per-request seed/candidate frames are
+  * cached then blockingly unpersisted per request, and two IN-FLIGHT
+  * identical requests would share one live cache entry whose first
+  * release drops it under the other (correct via lineage recompute,
+  * but silently uncached).
   * Serialization makes the zero-steady-state-growth property exact —
   * ServeSpec fires parallel CLIENTS and asserts per-customer responses
   * stay byte-identical to their serial baselines with zero cache
@@ -47,9 +51,15 @@ import graft.rec.{Engine, RecsApi}
   * session), not a per-JVM thread-pool concern: Spark job throughput
   * on one session is scheduler-bound long before handler threading
   * matters at top-10-result sizes. */
-final class HttpApi(spark: SparkSession, dir: String, port: Int = 0,
-    graph: Option[Engine.ProductGraph] = None) {
+final class HttpApi private[graft] (spark: SparkSession, dir: String,
+    port: Int, graph: Option[Engine.ProductGraph], localRows: Long) {
   import HttpApi.{detail, jStr}
+
+  // `localRows` is the serving kernel's row limit; only tests pass one
+  // (0 sends every blended request down the DataFrame path)
+  def this(spark: SparkSession, dir: String, port: Int = 0,
+      graph: Option[Engine.ProductGraph] = None) =
+    this(spark, dir, port, graph, Engine.ServeLocalRows)
 
   // injectable graph: the reference's incidence includes event→product
   // edges the testdata schema cannot carry, so golden-fixture parity
@@ -139,14 +149,16 @@ final class HttpApi(spark: SparkSession, dir: String, port: Int = 0,
 
   server.createContext("/customers", handler { ex =>
     val path = ex.getRequestURI.getPath.split("/").filter(_.nonEmpty)
-    // /customers/{id}/recommendations | /customers/{id}/strategies
-    (path.lift(1).flatMap(_.toLongOption), path.lift(2)) match {
+    // exactly /customers/{id}/recommendations | /customers/{id}/strategies
+    (if (path.length == 3) (path(1).toLongOption, Some(path(2)))
+     else (None, None)) match {
       case (Some(id), Some("recommendations")) =>
         val topN = params(ex).get("top_n").flatMap(_.toIntOption).getOrElse(3)
         try {
           // recommendRows releases the per-request caches after collect —
           // a long-lived server must not accumulate one entry per request
-          val items = Engine.recommendRows(spark, g, id, topN).map { r =>
+          val items = Engine.recommendRowsWithin(spark, g, id, topN,
+              localRows).map { r =>
             s"""{"product_id":${r.getLong(0)},"score":${r.getDouble(1)},""" +
               s""""contributions":{"co_occurrence":${r.getDouble(2)},""" +
               s""""similarity":${r.getDouble(3)},""" +
@@ -161,7 +173,7 @@ final class HttpApi(spark: SparkSession, dir: String, port: Int = 0,
         val topN = RecsApi.clampTopN(
           params(ex).get("top_n").flatMap(_.toIntOption).getOrElse(3))
         try {
-          val by = Engine.breakdownRows(spark, g, id)
+          val by = Engine.breakdownRowsWithin(spark, g, id, localRows)
             .groupBy(_.getString(0))
           // the reference's breakdown dict always carries every strategy
           // key, empty lists included (recommendation.py:70-89); seedless

@@ -72,6 +72,36 @@ class EngineSpec extends SparkSpec {
     assert(got.forall(r => r._6 == r._2)) // contribution labeled global
   }
 
+  test("serving rows equal the DataFrame answers for every customer") {
+    // the one-task kernel behind recommendRows/breakdownRows against the
+    // DataFrame path, exact Double equality; an unknown id must fail
+    // alike on both
+    def answer(rows: => Array[org.apache.spark.sql.Row])
+        : Either[String, Seq[org.apache.spark.sql.Row]] =
+      try Right(rows.toSeq)
+      catch { case e: IllegalArgumentException => Left(e.getMessage) }
+    def check(g: Engine.ProductGraph, cid: Long): Unit = {
+      val rec = answer(Engine.recommendRows(spark, g, cid, 10))
+      assert(rec == answer(Engine.recommend(spark, g, cid, 10).collect()),
+        s"recommend $cid")
+      val by = answer(Engine.breakdownRows(spark, g, cid))
+      assert(by == answer(Engine.strategyBreakdown(spark, g, cid).collect()),
+        s"breakdown $cid")
+    }
+    def customers(g: Engine.ProductGraph): Seq[Long] =
+      g.customers.as[Long].collect().toSeq.sorted
+    Seq(Fixtures.write(spark), "/root/testdata/sf0.001").foreach { dir =>
+      val g = Engine.fromOrders(spark, dir)
+      customers(g).foreach(check(g, _))
+      check(g, customers(g).last + 1) // P5
+    }
+    Seq(1L, 2L, 3L, 99L).foreach(check(toy, _)) // C1-C3, P5
+    check(toy.copy(customers = Seq(1L, 2L, 3L, 4L).toDF("customer_id")), 4L)
+    // unknown ids fail with the DataFrame path's message
+    assert(answer(Engine.recommendRows(spark, toy, 99L)) ==
+      Left("requirement failed: unknown customer id: 99"))
+  }
+
   test("/recs dispatch: unknown strategy rejected; similarity falls back") {
     val dir = "/root/testdata/sf0.001"
     intercept[IllegalArgumentException] {

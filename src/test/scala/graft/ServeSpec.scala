@@ -3,8 +3,12 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.BeforeAndAfterAll
 
+import graft.model.BuilderCache
+import graft.operators.Recommend
+import graft.rec.Engine
 import graft.serve.HttpApi
 
 /** In-process HTTP front-door tests on the toy fixture (the reference's
@@ -13,13 +17,18 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
 
   private lazy val api = new HttpApi(spark, Fixtures.write(spark))
   private lazy val port = api.start()
+  // a twin whose serving kernel row limit is 0: every blended request
+  // takes the DataFrame path, with its per-request caches and releases
+  private lazy val dfApi =
+    new HttpApi(spark, Fixtures.write(spark), 0, None, 0L)
+  private lazy val dfPort = dfApi.start()
   private lazy val client = HttpClient.newHttpClient()
 
-  override def afterAll(): Unit = api.stop()
+  override def afterAll(): Unit = { api.stop(); dfApi.stop() }
 
-  private def get(path: String): (Int, String) = {
+  private def get(path: String, at: Int = port): (Int, String) = {
     val req = HttpRequest
-      .newBuilder(URI.create(s"http://127.0.0.1:$port$path")).GET().build()
+      .newBuilder(URI.create(s"http://127.0.0.1:$at$path")).GET().build()
     val resp = client.send(req, HttpResponse.BodyHandlers.ofString())
     (resp.statusCode(), resp.body())
   }
@@ -73,6 +82,63 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
     assert(body.contains("\"personalized_pagerank\":"), body)
   }
 
+  test("a /customers path with segments past the route is 404") {
+    Seq("/customers/1/recommendations/junk", "/customers/1/strategies/x/y",
+      "/customers/1").foreach { path =>
+      val (code, body) = get(path)
+      assert(code == 404 && body == """{"detail":"Not found"}""", path)
+    }
+  }
+
+  /** Spark jobs started while `body` runs, the listener bus drained as
+    * `tools/Profile` drains it. */
+  private def jobsDuring(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      // listenerBus is private[spark] in Scala, public in bytecode
+      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
+      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
+    } finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+
+  test("a warm blended request is one Spark job") {
+    Seq("/customers/1/recommendations?top_n=3",
+        "/customers/1/strategies?top_n=3").foreach { path =>
+      get(path) // builders' first touch
+      val jobs = jobsDuring(assert(get(path)._1 == 200, path))
+      assert(jobs == 1, s"$path started $jobs jobs")
+    }
+  }
+
+  test("past its row limit the serving kernel yields to the DataFrame path") {
+    val g = Engine.fromOrders(spark, Fixtures.write(spark))
+    Engine.recommendRows(spark, g, 1L) // builders' first touch
+    val edges = g.cooc.count() + Recommend.jaccardPairsFrom(
+      BuilderCache.ensureCached(spark, "engine.incidence", g.incidence))
+      .count()
+    // the cached edge counts alone exceed the limit: decided before any job
+    assert(jobsDuring {
+      assert(Engine.serveLocal(spark, g, 1L, Some(3), edges - 1).isEmpty)
+      assert(Engine.serveLocal(spark, g, 1L, None, edges - 1).isEmpty)
+    } == 0)
+    // the edges fit but the product ids do not: the task stops reading
+    assert(Engine.serveLocal(spark, g, 1L, Some(3), edges).isEmpty)
+    assert(Engine.serveLocal(spark, g, 1L, None, edges).isEmpty)
+    // limit 0 answers through the DataFrame path, with the kernel's rows
+    assert(Engine.recommendRowsWithin(spark, g, 1L, 3, 0L).toSeq ==
+      Engine.recommendRows(spark, g, 1L).toSeq)
+    assert(Engine.breakdownRowsWithin(spark, g, 1L, 0L).toSeq ==
+      Engine.breakdownRows(spark, g, 1L).toSeq)
+  }
+
   test("GET /customers/{id}/recommendations for an unknown customer is 404") {
     val (code, body) = get("/customers/9999/recommendations")
     assert(code == 404 && body.contains("unknown customer"), body)
@@ -106,20 +172,33 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
     assert(code2 == 200, body2)
   }
 
-  test("per-request caches are released after serving (no cache leak)") {
+  private def assertNoLeak(at: Int): Unit = {
     // request 1 may materialize session builders (incidence, cooc,
     // jaccard pairs, the memoized PPR ranks) — one-time by design; the
     // leak property is STEADY STATE: repeated identical requests must
     // add zero cache entries (per-request seeds/candidates released,
     // memoized builders hit, nothing re-marked)
-    get("/customers/1/recommendations?top_n=3") // warm-up
-    val before = spark.sparkContext.getPersistentRDDs.size
-    (1 to 3).foreach(_ => get("/customers/1/recommendations?top_n=3"))
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after == before, s"cache entries grew $before -> $after")
+    Seq("/customers/1/recommendations?top_n=3",
+        "/customers/1/strategies?top_n=3").foreach { path =>
+      get(path, at) // warm-up
+      val before = spark.sparkContext.getPersistentRDDs.size
+      (1 to 3).foreach(_ => get(path, at))
+      val after = spark.sparkContext.getPersistentRDDs.size
+      assert(after == before, s"$path: cache entries grew $before -> $after")
+    }
   }
 
-  test("N parallel requests: correct per-customer results, bounded cache") {
+  test("per-request caches are released after serving (no cache leak)") {
+    assertNoLeak(port)
+  }
+
+  // at limit 0 the identical requests reuse the live per-request entry,
+  // so a missing release shows in the parallel case below, not here
+  test("past the kernel's row limit repeated requests add no cache entries") {
+    assertNoLeak(dfPort)
+  }
+
+  private def assertParallelBurst(at: Int): Unit = {
     // the round-12 verdict's serving-concurrency check: the server is
     // single-flight by construction (HttpApi scaladoc — dispatcher-thread
     // executor paired with cacheOnce's serialized-requests contract), so
@@ -133,7 +212,7 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
       "/customers/2/recommendations?top_n=3",
       "/customers/1/strategies?top_n=2",
       "/recs?strategy=similarity&customer_id=1&limit=5")
-    val baseline = paths.map(p => p -> get(p)).toMap // serial, warms memos
+    val baseline = paths.map(p => p -> get(p, at)).toMap // serial, warms memos
     val before = spark.sparkContext.getPersistentRDDs.size
     val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
     implicit val ec: scala.concurrent.ExecutionContext =
@@ -141,7 +220,7 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
     val burst = scala.concurrent.Future.sequence(
       (1 to 24).map { i =>
         val p = paths(i % paths.length)
-        scala.concurrent.Future((p, get(p)))
+        scala.concurrent.Future((p, get(p, at)))
       })
     val results = scala.concurrent.Await.result(
       burst, scala.concurrent.duration.Duration(120, "s"))
@@ -153,6 +232,14 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
     }
     val after = spark.sparkContext.getPersistentRDDs.size
     assert(after == before, s"cache entries grew $before -> $after")
+  }
+
+  test("N parallel requests: correct per-customer results, bounded cache") {
+    assertParallelBurst(port)
+  }
+
+  test("past the kernel's row limit N parallel requests stay correct too") {
+    assertParallelBurst(dfPort)
   }
 
   test("GET /customers/{id}/strategies returns the per-strategy breakdown") {
