@@ -47,13 +47,16 @@ object BuilderCache {
     * only — the frames built inside re-derive shared work per call. */
   def uncached[T](body: => T): T = bypass.withValue(true)(body)
 
-  /** True inside an [[uncached]] block. Operators that would otherwise
-    * truncate their logical plan at build time (an eager
-    * `localCheckpoint` replaces the subtree with a `LogicalRDD` leaf —
-    * the same detector-blinding as a cached builder, with no cache to
-    * evict) consult this to keep the full plan visible to the
-    * PlanSpec sweeps. */
-  private[graft] def inspecting: Boolean = bypass.value
+  /** Cut `df`'s lineage: an eager `localCheckpoint`, so the frame is
+    * computed once here and later plans read it from a `LogicalRDD`
+    * leaf. The operators' driver loops and multiply-referenced
+    * intermediates cut through this one function. Inside [[uncached]]
+    * it returns `df` unchanged: the leaf would hide the subtree from
+    * plan detectors exactly as a cached builder's `InMemoryRelation`
+    * does, and the eager checkpoint would run the work at build time,
+    * so the PlanSpec sweeps see the full plan instead. */
+  def checkpoint(df: DataFrame): DataFrame =
+    if (bypass.value) df else df.localCheckpoint()
 
   /** (sessionKey, builderKey) → the shared cached DataFrame. */
   private val entries = TrieMap.empty[(String, String), DataFrame]

@@ -227,13 +227,9 @@ object Distill {
     // both consume the same 2-long-per-doc projection, and without a
     // materialization point each would re-scan and re-featurize the
     // whole corpus (r14 advice — at 100 TB the second scan is real
-    // money). An eager localCheckpoint pins the ~16-bytes/doc
-    // projection (the reach_hops/bpeMerges pattern); under plan
-    // inspection it is skipped so PlanSpec sweeps see the full tree.
-    val cut: DataFrame => DataFrame =
-      if (graft.model.BuilderCache.inspecting) identity
-      else _.localCheckpoint()
-    val feats = cut(featuredOf(spark, dir)
+    // money). A lineage cut pins the ~16-bytes/doc projection: see
+    // BuilderCache.checkpoint.
+    val feats = graft.model.BuilderCache.checkpoint(featuredOf(spark, dir)
       .select(col("doc_id"), col("q_teacher")))
     val ranked = feats
       .repartitionByRange(desc("q_teacher"), asc("doc_id"))

@@ -3,6 +3,8 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.model.BuilderCache
+
 /** Structural graph metrics over the derived co-purchase graph — the
   * extension tier's graph-analytics widening beyond the reference's
   * PageRank family (SURVEY §2.9: the reference's only graph computation
@@ -60,7 +62,7 @@ object GraphMetrics {
     * the bench gates this chain's cost on the first query to touch it
     * (sorted order: `graph_stats`). */
   private def triangleFrame(spark: SparkSession, dir: String): DataFrame =
-    graft.model.BuilderCache.memo(spark, s"triangleCounts:$dir") {
+    BuilderCache.memo(spark, s"triangleCounts:$dir") {
       triangleCountsOf(Relational.coocCounts(spark, dir))
     }
 
@@ -147,21 +149,14 @@ object GraphMetrics {
     * relation — the fixture-testable form. */
   private[graft] def reachHopsOf(cc: DataFrame, nSeeds: Int = 5,
       maxHops: Int = 3): DataFrame = {
-    // Each level is materialized once via an eager localCheckpoint
-    // (the PageRank-loop pattern): level h's frame is referenced three
-    // times downstream (result union, the next level's frontier, and
-    // every later level's visited anti-join), and without the lineage
-    // cut each reference re-executes the whole join chain back to the
-    // seeds — measured 2.8× slower at sf0.1 (8.9 s → 3.2 s warm).
-    // Frames are level sets (≤ nSeeds·|V| rows), never path sets, so
-    // the materialization is bounded. Under plan inspection
-    // (BuilderCache.uncached) the checkpoint is SKIPPED: an eager
-    // checkpoint both executes the BFS at build time and truncates the
-    // logical plan to LogicalRDD leaves — blinding the PlanSpec
-    // banned-shape sweeps exactly like a cached builder would.
-    val cut: DataFrame => DataFrame =
-      if (graft.model.BuilderCache.inspecting) identity
-      else _.localCheckpoint()
+    // Each level is materialized once (BuilderCache.checkpoint): level
+    // h's frame is referenced three times downstream (result union, the
+    // next level's frontier, and every later level's visited
+    // anti-join), and without the lineage cut each reference
+    // re-executes the whole join chain back to the seeds — measured
+    // 2.8× slower at sf0.1 (8.9 s → 3.2 s warm). Frames are level sets
+    // (≤ nSeeds·|V| rows), never path sets, so the materialization is
+    // bounded.
     // Partition the edge list by the join vertex ONCE and iterate over
     // the CACHED result (round 17; the distributed-PageRank discipline —
     // edges and state share one partitioner): every level's frontier
@@ -189,27 +184,29 @@ object GraphMetrics {
     // BuilderCache.release when long-lived — the cacheOnce per-request
     // discipline. Test sessions are per-suite and drop with the
     // session, which is why the suites carry no explicit release.
-    val edges = graft.model.BuilderCache.memoByPlan(
+    val edges = BuilderCache.memoByPlan(
         cc.sparkSession, "reachEdges", cc) {
       cc.select("src", "dst").repartition(
         cc.sparkSession.sessionState.conf.numShufflePartitions, col("src"))
     }
     val seeds = edges.select("src").distinct().orderBy("src").limit(nSeeds)
       .select(col("src").as("seed"))
-    val h1 = cut(seeds.join(edges, col("seed") === col("src"))
-      .filter(col("dst") =!= col("seed"))
-      .select(col("seed"), col("dst").as("v")).distinct()
-      .withColumn("hops", lit(1L)))
+    val h1 = BuilderCache.checkpoint(
+      seeds.join(edges, col("seed") === col("src"))
+        .filter(col("dst") =!= col("seed"))
+        .select(col("seed"), col("dst").as("v")).distinct()
+        .withColumn("hops", lit(1L)))
     var visited = h1.select("seed", "v")
     var frontier = h1
     var acc = h1
     for (h <- 2 to maxHops) {
-      val next = cut(frontier.select(col("seed"), col("v").as("u"))
-        .join(edges, col("u") === col("src"))
-        .filter(col("dst") =!= col("seed"))
-        .select(col("seed"), col("dst").as("v")).distinct()
-        .join(visited, Seq("seed", "v"), "left_anti")
-        .withColumn("hops", lit(h.toLong)))
+      val next = BuilderCache.checkpoint(
+        frontier.select(col("seed"), col("v").as("u"))
+          .join(edges, col("u") === col("src"))
+          .filter(col("dst") =!= col("seed"))
+          .select(col("seed"), col("dst").as("v")).distinct()
+          .join(visited, Seq("seed", "v"), "left_anti")
+          .withColumn("hops", lit(h.toLong)))
       acc = acc.unionByName(next)
       visited = visited.unionByName(next.select("seed", "v"))
       frontier = next
@@ -260,11 +257,8 @@ object GraphMetrics {
     // measured at sf0.1 as 3–4 × ~9 task-s passes, the query's entire
     // CPU budget, against a ~4 MB triangle chain downstream). The
     // sampled set is ~m/pDenom rows of two longs — bounded, per-run,
-    // partitioned. Skipped under plan inspection (the reachHopsOf
-    // pattern): an eager localCheckpoint truncates the logical plan to
-    // a LogicalRDD leaf, which would blind the PlanSpec sweeps.
-    val s = if (graft.model.BuilderCache.inspecting) s0
-      else s0.localCheckpoint()
+    // partitioned. Lineage cut: see BuilderCache.checkpoint.
+    val s = BuilderCache.checkpoint(s0)
     // exact enumeration on the sparsified graph via the SAME oriented-
     // intersection operator as the exact twin (symmetrized back to the
     // (src,dst)+(dst,src) shape it expects)

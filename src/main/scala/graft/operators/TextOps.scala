@@ -691,25 +691,14 @@ object TextOps {
     * stream. Output: one row per merge step (step, lhs, rhs, merged,
     * pair_count), the merge table in training order.
     *
-    * Merge application runs in the STRING domain, the same
-    * doubled-space replace both the DuckDB oracle and the hash-check
-    * replay: double every separator so each token owns a space on both
-    * sides, literal-replace ` left␣␣right ` → ` left_right ` (a literal
-    * replace scans left-to-right over non-overlapping occurrences —
-    * exactly BPE's greedy rule: in `a a a` under merge (a,a) the first
-    * pair wins and the third `a` survives, because the merged `a_a` is
-    * a NEW symbol that only pairs in LATER steps), then collapse the
-    * leftover doubled gaps (runs are provably ≤ 2 spaces, so one
-    * literal `'  '→' '` pass suffices — no regex). Each application is
-    * LINEAR in document length; the previous array-fold form
-    * (`aggregate` with `concat(acc, array(x))` per element) copied the
-    * accumulator per token — O(len²) per doc per application, measured
-    * 5× slower over a 64-round loop at sf0.1. BpeSpec pins the string
+    * Merge application is [[bpeApply]], the string-domain replace the
+    * DuckDB oracle uses too: its left-to-right literal scan is exactly
+    * BPE's greedy rule — in `a a a` under merge (a,a) the first pair
+    * wins and the third `a` survives, because the merged `a_a` is a NEW
+    * symbol that only pairs in LATER steps. BpeSpec pins the string
     * form's parity against an independent array-fold reference. `_` as
-    * the join char is safe here: corpus tokens are `[a-z0-9]+`
-    * (asserted cheaply by the quote-escape below never firing on
-    * oracle data), and split-derived tokens can never contain the
-    * space separator.
+    * the join char is safe here: corpus tokens are `[a-z0-9]+`, and
+    * split-derived tokens can never contain the space separator.
     *
     * Iterative like [[graft.algo.PageRank]]'s fixed-step twins: the loop
     * is a driver-side unroll of nMerges deterministic rounds, each
@@ -722,19 +711,17 @@ object TextOps {
     * corpus is a replace composition pipelined into the same scan
     * stage. A realistic tokenizer runs 10³–10⁴·5 merges, so the chain
     * depth is CAPPED: every [[BpeCheckpointEvery]] rounds the rewritten
-    * corpus materializes via an eager localCheckpoint (the reach_hops
-    * per-level pattern) — plan depth and codegen nesting stay ≤ the
-    * cadence no matter how many rounds run, and each round's count pass
+    * corpus is cut ([[graft.model.BuilderCache.checkpoint]]) — plan
+    * depth and codegen nesting stay ≤ the cadence no matter how many
+    * rounds run, and each round's count pass
     * re-scans at most BpeCheckpointEvery replaces past the last
     * materialization instead of the whole merge history. Checkpoint
     * frames are corpus-sized strings at MEMORY_AND_DISK
     * (⌈nMerges/cadence⌉ of them, evictable); on a cluster the same
     * cadence would use reliable checkpoints and unpersist the
-    * superseded frame once the next one lands. Under plan inspection
-    * ([[graft.model.BuilderCache.inspecting]]) the checkpoint is
-    * skipped so detector sweeps see the fully-inlined plan, exactly
-    * like reach_hops. BpeSpec's depth test pins nMerges = 64 (4
-    * checkpoint generations) against the independent reference;
+    * superseded frame once the next one lands. BpeSpec's depth test
+    * pins nMerges = 64 (4 checkpoint generations) against the
+    * independent reference;
     * measured 64-round walls: 21.6 s cold sf0.01, 46.3 s sf0.1
     * (SCALING.md round-11 section has the cadence A/B).
     *
@@ -758,93 +745,96 @@ object TextOps {
     // otherwise pay the 4-round corpus-sized learn loop twice (r14
     // verdict item 2). Bench-wise this makes bpe_merges a cold-gated
     // query (Bench.coldBaselineSec) with a release hook, like the other
-    // memoized chains.
+    // memoized chains. One row per document with f = 1: the token
+    // stream takes no grouping shuffle before the loop.
     graft.model.BuilderCache.memo(spark, s"bpeMerges:$dir:$nMerges") {
-      bpeMergesOf(spark,
-        Tables.documents(spark, dir).select(toks(col("text")).as("t")),
-        nMerges)
+      val docs = Tables.documents(spark, dir)
+        .select(array_join(toks(col("text")), " ").as("s"), lit(1L).as("f"))
+      bpeLearn(spark, docs, nMerges, glue = "_", raw = true)
     }
 
-  /** Plan-depth cap for [[bpeMerges]]: rounds between eager
-    * localCheckpoints of the rewritten corpus. Measured at sf0.1 with
-    * the 64-round depth test's workload — see the SCALING.md round-11
+  /** Plan-depth cap for [[bpeLearn]]: rounds between lineage cuts of
+    * the rewritten table. Measured at sf0.1 with the 64-round depth
+    * test's workload — see the SCALING.md round-11
     * section for the cadence A/B that picked this value (and the
     * round-13 section re-validating it for the byte domain). Cadence
     * changes materialization boundaries, never merge results (BpeSpec's
     * 64-round parity cases cross checkpoint generations). */
   val BpeCheckpointEvery: Int = 16
 
-  /** [[bpeMerges]] over any (t: array<string>) corpus — the
-    * fixture-testable form (same split as reachHopsOf). */
-  private[graft] def bpeMergesOf(spark: SparkSession, corpus: DataFrame,
-      nMerges: Int): DataFrame = {
+  /** One BPE merge application, the doubled-space replace both the
+    * DuckDB oracles and every learner and encoder here use: double
+    * every separator in the space-joined symbol column `s` so each
+    * symbol owns a space on both sides, literal-replace ` a␣␣b ` →
+    * ` m ` (replace()'s left-to-right scan IS BPE's greedy non-overlap
+    * rule), collapse the doubled gaps and trim. Linear in the string's
+    * length, where an array fold (`concat(acc, array(x))` per element)
+    * copies the accumulator per token: O(len²), measured 5× slower
+    * over a 64-round loop at sf0.1. The symbols travel as literal
+    * values, never as SQL text, so any character in them is safe.
+    *
+    * `raw` marks the first apply over raw text. The ORACLE
+    * re-normalizes with regexp ' +' every round, and raw text can carry
+    * multi-space runs, so the first apply MUST regex-collapse to stay
+    * hash-equal on such input. Its output is single-spaced; doubling
+    * then makes every separator exactly 2 spaces, and a literal
+    * '  '→' ' pass is byte-identical to the regex on that shape. The
+    * regex is measurably slower, and a learn loop's lineage
+    * re-evaluates every earlier apply in each later round's count, so
+    * an all-regex loop paid +20.5 s at sf10 / +155 s at sf30 over
+    * regex-once (SCALING.md r15 §2). */
+  private def bpeApply(s: Column, a: String, b: String, m: String,
+      raw: Boolean): Column = {
+    val merged = replace(
+      concat(lit(" "), replace(s, lit(" "), lit("  ")), lit(" ")),
+      lit(s" $a  $b "), lit(s" $m "))
+    trim(
+      if (raw) regexp_replace(merged, " +", " ")
+      else replace(merged, lit("  "), lit(" ")))
+  }
+
+  /** The distributed BPE learn loop over a (s: space-joined symbols,
+    * f: long weight) table, shared by both granularities: word level
+    * passes one row per document with f = 1 and glues merges with `_`,
+    * byte level passes its word-type table and glues with "". Each
+    * round is ONE Spark job: map-only pair extraction, a
+    * partial-aggregated Σf shuffle keyed by distinct pair, and a 1-row
+    * TakeOrderedAndProject collect of the winner by (count DESC, lhs
+    * ASC, rhs ASC). The merge apply is map-only, pipelined into the
+    * next round's scan; every [[BpeCheckpointEvery]] rounds the
+    * rewritten table is cut to cap plan depth. `raw` says the input
+    * `s` is raw text (see [[bpeApply]]). */
+  private def bpeLearn(spark: SparkSession, table: DataFrame, nMerges: Int,
+      glue: String, raw: Boolean): DataFrame = {
     import spark.implicits._
-    def esc(t: String): String = t.replace("\\", "\\\\").replace("'", "\\'")
-    val cut: DataFrame => DataFrame =
-      if (graft.model.BuilderCache.inspecting) identity
-      else _.localCheckpoint()
-    // String domain: `s` is the space-joined token stream (one join at
-    // entry). Merge application is then a LINEAR literal replace — the
-    // same doubled-space trick the oracle uses — where the array fold
-    // (`concat(acc, array(x))` per element) copies the accumulator per
-    // token: O(len²) per doc per application, measured 5× slower over a
-    // 64-round loop at sf0.1.
-    var cur = corpus.select(array_join(col("t"), " ").as("s"))
-    // Whitespace-collapse strategy (r14 advice + r15 A/B): the ORACLE
-    // re-normalizes with regexp ' +' every round, and raw text can
-    // carry multi-space runs, so round 1 MUST regex-collapse to stay
-    // hash-equal on such input. But regexp_replace is measurably
-    // slower than the literal replace, and the loop's lineage
-    // RE-EVALUATES every earlier apply in each later round's count
-    // (no checkpoint until cadence 16), so an all-regex loop pays the
-    // regex k(k−1)/2-ish times — measured +20.5 s at sf10 / +155 s at
-    // sf30 over this form (SCALING.md r15 §2). Only the FIRST collapse
-    // ever sees a run longer than 2 spaces: its output is
-    // single-spaced, doubling then makes every separator exactly 2,
-    // and a literal '  '→' ' pass is byte-identical to the regex on
-    // that shape. So: regex once, literal thereafter — exact oracle
-    // parity, and the single remaining regex eval costs ~6 s of the
-    // ~54 s sf10 learn wall (A/B: all-literal 47.7 s).
-    var rawSpaces = true // true until the first collapse normalizes
+    var cur = table
     val merges = scala.collection.mutable.ArrayBuffer.empty[
       (Int, String, String, String, Long)]
     var step = 1
     while (step <= nMerges) {
       val winner = cur
-        .select(split(col("s"), " ").as("t"))
+        .select(split(col("s"), " ").as("t"), col("f"))
         .select(explode(expr(
           """CASE WHEN size(t) >= 2
             |  THEN transform(sequence(0, size(t) - 2),
             |         i -> struct(t[i] AS a, t[i + 1] AS b))
-            |  ELSE array() END""".stripMargin)).as("p"))
+            |  ELSE array() END""".stripMargin)).as("p"), col("f"))
         .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(count(lit(1)).as("cnt"))
+        .agg(sum(col("f")).as("cnt"))
         .orderBy(desc("cnt"), asc("a"), asc("b"))
-        .limit(1) // TakeOrderedAndProject: 1-row driver collect per round
+        .limit(1)
         .as[(String, String, Long)]
         .collect()
       winner.headOption match {
         case Some((a, b, cnt)) =>
-          val m = s"${a}_$b"
+          val m = a + glue + b
           merges += ((step, a, b, m, cnt))
-          val (ea, eb, em) = (esc(a), esc(b), esc(m))
-          // double every separator so each token owns a space on both
-          // sides, literal-replace ` a␣␣b ` left-to-right (replace()'s
-          // scan order IS the greedy non-overlap rule), re-normalize —
-          // exactly the oracle's formulation, and linear in doc length
-          // (regex-vs-literal collapse: see the rawSpaces note above)
-          val merged =
-            s"""replace(' ' || replace(s, ' ', '  ') || ' ',
-               |        ' $ea  $eb ', ' $em ')""".stripMargin
-          val collapsed =
-            if (rawSpaces) s"regexp_replace($merged, ' +', ' ')"
-            else s"replace($merged, '  ', ' ')"
-          cur = cur.select(expr(s"trim($collapsed)").as("s"))
-          rawSpaces = false
-        case None => step = nMerges // empty corpus: nothing to merge
+          cur = cur.select(
+            bpeApply(col("s"), a, b, m, raw && step == 1).as("s"), col("f"))
+        case None => step = nMerges // no pair left: nothing to merge
       }
       if (step % BpeCheckpointEvery == 0 && step < nMerges)
-        cur = cut(cur) // cap replace-chain/plan depth (see scaladoc)
+        cur = graft.model.BuilderCache.checkpoint(cur)
       step += 1
     }
     merges.toSeq
@@ -870,8 +860,6 @@ object TextOps {
   def bpeEncode(spark: SparkSession, dir: String,
       nMerges: Int = 4): DataFrame = {
     import spark.implicits._
-    def esc(t: String): String =
-      t.replace("\\", "\\\\").replace("'", "\\'")
     val ms = bpeMerges(spark, dir, nMerges)
       .select("lhs", "rhs", "merged")
       .as[(String, String, String)].collect()
@@ -879,22 +867,10 @@ object TextOps {
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("n_tokens"),
         col("text").as("s"))
-    // pass 1 sees RAW text (live multi-space runs → regex collapse for
-    // oracle parity); every later pass sees the single-spaced output,
-    // where the literal '  '→' ' pass is byte-identical and much
-    // faster (the bpeMergesOf rawSpaces note has the argument)
-    var rawSpaces = true
-    ms.foreach { case (a, b, m) =>
-      val (ea, eb, em) = (esc(a), esc(b), esc(m))
-      val merged =
-        s"""replace(' ' || replace(s, ' ', '  ') || ' ',
-           |        ' $ea  $eb ', ' $em ')""".stripMargin
-      val collapsed =
-        if (rawSpaces) s"regexp_replace($merged, ' +', ' ')"
-        else s"replace($merged, '  ', ' ')"
+    // pass 1 sees RAW text (see bpeApply)
+    ms.zipWithIndex.foreach { case ((a, b, m), i) =>
       cur = cur.select(col("doc_id"), col("n_tokens"),
-        expr(s"trim($collapsed)").as("s"))
-      rawSpaces = false
+        bpeApply(col("s"), a, b, m, raw = i == 0).as("s"))
     }
     cur.select(col("doc_id"), col("n_tokens"),
       size(split(col("s"), " ")).cast("long").as("n_tokens_bpe"),
@@ -919,19 +895,14 @@ object TextOps {
     * scales). This is exactly how production BPE trainers work and
     * why they can afford 10⁴–10⁵ merge rounds.
     *
-    * The string-domain machinery carries over from [[bpeMerges]]
-    * unchanged: symbols live space-joined per word type, merge
-    * application is the doubled-space literal replace (left-to-right
-    * non-overlapping scan = BPE's greedy rule), and the rewritten
-    * type table localCheckpoints every [[BpeCheckpointEvery]] rounds
-    * to cap plan depth. Symbols are `[a-z0-9]` chars plus the `</w>`
-    * marker — no space can occur inside a symbol, and replace() is
-    * literal, so no escaping hazards. Output schema matches
-    * bpe_merges: (step, lhs, rhs, merged, pair_count), pair_count the
-    * exact long Σfreq. BpeSpec pins parity against an independent
-    * in-test reference implementing the paper's pseudocode over a
-    * plain Scala Map, and the DuckDB oracle replays the same rounds
-    * as chained CTEs (hash-exact). */
+    * The string-domain machinery is [[bpeMerges]]'s: symbols live
+    * space-joined per word type, [[bpeApply]] applies a merge, and
+    * above the single-task bound the same [[bpeLearn]] loop runs over
+    * the type table. Output schema matches bpe_merges: (step, lhs, rhs,
+    * merged, pair_count), pair_count the exact long Σfreq. BpeSpec pins
+    * parity against an independent in-test reference implementing the
+    * paper's pseudocode over a plain Scala Map, and the DuckDB oracle
+    * replays the same rounds as chained CTEs (hash-exact). */
   def bpeMergesBytes(spark: SparkSession, dir: String,
       nMerges: Int = 4): DataFrame =
     // session-memoized like bpeMerges (r14 verdict item 2): the merge
@@ -974,14 +945,11 @@ object TextOps {
       corpus: DataFrame, nMerges: Int,
       localMaxSymbols: Long = BpeLocalMaxSymbols): DataFrame = {
     import spark.implicits._
-    val cut: DataFrame => DataFrame =
-      if (graft.model.BuilderCache.inspecting) identity
-      else _.localCheckpoint()
     // ONE corpus-sized aggregation; everything after runs on word
     // TYPES. s = space-joined symbol string ("l o w</w>"), f = type
     // frequency. The marker glues to the last char (Sennrich's tuple
     // shape), so end-of-word symbols never merge across words.
-    var wf = corpus
+    val wf = corpus
       .select(explode(col("t")).as("w"))
       .groupBy("w").agg(count(lit(1)).as("f"))
       .select(expr(
@@ -991,45 +959,8 @@ object TextOps {
     val totalSyms = wf
       .select(coalesce(sum(size(split(col("s"), " "))), lit(0))
         .cast("long")).as[Long].head()
-    if (totalSyms <= localMaxSymbols)
-      return bpeMergesBytesLocal(spark, wf, nMerges)
-    val merges = scala.collection.mutable.ArrayBuffer.empty[
-      (Int, String, String, String, Long)]
-    var step = 1
-    while (step <= nMerges) {
-      val winner = wf
-        .select(split(col("s"), " ").as("t"), col("f"))
-        .select(explode(expr(
-          """CASE WHEN size(t) >= 2
-            |  THEN transform(sequence(0, size(t) - 2),
-            |         i -> struct(t[i] AS a, t[i + 1] AS b))
-            |  ELSE array() END""".stripMargin)).as("p"), col("f"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("f")).as("cnt"))
-        .orderBy(desc("cnt"), asc("a"), asc("b"))
-        .limit(1) // 1-row driver collect per round, as in bpeMerges
-        .as[(String, String, Long)]
-        .collect()
-      winner.headOption match {
-        case Some((a, b, cnt)) =>
-          val m = s"$a$b" // byte-level merges concatenate directly
-          merges += ((step, a, b, m, cnt))
-          cur2(a, b, m) match { case (find, repl) =>
-            wf = wf.select(expr(
-              s"""trim(replace(
-                 |  replace(' ' || replace(s, ' ', '  ') || ' ',
-                 |          '$find', '$repl'),
-                 |  '  ', ' '))""".stripMargin).as("s"), col("f"))
-          }
-        case None => step = nMerges
-      }
-      if (step % BpeCheckpointEvery == 0 && step < nMerges)
-        wf = cut(wf)
-      step += 1
-    }
-    merges.toSeq
-      .toDF("step", "lhs", "rhs", "merged", "pair_count")
-      .orderBy("step")
+    if (totalSyms <= localMaxSymbols) bpeMergesBytesLocal(spark, wf, nMerges)
+    else bpeLearn(spark, wf, nMerges, glue = "", raw = false)
   }
 
   /** Single-task byte-level learner: the identical merge semantics —
@@ -1123,14 +1054,6 @@ object TextOps {
       .orderBy("step")
   }
 
-  /** The doubled-space find/replace literals for a byte-level merge —
-    * symbols are `[a-z0-9</>]`, no quote escaping needed (asserted). */
-  private def cur2(a: String, b: String, m: String): (String, String) = {
-    require(!(a + b).exists(c => c == '\'' || c == '\\'),
-      s"unexpected symbol chars in merge ($a, $b)")
-    (s" $a  $b ", s" $m ")
-  }
-
   /** `bpe_encode_bytes`: encode the corpus with a [[bpeMergesBytes]]
     * merge table — the byte-level twin of [[bpeEncode]] and the
     * tokenizer shape that holds at depth. The decisive structural
@@ -1160,18 +1083,13 @@ object TextOps {
     val words = Tables.documents(spark, dir)
       .select(col("doc_id"), explode(toks(col("text"))).as("w"))
     // the type table: every distinct word as its symbol sequence, all
-    // k merges applied (literal doubled-space replaces — the greedy
-    // non-overlap rule, identical to the learner's own rewrite)
+    // k merges applied by the learner's own rewrite
     var types = words.select("w").distinct()
       .select(col("w"), expr(
         "concat(trim(regexp_replace(w, '(.)', '$1 ')), '</w>')").as("s"))
     ms.foreach { case (a, b, m) =>
-      val (find, repl) = cur2(a, b, m)
-      types = types.select(col("w"), expr(
-        s"""trim(replace(
-           |  replace(' ' || replace(s, ' ', '  ') || ' ',
-           |          '$find', '$repl'),
-           |  '  ', ' '))""".stripMargin).as("s"))
+      types = types.select(col("w"), bpeApply(col("s"), a, b, m, raw = false)
+        .as("s"))
     }
     val symCounts = types
       .select(col("w"), size(split(col("s"), " ")).cast("long").as("n_sym"))

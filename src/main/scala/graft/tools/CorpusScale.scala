@@ -1,6 +1,6 @@
 package graft.tools
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import org.apache.spark.sql.functions._
 
@@ -43,28 +43,10 @@ object CorpusScale {
     val nTotal = docs.count()
     println(s"CORPSCALE input dir=$dir docs=$nTotal chunks=$chunks " +
       s"compactAt=$compactAt")
-    (0 until chunks).foreach { i =>
-      val tmp = s"$hold/_tmp$i"
-      docs.filter(pmod(col("doc_id"), lit(chunks)) === i)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val listing = Files.list(Paths.get(tmp))
-      val part =
-        try listing.toArray.map(_.asInstanceOf[Path])
-          .find(_.getFileName.toString.endsWith(".parquet"))
-        finally listing.close() // Files.list holds an fd until closed
-      part match {
-        case Some(p) =>
-          Files.move(p, Paths.get(f"$hold/chunk$i%03d.parquet"),
-            StandardCopyOption.ATOMIC_MOVE)
-        case None =>
-          // an empty slice writes only _SUCCESS — skip it (an absent
-          // chunk file is an empty micro-batch to the replay glob)
-          println(s"CORPSCALE chunk $i is empty; skipping")
-      }
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    }
+    val staged = Replay.stageChunks(docs, pmod(col("doc_id"), lit(chunks)),
+      chunks, hold, "CORPSCALE")
     def place(from: Int, until: Int): Unit =
-      (from until until).foreach { i =>
+      staged.filter(i => i >= from && i < until).foreach { i =>
         Files.move(Paths.get(f"$hold/chunk$i%03d.parquet"),
           Paths.get(f"$staging/chunk$i%03d.parquet"),
           StandardCopyOption.ATOMIC_MOVE)

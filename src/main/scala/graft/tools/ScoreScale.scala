@@ -1,6 +1,6 @@
 package graft.tools
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -16,7 +16,7 @@ import graft.streaming.CorpusStream
   * upward drift as cumulative ingest grows.
   *
   * Replay shape: the documents table split into `chunks` files
-  * (doc_id mod bucketing, the [[CorpusScale]] staging pattern), file
+  * (doc_id mod bucketing, [[Replay.stageChunks]]), file
   * source `maxFilesPerTrigger=1` → one micro-batch per chunk; the
   * model weights come from the BATCH fit over the SAME source dir
   * (fit offline, hot-swap literals — the production shape); sink is
@@ -49,10 +49,6 @@ object ScoreScale {
     require(Set("score", "mix", "ingest", "mixingest")(mode),
       s"unknown mode $mode")
     val spark = graft.Session()
-    // recentProgress is a ring buffer (default 100); size it to the
-    // chunk count so per-batch metrics below see EVERY batch
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
-      math.max(chunks + 8, 100).toString)
 
     val staging = Files.createTempDirectory("graft-scorescale").toString
     val ck = Files.createTempDirectory("graft-scorescale-ck").toString
@@ -67,21 +63,8 @@ object ScoreScale {
     val fitSec = (System.nanoTime() - tFit0) / 1e9
     println(f"SCORESCALE mode=$mode dir=$dir docs=$nTotal chunks=$chunks " +
       f"fit=$fitSec%.1f s weights=$w")
-    (0 until chunks).foreach { i =>
-      val tmp = s"$staging/_tmp$i"
-      docs.filter(pmod(col("doc_id"), lit(chunks)) === i)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val listing = Files.list(Paths.get(tmp))
-      val part =
-        try listing.toArray.map(_.asInstanceOf[Path])
-          .find(_.getFileName.toString.endsWith(".parquet"))
-        finally listing.close()
-      part.foreach { p =>
-        Files.move(p, Paths.get(f"$staging/chunk$i%03d.parquet"),
-          StandardCopyOption.ATOMIC_MOVE)
-      }
-      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(tmp))
-    }
+    Replay.stageChunks(docs, pmod(col("doc_id"), lit(chunks)), chunks,
+      staging, "SCORESCALE")
     val src = spark.readStream.schema(CorpusStream.documentsSchema)
       .option("maxFilesPerTrigger", "1")
       .option("pathGlobFilter", "chunk*.parquet")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
@@ -47,28 +47,9 @@ object StreamScale {
     val nTotal = ev.count()
     println(s"STREAMSCALE input dir=$dir rows=$nTotal chunks=$chunks " +
       s"graceUs=$graceUs spanUs=${hi - lo}")
-    (0 until chunks).foreach { i =>
-      val tmp = s"$staging/_tmp$i"
-      ev.filter((unix_micros(col("ts")) - lo).divide(width)
-          .cast("long") === i)
-        .coalesce(1).write.mode("overwrite").parquet(tmp)
-      val listing = Files.list(Paths.get(tmp))
-      val part =
-        try listing.toArray.map(_.asInstanceOf[Path])
-          .find(_.getFileName.toString.endsWith(".parquet"))
-        finally listing.close() // Files.list holds an fd until closed
-      part match {
-        case Some(p) =>
-          Files.move(p, Paths.get(f"$staging/chunk$i%03d.parquet"),
-            StandardCopyOption.ATOMIC_MOVE)
-        case None =>
-          // an empty time slice writes only _SUCCESS — skip it (an
-          // absent chunk file is an empty micro-batch to the glob)
-          println(s"STREAMSCALE chunk $i is empty; skipping")
-      }
-      org.apache.commons.io.FileUtils.deleteDirectory(
-        new java.io.File(tmp))
-    }
+    Replay.stageChunks(ev,
+      (unix_micros(col("ts")) - lo).divide(width).cast("long"),
+      chunks, staging, "STREAMSCALE")
 
     val schema = spark.read.parquet(s"$staging/chunk000.parquet").schema
     val src = spark.readStream.schema(schema)

@@ -82,8 +82,8 @@ class BpeSpec extends SparkSpec {
 
   test("depth robustness: 64 merge rounds complete and match the reference") {
     // 4 full checkpoint generations (BpeCheckpointEvery = 16): without
-    // the lineage cut, round 64's count pass would drag a 64-deep
-    // nested `aggregate` fold through analysis and codegen. 40 docs of
+    // the lineage cut, round 64's count pass would drag a 64-deep chain
+    // of doubled-space replaces through analysis and codegen. 40 docs of
     // 4 repeated tokens give ~80 productive rounds: each doc yields
     // (t,t) cnt 3 then later (t_t,t_t) cnt 1, so the loop never dries
     // up before round 64 and every winner is tie-broken
@@ -170,6 +170,17 @@ class BpeSpec extends SparkSpec {
     // raw split counts the empty token (n_tokens = 3); the encoded
     // stream is whitespace-normalized exactly as the oracle's (= 2)
     assert(n1 == 3L && nb1 == 2L, s"doc 1: got ($n1, $nb1)")
+  }
+
+  test("first-round whitespace: a double space blocks a pair in round 1, " +
+      "later rounds count over normalized text") {
+    // round 1 splits the raw text, so "x  y" yields (x,"") and ("",y),
+    // not (x,y); the first merge apply regex-collapses the run, so
+    // round 2 counts (x,y) once in doc 1. Values from the bpe_merges
+    // oracle SQL in DuckDB 1.0.0; a naive split reference would pick
+    // ("", y) in round 2.
+    val got = run(Seq((1L, "x  y x y"), (2L, "x y")), 2)
+    assert(got == Seq((1, "x", "y", "x_y", 2L), (2, "x", "y", "x_y", 1L)))
   }
 
   // ---- byte/char-level mode (TextOps.bpeMergesBytes) ----
@@ -330,6 +341,62 @@ class BpeSpec extends SparkSpec {
     assert(local == dist)
     assert(local == refBytes(texts, 256))
     assert(local.size < 256) // exhaustion actually happened
+  }
+
+  test("merge symbols containing quotes and backslashes: both learners " +
+      "and both encoders match the references") {
+    // byte level: "it's" ×4 ties (i,t), (t,') and (',s</w>) at 4, and
+    // ' sorts first, so the first merge is (', s</w>); "x\y" brings a
+    // backslash symbol into a later merge
+    val texts = Seq("it's it's it's", "x\\y x\\y", "it's x\\y")
+    val docs = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    val n = 5
+    val want = refBytes(texts, n)
+    assert(want.head == ((1, "'", "s</w>", "'s</w>", 4L)))
+    assert(want.exists(_._2 == "\\"))
+    assert(runBytes(docs, n) == want)
+    assert(runBytesPath(docs, n, localMax = 0L) == want)
+    assert(runBytesPath(docs, n, localMax = Long.MaxValue) == want)
+    def reapply(t0: Seq[String], ms: Seq[(Int, String, String, String, Long)])
+        : Seq[String] =
+      ms.foldLeft(t0) { case (t, (_, a, b, m, _)) =>
+        val acc = scala.collection.mutable.ArrayBuffer.empty[String]
+        t.foreach { x =>
+          if (acc.nonEmpty && acc.last == a && x == b)
+            acc(acc.length - 1) = m
+          else acc += x
+        }
+        acc.toSeq
+      }
+    def symbols(w: String): Seq[String] = {
+      val cs = w.map(_.toString)
+      cs.dropRight(1) :+ (cs.last + "</w>")
+    }
+    val gotBytes = TextOps.bpeEncodeBytes(spark, corpusDir(docs), nMerges = n)
+      .select("doc_id", "n_tokens", "n_tokens_bpe")
+      .as[(Long, Long, Long)].collect().toSet
+    assert(gotBytes == docs.map { case (id, text) =>
+      val ws = text.split(' ').toSeq
+      (id, ws.size.toLong, ws.map(w => reapply(symbols(w), want).size).sum
+        .toLong)
+    }.toSet)
+    // word level: tokens with quotes and backslashes are merge symbols
+    val wtexts = Seq("it's a\\b it's a\\b", "it's a\\b 'q' \\", "'q' \\")
+    val wdocs = wtexts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+    val wwant = refMerges(wtexts, 3)
+    assert(wwant.head == ((1, "it's", "a\\b", "it's_a\\b", 3L)))
+    assert(wwant.exists(m => m._2.contains("'") && m._3.contains("\\")))
+    val wd = corpusDir(wdocs)
+    val wgot = TextOps.bpeMerges(spark, wd, nMerges = 3)
+      .as[(Int, String, String, String, Long)].collect().toSeq.sortBy(_._1)
+    assert(wgot == wwant)
+    val gotWords = TextOps.bpeEncode(spark, wd, nMerges = 3)
+      .select("doc_id", "n_tokens", "n_tokens_bpe")
+      .as[(Long, Long, Long)].collect().toSet
+    assert(gotWords == wdocs.map { case (id, text) =>
+      val t = text.split(' ').toSeq
+      (id, t.size.toLong, reapply(t, wwant).size.toLong)
+    }.toSet)
   }
 
   test("merge exhaustion: learners stop cleanly, encodes keep clean-stop " +

@@ -57,6 +57,22 @@ class BuilderCacheSpec extends SparkSpec {
     assert(builds == 1, s"build ran $builds times for one semantic plan")
   }
 
+  test("checkpoint cuts lineage to a LogicalRDD leaf with the same rows") {
+    val df = spark.range(20).toDF("id").filter("id % 3 = 0")
+    val cut = BuilderCache.checkpoint(df)
+    assert(cut.queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD])
+    assert(cut.collect().map(_.getLong(0)).sorted.toSeq ==
+      df.collect().map(_.getLong(0)).sorted.toSeq)
+  }
+
+  test("checkpoint inside uncached returns the input plan unchanged") {
+    val df = spark.range(20).toDF("id").filter("id % 3 = 0")
+    val kept = BuilderCache.uncached(BuilderCache.checkpoint(df))
+    assert(kept eq df)
+    assert(kept.queryExecution.logical == df.queryExecution.logical)
+  }
+
   test("Engine.boundPprCache evicts the rank prefix past the cap") {
     // other suites in the shared session may have left rank entries
     BuilderCache.release(spark, "engine.pprRanks")
