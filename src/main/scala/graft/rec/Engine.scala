@@ -301,7 +301,8 @@ object Engine {
 
   /** Rows the one-task serving kernel may read per request: the
     * customer's row and basket, `engine.cooc`, the Jaccard pairs and
-    * the product ids. Past it a request takes the DataFrame path.
+    * the product ids; for [[collabLocal]], the basket elements. Past it
+    * a request takes the DataFrame path.
     *
     * Measured per warm request on `local[2]`, kernel against DataFrame
     * path, with the JVM's allocation during a kernel request
@@ -385,6 +386,66 @@ object Engine {
       require(known, s"unknown customer id: $customerId")
       rows
     }
+  }
+
+  /** The one-task kernel of `/recs?strategy=similarity&customer_id=`:
+    * [[Recommend.collabTopkFor]]'s 3-hop collaborative filter in ONE
+    * `coalesce(1).mapPartitions` job over the cached
+    * [[Relational.baskets]] memo. Each other customer c2 whose basket B2
+    * meets the seed basket P1 in I = B2 ∩ P1 counts once toward every
+    * p ∈ B2 reached from some p1 ∈ I with p ≠ p1. The score is the
+    * number of such c2; the answer is the top `topN` (product_id,
+    * score) by (-score, product_id). An unknown or orderless customer
+    * gets no rows, as on the DataFrame path.
+    *
+    * As in [[serveLocal]], the size choice is made before any job: when
+    * the cache already holds more than `limit` baskets, or the baskets
+    * frame is not cached, the answer is `None` and the caller takes the
+    * DataFrame path. The task also stops once it has read more than
+    * `limit` basket elements. */
+  private[graft] def collabLocal(spark: SparkSession, dir: String,
+      customerId: Long, topN: Int,
+      limit: Long = ServeLocalRows): Option[Array[(Long, Long)]] = {
+    val baskets = Relational.baskets(spark, dir)
+    if (!cachedRows(baskets).exists(_ <= limit)) return None
+    baskets.select(col("customer_id").cast("long"),
+        col("ds").cast("array<bigint>"))
+      .coalesce(1).queryExecution.toRdd
+      .mapPartitions(it =>
+        Iterator.single(collab(it, customerId, topN, limit)))
+      .collect()
+      .headOption.getOrElse(collab(Iterator.empty, customerId, topN, limit))
+  }
+
+  /** The task body of [[collabLocal]]: `None` past `limit` basket
+    * elements read, else the top `topN` (product_id, score). */
+  private def collab(it: Iterator[InternalRow], customerId: Long,
+      topN: Int, limit: Long): Option[Array[(Long, Long)]] = {
+    var read = 0L
+    var seed = Array.empty[Long]
+    val others = mutable.ArrayBuffer.empty[Array[Long]]
+    while (read <= limit && it.hasNext) {
+      val r = it.next()
+      val ds = r.getArray(1).toLongArray()
+      read += ds.length
+      // a null customer joins no one on the DataFrame path
+      if (!r.isNullAt(0)) {
+        if (r.getLong(0) == customerId) seed = ds else others += ds
+      }
+    }
+    if (read > limit) return None
+    val p1 = mutable.LongMap.from(seed.iterator.map(_ -> ()))
+    val score = mutable.LongMap.empty[Long]
+    others.foreach { b2 =>
+      val in = b2.filter(p1.contains)
+      // with two products in I every p of B2 has some p1 ≠ p; with one,
+      // every p but that one
+      if (in.nonEmpty) b2.foreach { p =>
+        if (in.length > 1 || p != in(0))
+          score(p) = score.getOrElse(p, 0L) + 1
+      }
+    }
+    Some(score.toArray.sortBy { case (p, s) => (-s, p) }.take(topN))
   }
 
   /** The task body of [[serveLocal]]: `None` past `limit` rows read,

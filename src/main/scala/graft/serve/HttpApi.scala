@@ -3,6 +3,8 @@ package graft.serve
 import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
+import scala.collection.mutable
+
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -20,7 +22,25 @@ import graft.rec.{Engine, RecsApi}
   *     `contributions` map (`api.py:40-50`,
   *     keys `recommendation.py:10-14,227`); unknown customer → 404;
   *   - `GET /customers/{id}/strategies?top_n=` → the raw per-strategy
-  *     breakdown (`api.py:78-96`).
+  *     breakdown (`api.py:78-96`);
+  *   - `GET /metrics` → per route: requests, answers by status class and
+  *     a latency histogram in power-of-two ms buckets; paths that name
+  *     no route count under `other`.
+  * Each route answers its exact path only; any other path is 404.
+  *
+  * How `/recs` is served. `limit` is clamped to at most 10, so three of
+  * its four variants are fixed by the tables: co_occurrence (which
+  * ignores `customer_id`), pagerank (order frequency) and similarity
+  * without a customer (popularity). The server computes each one's
+  * top-10 through [[graft.rec.RecsApi.recs]] on the strategy's first
+  * request, holds the rendered rows, and answers every later request
+  * with their first `limit`, no Spark job run. The held lists reflect
+  * the tables at that first request, just as `g` and the builder memos
+  * pin them. Similarity with a customer, the 3-hop collaborative filter,
+  * is one Spark job through [[graft.rec.Engine.collabLocal]] while the
+  * cached baskets are within `Engine.ServeLocalRows` elements, and
+  * `RecsApi.recs`' DataFrame plan above that bound. Every answer is the
+  * library's, byte for byte (ServeSpec).
   *
   * Built on the JDK's `HttpServer` — no added dependency, sufficient for
   * the reference's GET-only surface. The server is a thin JSON mapper:
@@ -56,7 +76,8 @@ final class HttpApi private[graft] (spark: SparkSession, dir: String,
   import HttpApi.{detail, jStr}
 
   // `localRows` is the serving kernel's row limit; only tests pass one
-  // (0 sends every blended request down the DataFrame path)
+  // (0 sends every blended and 3-hop `/recs` request down the DataFrame
+  // path)
   def this(spark: SparkSession, dir: String, port: Int = 0,
       graph: Option[Engine.ProductGraph] = None) =
     this(spark, dir, port, graph, Engine.ServeLocalRows)
@@ -88,19 +109,20 @@ final class HttpApi private[graft] (spark: SparkSession, dir: String,
     case other => jStr(other.toString)
   }
 
-  private def rows(df: DataFrame): String = {
+  /** Each collected row of `df` as one JSON object. */
+  private def rows(df: DataFrame): Array[String] = {
     val names = df.schema.fieldNames
     df.collect().map { r =>
       names.indices.map(i => jStr(names(i)) + ":" + jVal(r.get(i)))
         .mkString("{", ",", "}")
-    }.mkString("[", ",", "]")
+    }
   }
 
   // ---- request plumbing ----
 
   // decode the RAW query exactly once: getQuery() is already decoded,
   // and a second pass would split a value on an escaped '&' and throw
-  // on an escaped '%' (`%25zz`). A malformed escape never reaches a
+  // on an escaped '%' (`%25zz`). A malformed escape never reaches the
   // handler — the JDK server answers it with a 400 itself.
   private def params(ex: HttpExchange): Map[String, String] =
     Option(ex.getRequestURI.getRawQuery).getOrElse("").split("&")
@@ -118,88 +140,121 @@ final class HttpApi private[graft] (spark: SparkSession, dir: String,
     ex.close()
   }
 
-  private def handler(f: HttpExchange => (Int, String)) =
-    new com.sun.net.httpserver.HttpHandler {
-      override def handle(ex: HttpExchange): Unit = {
-        val (status, body) =
-          try f(ex)
-          catch { case e: Throwable => HttpApi.failure(e) }
-        send(ex, status, body)
-      }
+  /** The route a path names, exactly, and its answer; `other` (404) for
+    * every path that names none. One context takes every path: the JDK
+    * server matches contexts by raw string prefix, so a `/recs` context
+    * would also answer `/recsjunk` and `/recs/x`. */
+  private def route(ex: HttpExchange): (String, () => (Int, String)) = {
+    def topN = params(ex).get("top_n").flatMap(_.toIntOption).getOrElse(3)
+    ex.getRequestURI.getPath.split("/", -1) match {
+      case Array("", "") => ("/", () => (200,
+        """{"message":"Graft Graph Recommendations API","endpoints":{""" +
+          """"health":"/health","recommendations":"/recs"}}"""))
+      case Array("", "health") => ("/health", () => (200, """{"ok":true}"""))
+      case Array("", "recs") => ("/recs", () => recs(params(ex)))
+      case Array("", "metrics") => ("/metrics", () => (200, metricsJson))
+      case Array("", "customers", Id(id), "recommendations") =>
+        ("/customers/{id}/recommendations", () => recommendations(id, topN))
+      case Array("", "customers", Id(id), "strategies") =>
+        ("/customers/{id}/strategies", () => strategies(id, topN))
+      case _ => (HttpApi.Other, () => (404, detail("Not found")))
     }
+  }
 
-  // ---- endpoints ----
+  private object Id {
+    def unapply(s: String): Option[Long] = s.toLongOption
+  }
 
-  server.createContext("/health", handler { _ => (200, """{"ok":true}""") })
+  // ---- /recs ----
 
-  server.createContext("/recs", handler { ex =>
-    val p = params(ex)
+  /** Rendered top-10 lists of the request-independent `/recs` variants,
+    * by strategy: each made on its strategy's first request. */
+  private val held = mutable.HashMap.empty[String, Array[String]]
+
+  private def recs(p: Map[String, String]): (Int, String) = {
     val strategy = p.getOrElse("strategy", "co_occurrence")
     val cid = p.get("customer_id").flatMap(_.toLongOption)
-    val limit = p.get("limit").flatMap(_.toIntOption).getOrElse(10)
+    val n = RecsApi.clampTopN(p.get("limit").flatMap(_.toIntOption)
+      .getOrElse(10))
     if (!RecsApi.Strategies(strategy))
-      (400, detail(s"Unknown strategy: $strategy. Use: " +
+      return (400, detail(s"Unknown strategy: $strategy. Use: " +
         RecsApi.Strategies.mkString(", ")))
-    else {
-      val df = RecsApi.recs(spark, dir, strategy, cid, limit)
-      (200, s"""{"strategy":${jStr(strategy)},"customer_id":${
-        cid.map(_.toString).getOrElse("null")},"recommendations":${rows(df)}}""")
+    val items = (strategy, cid) match {
+      case ("similarity", Some(c)) =>
+        Engine.collabLocal(spark, dir, c, n, localRows)
+          .map(_.map { case (id, s) => s"""{"product_id":$id,"score":$s}""" })
+          .getOrElse(rows(RecsApi.recs(spark, dir, strategy, cid, n)))
+      // (-score, product_id) is a total order: the first n of the top-10
+      // are the top-n
+      case _ => held.getOrElseUpdate(strategy,
+        rows(RecsApi.recs(spark, dir, strategy, None, 10))).take(n)
     }
-  })
+    (200, s"""{"strategy":${jStr(strategy)},"customer_id":${
+      cid.map(_.toString).getOrElse("null")},"recommendations":${
+      items.mkString("[", ",", "]")}}""")
+  }
 
-  server.createContext("/customers", handler { ex =>
-    val path = ex.getRequestURI.getPath.split("/").filter(_.nonEmpty)
-    // exactly /customers/{id}/recommendations | /customers/{id}/strategies
-    (if (path.length == 3) (path(1).toLongOption, Some(path(2)))
-     else (None, None)) match {
-      case (Some(id), Some("recommendations")) =>
-        val topN = params(ex).get("top_n").flatMap(_.toIntOption).getOrElse(3)
-        try {
-          // recommendRows releases the per-request caches after collect —
-          // a long-lived server must not accumulate one entry per request
-          val items = Engine.recommendRowsWithin(spark, g, id, topN,
-              localRows).map { r =>
-            s"""{"product_id":${r.getLong(0)},"score":${r.getDouble(1)},""" +
-              s""""contributions":{"co_occurrence":${r.getDouble(2)},""" +
-              s""""similarity":${r.getDouble(3)},""" +
-              s""""personalized_pagerank":${r.getDouble(4)},""" +
-              s""""global_pagerank":${r.getDouble(5)}}}"""
+  // ---- /customers/{id}/... ----
+
+  private def recommendations(id: Long, topN: Int): (Int, String) =
+    try {
+      // recommendRows releases the per-request caches after collect —
+      // a long-lived server must not accumulate one entry per request
+      val items = Engine.recommendRowsWithin(spark, g, id, topN,
+          localRows).map { r =>
+        s"""{"product_id":${r.getLong(0)},"score":${r.getDouble(1)},""" +
+          s""""contributions":{"co_occurrence":${r.getDouble(2)},""" +
+          s""""similarity":${r.getDouble(3)},""" +
+          s""""personalized_pagerank":${r.getDouble(4)},""" +
+          s""""global_pagerank":${r.getDouble(5)}}}"""
+      }.mkString("[", ",", "]")
+      (200, s"""{"customer_id":$id,"recommendations":$items}""")
+    } catch {
+      case e: IllegalArgumentException => (404, detail(e.getMessage))
+    }
+
+  private def strategies(id: Long, topN: Int): (Int, String) =
+    try {
+      val by = Engine.breakdownRowsWithin(spark, g, id, localRows)
+        .groupBy(_.getString(0))
+      // the reference's breakdown dict always carries every strategy
+      // key, empty lists included (recommendation.py:70-89); seedless
+      // customers get the single global_pagerank key instead (:79)
+      val keys =
+        if (by.contains("global_pagerank")) Seq("global_pagerank")
+        else Seq("co_occurrence", "similarity", "personalized_pagerank")
+      val strategies = keys.map { name =>
+        jStr(name) + ":" + by.getOrElse(name, Array.empty)
+          .take(RecsApi.clampTopN(topN)).map { r =>
+            s"""{"product_id":${r.getLong(1)},"score":${r.getDouble(2)}}"""
           }.mkString("[", ",", "]")
-          (200, s"""{"customer_id":$id,"recommendations":$items}""")
-        } catch {
-          case e: IllegalArgumentException => (404, detail(e.getMessage))
-        }
-      case (Some(id), Some("strategies")) =>
-        val topN = RecsApi.clampTopN(
-          params(ex).get("top_n").flatMap(_.toIntOption).getOrElse(3))
-        try {
-          val by = Engine.breakdownRowsWithin(spark, g, id, localRows)
-            .groupBy(_.getString(0))
-          // the reference's breakdown dict always carries every strategy
-          // key, empty lists included (recommendation.py:70-89); seedless
-          // customers get the single global_pagerank key instead (:79)
-          val keys =
-            if (by.contains("global_pagerank")) Seq("global_pagerank")
-            else Seq("co_occurrence", "similarity", "personalized_pagerank")
-          val strategies = keys.map { name =>
-            jStr(name) + ":" + by.getOrElse(name, Array.empty).take(topN)
-              .map { r =>
-                s"""{"product_id":${r.getLong(1)},"score":${r.getDouble(2)}}"""
-              }.mkString("[", ",", "]")
-          }.mkString("{", ",", "}")
-          (200, s"""{"customer_id":$id,"strategies":$strategies}""")
-        } catch {
-          case e: IllegalArgumentException => (404, detail(e.getMessage))
-        }
-      case _ => (404, detail("Not found"))
+      }.mkString("{", ",", "}")
+      (200, s"""{"customer_id":$id,"strategies":$strategies}""")
+    } catch {
+      case e: IllegalArgumentException => (404, detail(e.getMessage))
     }
-  })
 
-  server.createContext("/", handler { ex =>
-    if (ex.getRequestURI.getPath != "/") (404, detail("Not found"))
-    else (200,
-      """{"message":"Graft Graph Recommendations API","endpoints":{""" +
-        """"health":"/health","recommendations":"/recs"}}""")
+  // ---- /metrics ----
+
+  private val stats = HttpApi.Routes.map(_ -> new HttpApi.RouteStats).toMap
+
+  /** Every route's counters, `other` last, as of the request before
+    * this one (a request is counted once it is answered). */
+  private def metricsJson: String =
+    HttpApi.Routes.map(r => jStr(r) + ":" + stats(r).json)
+      .mkString("""{"routes":{""", ",", "}}")
+
+  // null executor = the dispatcher thread handles every exchange in
+  // sequence, so it is the only reader and writer of the held lists and
+  // the counters
+  server.createContext("/", { (ex: HttpExchange) =>
+    val t0 = System.nanoTime()
+    val (name, answer) = route(ex)
+    val (status, body) =
+      try answer()
+      catch { case e: Throwable => HttpApi.failure(e) }
+    try send(ex, status, body)
+    finally stats(name).record(status, (System.nanoTime() - t0) / 1e6)
   })
 }
 
@@ -222,6 +277,43 @@ object HttpApi {
     * drop the connection instead of answering. */
   private[graft] def failure(e: Throwable): (Int, String) =
     (500, detail(Option(e.getMessage).getOrElse(e.getClass.getName)))
+
+  // ---- /metrics ----
+
+  /** The key of every path that names no route. */
+  private val Other = "other"
+
+  /** The keys of `/metrics`, in the order it reports them. */
+  private val Routes = Seq("/", "/health", "/recs",
+    "/customers/{id}/recommendations", "/customers/{id}/strategies",
+    "/metrics", Other)
+
+  /** Upper bounds of the latency buckets, in ms: 1, 2, 4, … 32768. */
+  private val LatencyBoundsMs = Seq.tabulate(16)(1L << _)
+
+  /** One route's counters: requests, answers by status class (the
+    * server answers 200, 400, 404 and 500 only), and latency, counted in
+    * the first bucket whose bound it does not exceed, or in `+Inf`. */
+  private final class RouteStats {
+    private var requests = 0L
+    private val classes = new Array[Long](6)
+    private val latency = new Array[Long](LatencyBoundsMs.size + 1)
+
+    def record(status: Int, ms: Double): Unit = {
+      requests += 1
+      classes(status / 100) += 1
+      val i = LatencyBoundsMs.indexWhere(ms <= _)
+      latency(if (i < 0) LatencyBoundsMs.size else i) += 1
+    }
+
+    def json: String = {
+      val status = Seq(2, 4, 5).map(c => s""""${c}xx":${classes(c)}""")
+      val buckets = (LatencyBoundsMs.map(_.toString) :+ "+Inf").zip(latency)
+        .map { case (b, n) => s""""$b":$n""" }
+      s"""{"requests":$requests,"status":${status.mkString("{", ",", "}")},""" +
+        s""""latency_ms":${buckets.mkString("{", ",", "}")}}"""
+    }
+  }
 }
 
 /** Standalone server main: `runMain graft.serve.HttpMain [sfDir] [port]`. */

@@ -3,15 +3,18 @@ package graft
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
+import scala.collection.mutable
+
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.BeforeAndAfterAll
 
 import graft.model.BuilderCache
-import graft.operators.Recommend
-import graft.rec.Engine
+import graft.operators.{Recommend, Relational}
+import graft.rec.{Engine, RecsApi}
 import graft.serve.HttpApi
 
-/** In-process HTTP front-door tests on the toy fixture (the reference's
+/** In-process HTTP front-door tests on the toy fixture, and for `/recs`
+  * also on the sf0.001 testdata (the reference's
   * endpoint surface: `tp2/app/main.py:27-89`, `tp1 api.py:54-96`). */
 class ServeSpec extends SparkSpec with BeforeAndAfterAll {
 
@@ -70,6 +73,94 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
     assert(body.contains("\"customer_id\":1"), body)
   }
 
+  /** A value as JSON, rendered here independently of the server. */
+  private def json(v: Any): String = v match {
+    case s: String => "\"" + s.flatMap {
+      case '"' => "\\\""
+      case '\\' => "\\\\"
+      case c if c < ' ' => f"\\u${c.toInt}%04x"
+      case c => c.toString
+    } + "\""
+    case other => other.toString
+  }
+
+  private val library = mutable.Map.empty[(String, String, Option[Long], Int),
+    String]
+
+  /** The `/recs` body the library gives: the tp2 envelope around
+    * `RecsApi.recs(...).collect()`. */
+  private def libraryRecs(dir: String, strategy: String, cid: Option[Long],
+      limit: Int): String =
+    library.getOrElseUpdate((dir, strategy, cid, RecsApi.clampTopN(limit)), {
+      val df = RecsApi.recs(spark, dir, strategy, cid, limit)
+      val names = df.schema.fieldNames
+      val items = df.collect().map { r =>
+        names.indices.map(i => json(names(i)) + ":" + json(r.get(i)))
+          .mkString("{", ",", "}")
+      }
+      s"""{"strategy":${json(strategy)},"customer_id":${
+        cid.getOrElse("null")},"recommendations":${
+        items.mkString("[", ",", "]")}}"""
+    })
+
+  private val Limits = Seq("-1", "0", "1", "5", "10", "11", "abc")
+
+  /** Every `/recs` variant on each port against the library: the
+    * request-independent ones and an unknown and a non-numeric
+    * customer id at every limit, each customer of `dir` at
+    * `customerLimits`. */
+  private def assertRecsAsLibrary(dir: String, ports: Seq[Int],
+      customerLimits: Seq[String]): Unit = {
+    import spark.implicits._
+    val customers = spark.read.parquet(s"$dir/customer.parquet")
+      .select("c_custkey").as[Long].collect().sorted
+    val unknown = customers.last + 1000
+    // (strategy, customer_id parameter, the customer it names, limits):
+    // an unknown id gets no rows, a non-numeric one the popularity list
+    val asked = Seq(("co_occurrence", None, None, Limits),
+      ("co_occurrence", Some(customers.head.toString), Some(customers.head),
+        Limits),
+      ("pagerank", None, None, Limits), ("similarity", None, None, Limits),
+      ("similarity", Some(unknown.toString), Some(unknown), Limits),
+      ("similarity", Some("abc"), None, Limits)) ++
+      customers.map(c =>
+        ("similarity", Some(c.toString), Some(c), customerLimits))
+    for {
+      at <- ports
+      (strategy, param, cid, limits) <- asked
+      limit <- limits
+    } {
+      val path = s"/recs?strategy=$strategy&limit=$limit" +
+        param.map("&customer_id=" + _).getOrElse("")
+      val (code, body) = get(path, at)
+      assert(code == 200, s"$dir $path: $body")
+      assert(body == libraryRecs(dir, strategy, cid,
+        limit.toIntOption.getOrElse(10)), s"$dir $path on port $at")
+    }
+  }
+
+  test("GET /recs answers are byte-identical to RecsApi.recs on both " +
+      "sides of the kernel bound") {
+    assertRecsAsLibrary(Fixtures.write(spark), Seq(port, dfPort), Limits)
+    // sf0.001's 150 customers are asked for their full list only: every
+    // limit on both servers would be 2 100 requests, half of them on the
+    // DataFrame path at about 0.35 s each on 4 cores
+    val sf = "/root/testdata/sf0.001"
+    val sfApi = new HttpApi(spark, sf)
+    val sfDfApi = new HttpApi(spark, sf, 0, None, 0L)
+    try assertRecsAsLibrary(sf, Seq(sfApi.start(), sfDfApi.start()),
+      Seq("10"))
+    finally { sfApi.stop(); sfDfApi.stop() }
+  }
+
+  test("a path that extends a route's name is 404, not the route") {
+    Seq("/recsjunk?strategy=pagerank", "/recs/x", "/healthz",
+      "/customersX/1/recommendations").foreach { path =>
+      val (code, body) = get(path)
+      assert(code == 404 && body == """{"detail":"Not found"}""", path)
+    }
+  }
+
   test("GET /recs with an unknown strategy is a 400 with detail") {
     val (code, body) = get("/recs?strategy=bogus")
     assert(code == 400 && body.contains("Unknown strategy"), body)
@@ -116,6 +207,74 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
       val jobs = jobsDuring(assert(get(path)._1 == 200, path))
       assert(jobs == 1, s"$path started $jobs jobs")
     }
+  }
+
+  test("a warm /recs request runs no Spark job, or one with a customer") {
+    val held = Seq("/recs?strategy=co_occurrence&customer_id=1",
+      "/recs?strategy=pagerank&limit=3", "/recs?strategy=similarity&limit=7")
+    val sim = "/recs?strategy=similarity&customer_id=1&limit=5"
+    (held :+ sim).foreach(get(_)) // first touch
+    held.foreach { path =>
+      val jobs = jobsDuring(assert(get(path)._1 == 200, path))
+      assert(jobs == 0, s"$path started $jobs jobs")
+    }
+    var body = ""
+    assert(jobsDuring { body = get(sim)._2 } == 1)
+    // past the kernel's limit: the DataFrame path, with the same answer
+    get(sim, dfPort)
+    var dfBody = ""
+    val dfJobs = jobsDuring { dfBody = get(sim, dfPort)._2 }
+    assert(dfJobs > 1, s"the DataFrame path started $dfJobs jobs")
+    assert(dfBody == body)
+  }
+
+  test("past its row limit the collaborative-filter kernel yields to the " +
+      "DataFrame path") {
+    val dir = Fixtures.write(spark)
+    val baskets = Relational.baskets(spark, dir).count() // cached memo
+    // the cached basket count alone exceeds the limit: decided before any job
+    assert(jobsDuring {
+      assert(Engine.collabLocal(spark, dir, 1L, 10, baskets - 1).isEmpty)
+    } == 0)
+    // the baskets fit but their elements do not: the task stops reading
+    val elements = Relational.bipartite(spark, dir).count()
+    assert(elements > baskets)
+    assert(Engine.collabLocal(spark, dir, 1L, 10, elements - 1).isEmpty)
+    assert(Engine.collabLocal(spark, dir, 1L, 10, elements).nonEmpty)
+  }
+
+  test("GET /metrics counts requests per route, by status class and " +
+      "latency") {
+    // the toy graph serves /customers; the missing dir fails /recs inside
+    // Spark, a 500
+    val mApi = new HttpApi(spark, "/nonexistent/graft-metrics",
+      graph = Some(Fixtures.toyGraph(spark)))
+    val at = mApi.start()
+    try {
+      Seq("/health", "/health", "/nope", "/recs?strategy=bogus",
+        "/recs?strategy=pagerank", "/customers/1/recommendations",
+        "/customers/9999/strategies", "/metrics").foreach(get(_, at))
+      val (code, body) = get("/metrics", at)
+      assert(code == 200, body)
+      // (requests, 2xx, 4xx, 5xx) per route; this request is not yet counted
+      val want = Seq("/" -> (0, 0, 0, 0), "/health" -> (2, 2, 0, 0),
+        "/recs" -> (2, 0, 1, 1),
+        "/customers/{id}/recommendations" -> (1, 1, 0, 0),
+        "/customers/{id}/strategies" -> (1, 0, 1, 0),
+        "/metrics" -> (1, 1, 0, 0), "other" -> (1, 0, 1, 0))
+      val route = (""""([^"]+)":\{"requests":(\d+),""" +
+        """"status":\{"2xx":(\d+),"4xx":(\d+),"5xx":(\d+)\},""" +
+        """"latency_ms":\{([^}]*)\}\}""").r
+      val got = route.findAllMatchIn(body).map { m =>
+        val buckets = """":(\d+)""".r.findAllMatchIn(m.group(6))
+          .map(_.group(1).toInt).toSeq
+        assert(buckets.sum == m.group(2).toInt, s"${m.group(1)}: $body")
+        assert(buckets.size == 17, body) // 1, 2, 4, … 32768 ms and +Inf
+        m.group(1) -> (m.group(2).toInt, m.group(3).toInt, m.group(4).toInt,
+          m.group(5).toInt)
+      }.toSeq
+      assert(got == want, body)
+    } finally mApi.stop()
   }
 
   test("past its row limit the serving kernel yields to the DataFrame path") {
