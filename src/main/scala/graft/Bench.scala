@@ -1,6 +1,8 @@
 package graft
 import org.apache.spark.sql.SparkSession
 
+import graft.serve.HttpApi.jStr
+
 /** Benchmark main: runs every declared query at the sf dir and prints ONE
   * JSON line for the driver. Failures are loud: the per-query time map
   * keeps the driver's expected `{"queries":{name:sec}}` shape, but any
@@ -264,13 +266,6 @@ object Bench {
       graft.model.BuilderCache.release(s, "recBlendCand")
     })
 
-  private def esc(s: String): String = s.flatMap {
-    case '"'  => "\\\""
-    case '\\' => "\\\\"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  }
-
   /** 1/5/15-minute load averages — the co-tenant-noise instrument: this
     * box's totals swing ±50% with background load, so every bench line
     * records the load it ran under (before and after) for the reader to
@@ -381,7 +376,7 @@ object Bench {
     val colds = results.map { case (k, _, c, _) => s"\"" + k + "\":" + c }
       .mkString("{", ",", "}")
     val errs = results.collect { case (k, _, _, Some(e)) =>
-      s"\"" + k + "\":\"" + esc(e) + "\"" }.mkString("{", ",", "}")
+      s"\"" + k + "\":" + jStr(e) }.mkString("{", ",", "}")
     val ok = results.forall(_._4.isEmpty)
     val total = results.map(_._2).sum
     val coldTotal = results.map(_._3).sum
@@ -541,7 +536,7 @@ object Bench {
     val fp = fpTry
       .map(m => fingerprintFields.map(f => s""""$f":${m(f)}""")
         .mkString("{", ",", "}"))
-      .recover { case e => s"""{"error":"${esc(e.toString.take(200))}"}""" }
+      .recover { case e => s"""{"error":${jStr(e.toString.take(200))}}""" }
       .get
     // The budgets only describe the baseline fingerprint's data: when
     // the fingerprint MOVED, a confirmed exceedance adjudicates as
@@ -594,7 +589,7 @@ object Bench {
         f"[$l1%.2f,$l5%.2f]" }.mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val soloErrs = soloErrors.map { case (k, e) =>
-      s"\"" + k + "\":\"" + esc(e) + "\"" }.mkString("{", ",", "}")
+      s"\"" + k + "\":" + jStr(e) }.mkString("{", ",", "}")
     val la = (l: Seq[Double]) => l.mkString("[", ",", "]")
     // the JVM heap this sweep actually ran under (build.sbt couples the
     // default -Xmx to the sf dir; recording it makes scale artifacts

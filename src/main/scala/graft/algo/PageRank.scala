@@ -3,7 +3,6 @@ package graft.algo
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -338,12 +337,8 @@ object PageRank {
 
   /** Transition edges for the product graph: exact (unrounded) row
     * normalization of the co-occurrence counts (`graph.py:70-77`). */
-  def productEdges(spark: SparkSession, dir: String): DataFrame = {
-    val cnt = Relational.coocCounts(spark, dir)
-    val w = Window.partitionBy("src")
-    cnt.select(col("src"), col("dst"),
-      (col("cnt") / sum(col("cnt")).over(w)).as("weight"))
-  }
+  def productEdges(spark: SparkSession, dir: String): DataFrame =
+    Relational.transitionWeights(Relational.coocCounts(spark, dir))
 
   /** All catalog products as vertices (sinks included — products with no
     * co-occurrence keep empty adjacency rows, `graph.py:75-77`). */

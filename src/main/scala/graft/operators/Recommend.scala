@@ -366,28 +366,13 @@ object Recommend {
         coalesce(col("s_cooc"), lit(0L)).as("s_cooc"),
         coalesce(col("s_jacc"), lit(0.0)).as("s_jacc"))
       .join(broadcast(seeds), col("product_id") === col("sp"), "left_anti")
-    // A8 max-scaling without a single-partition window: the global max is
-    // a partial-aggregated scalar broadcast back over the candidates, so
-    // no candidate row ever leaves its partition (the ppr_max pattern in
-    // graft.rec.Engine). cand is cached (via the registry, so repeat
-    // calls — rec_blend and the oracle dump — share one entry) because
-    // both the scalar agg and the normalization scan it.
+    // cached via the registry, so repeat calls — rec_blend and the
+    // oracle dump — share one entry
     val candC = graft.model.BuilderCache.ensureCached(spark, "recBlendCand", cand)
-    val maxes = candC.agg(max("s_cooc").as("max_cooc"),
-      max("s_jacc").as("max_jacc"))
-    val norm = candC.crossJoin(broadcast(maxes))
-      .withColumn("nc", when(col("max_cooc") > 0,
-        col("s_cooc") / col("max_cooc")).otherwise(0.0))
-      .withColumn("nj", when(col("max_jacc") > 0,
-        col("s_jacc") / col("max_jacc")).otherwise(0.0))
-    norm
-      .withColumn("blend", lit(0.4) * col("nc") + lit(0.3) * col("nj"))
-      .filter(col("blend") > 0)
-      .select(col("product_id"), round(col("blend"), 6).as("score"),
-        round(lit(0.4) * col("nc"), 6).as("c_cooc"),
-        round(lit(0.3) * col("nj"), 6).as("c_sim"))
-      .orderBy(desc("score"), asc("product_id"))
-      .limit(k)
+    // no PPR strategy: a zero PPR term adds +0.0 to the blend, the same
+    // double
+    blend(candC.withColumn("s_ppr", lit(0.0)).withColumn("ppr_max", lit(0.0)),
+      k).drop("c_ppr")
   }
 
   /** `rec_blend_fixed`: the COMPLETE tp1 three-strategy blend —
@@ -420,24 +405,42 @@ object Recommend {
       // PPR max over the FULL vector (seeds included) — Engine's
       // normalization contract; cooc/jaccard maxes over candidates
       .crossJoin(broadcast(pScore.agg(max("s_ppr").as("ppr_max"))))
-    val candC = graft.model.BuilderCache.ensureCached(spark,
-      "recBlendFixedCand", cand)
-    val maxes = candC.agg(max("s_cooc").as("max_cooc"),
+    blend(graft.model.BuilderCache.ensureCached(spark, "recBlendFixedCand",
+      cand), k)
+  }
+
+  /** The tp1 blend weights, co-occurrence / similarity / PPR
+    * (`recommendation.py:10-14`). */
+  private[graft] val BlendWeights = (0.4, 0.3, 0.3)
+
+  /** The tp1 blend step (`recommendation.py:190-221`) of [[recBlend]],
+    * [[recBlendFixed]] and [[graft.rec.Engine.recommend]], over a
+    * seed-excluded candidate frame (product_id, s_cooc, s_jacc, s_ppr,
+    * ppr_max) that the caller has cached, since both the max aggregate
+    * and the normalization scan it. Each strategy is max-normalized
+    * (max == 0 → zeros; PPR by `ppr_max`, the max of its full rank
+    * vector) and weighted by [[BlendWeights]]; non-positive blends are
+    * dropped. Output (product_id, score, c_cooc, c_sim, c_ppr), rounded
+    * to 6 dp (`api.py:47-48`), top-k by (-score, product_id). */
+  private[graft] def blend(cand: DataFrame, k: Int): DataFrame = {
+    val (wCooc, wSim, wPpr) = BlendWeights
+    // A8 max-scaling without a single-partition window: the maxes are a
+    // partial-aggregated scalar broadcast back over the candidates, so no
+    // candidate row ever leaves its partition
+    val maxes = cand.agg(max("s_cooc").as("max_cooc"),
       max("s_jacc").as("max_jacc"))
-    candC.crossJoin(broadcast(maxes))
-      .withColumn("nc", when(col("max_cooc") > 0,
-        col("s_cooc") / col("max_cooc")).otherwise(0.0))
-      .withColumn("nj", when(col("max_jacc") > 0,
-        col("s_jacc") / col("max_jacc")).otherwise(0.0))
-      .withColumn("np", when(col("ppr_max") > 0,
-        col("s_ppr") / col("ppr_max")).otherwise(0.0))
-      .withColumn("blend", lit(0.4) * col("nc") + lit(0.3) * col("nj")
-        + lit(0.3) * col("np"))
+    def weighted(w: Double, s: String, m: String) =
+      lit(w) * when(col(m) > 0, col(s) / col(m)).otherwise(0.0)
+    cand.crossJoin(broadcast(maxes))
+      .select(col("product_id"),
+        weighted(wCooc, "s_cooc", "max_cooc").as("wc"),
+        weighted(wSim, "s_jacc", "max_jacc").as("ws"),
+        weighted(wPpr, "s_ppr", "ppr_max").as("wp"))
+      .withColumn("blend", col("wc") + col("ws") + col("wp"))
       .filter(col("blend") > 0)
       .select(col("product_id"), round(col("blend"), 6).as("score"),
-        round(lit(0.4) * col("nc"), 6).as("c_cooc"),
-        round(lit(0.3) * col("nj"), 6).as("c_sim"),
-        round(lit(0.3) * col("np"), 6).as("c_ppr"))
+        round(col("wc"), 6).as("c_cooc"), round(col("ws"), 6).as("c_sim"),
+        round(col("wp"), 6).as("c_ppr"))
       .orderBy(desc("score"), asc("product_id"))
       .limit(k)
   }

@@ -306,11 +306,17 @@ object Relational {
     * → engine-identical doubles; round(6) per the reference's API precision
     * (`tp1/knoledge_graphs/api.py:47`).
     */
-  def adjacencyNorm(spark: SparkSession, dir: String): DataFrame = {
-    val cnt = coocCounts(spark, dir)
-    val w = Window.partitionBy("src")
-    cnt.withColumn("weight", round(col("cnt") / sum(col("cnt")).over(w), 6))
-      .select("src", "dst", "weight")
+  def adjacencyNorm(spark: SparkSession, dir: String): DataFrame =
+    transitionWeights(coocCounts(spark, dir))
+      .select(col("src"), col("dst"), round(col("weight"), 6).as("weight"))
       .orderBy("src", "dst")
-  }
+
+  /** The transition weights of any (src, dst, cnt) counts, unrounded:
+    * cnt / Σcnt per src. The PageRank edges of
+    * [[graft.algo.PageRank.productEdges]] and [[graft.rec.Engine]], and
+    * [[adjacencyNorm]] before its rounding. */
+  private[graft] def transitionWeights(cnt: DataFrame): DataFrame =
+    cnt.select(col("src"), col("dst"),
+      (col("cnt") / sum(col("cnt")).over(Window.partitionBy("src")))
+        .as("weight"))
 }

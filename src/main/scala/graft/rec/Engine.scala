@@ -5,7 +5,6 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.columnar.InMemoryRelation
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.algo.PageRank
@@ -62,16 +61,6 @@ object Engine {
     require(!g.customers.filter(col("customer_id") === customerId).isEmpty,
       s"unknown customer id: $customerId")
 
-  private def adjacency(g: ProductGraph): DataFrame = {
-    val w = Window.partitionBy("src")
-    g.cooc.select(col("src"), col("dst"),
-      (col("cnt") / sum(col("cnt")).over(w)).as("weight"))
-  }
-
-  private val BlendCooc = 0.4
-  private val BlendSim = 0.3
-  private val BlendPpr = 0.3
-
   /** Bound on memoized per-personalization PageRank entries
     * (`engine.pprRanks:*`): each distinct customer pins one converged
     * rank table (catalog-sized — small, but a long-serving session sees
@@ -95,7 +84,7 @@ object Engine {
     * strategy contribution breakdown the reference's API returns. */
   def recommend(spark: SparkSession, gRaw: ProductGraph, customerId: Long,
       topN: Int = 3): DataFrame =
-    recommendInternal(spark, gRaw, customerId, topN)._1
+    recommendInternal(spark, gRaw, customerId, RecsApi.clampTopN(topN))._1
 
   /** Serving path ([[graft.serve.HttpApi]]): the rows of [[recommend]].
     * A graph within [[ServeLocalRows]] rows is answered by the one-task
@@ -115,41 +104,62 @@ object Engine {
   private[graft] def recommendRowsWithin(spark: SparkSession,
       gRaw: ProductGraph, customerId: Long, topN: Int,
       limit: Long): Array[Row] =
-    serveLocal(spark, gRaw, customerId, Some(RecsApi.clampTopN(topN)), limit)
-      .getOrElse {
-        val (df, perRequest) =
-          recommendInternal(spark, gRaw, customerId, topN)
-        val rows = df.collect()
-        // blocking: the release must be visible before the response
-        // returns (ServeSpec asserts zero steady-state cache growth);
-        // these are request-sized frames, the synchronous unpersist is
-        // microseconds
-        perRequest.foreach(_.unpersist(blocking = true))
-        rows
-      }
+    rowsWithin(spark, gRaw, customerId, Some(RecsApi.clampTopN(topN)), limit)
 
-  private def recommendInternal(spark: SparkSession, gRaw: ProductGraph,
-      customerId: Long, topN: Int): (DataFrame, Seq[DataFrame]) = {
-    // T3: [1,10] clamp, default 3 (api.py:66) — shared with RecsApi
-    val n = RecsApi.clampTopN(topN)
+  /** The serving path of [[recommend]] (`topN` = `Some(n)`, n already
+    * clamped) and [[strategyBreakdown]] (`None`): the [[serveLocal]]
+    * kernel, else the DataFrame answer collected and its per-request
+    * caches released. */
+  private def rowsWithin(spark: SparkSession, g: ProductGraph,
+      customerId: Long, topN: Option[Int], limit: Long): Array[Row] =
+    serveLocal(spark, g, customerId, topN, limit).getOrElse {
+      val (df, perRequest) = topN match {
+        case Some(n) => recommendInternal(spark, g, customerId, n)
+        case None => breakdownInternal(spark, g, customerId)
+      }
+      val rows = df.collect()
+      // blocking: the release must be visible before the response
+      // returns (ServeSpec asserts zero steady-state cache growth);
+      // these are request-sized frames, the synchronous unpersist is
+      // microseconds
+      perRequest.foreach(_.unpersist(blocking = true))
+      rows
+    }
+
+  /** A customer's strategy frames, the one source of
+    * [[recommendInternal]] and [[breakdownInternal]]: the per-request
+    * cached seed set (sp), and either the global ranks (product_id,
+    * score) of a seedless customer, rounded to 6 dp and ordered by
+    * (-score, product_id) (G2, `recommendation.py:52,224-229`), or the
+    * raw scores (product_id, s_cooc), (product_id, s_jacc) and
+    * (product_id, s_ppr), seeds not yet excluded.
+    *
+    * @throws IllegalArgumentException for an unknown customer (P5) */
+  private def strategies(spark: SparkSession, gRaw: ProductGraph,
+      customerId: Long)
+      : (DataFrame, Either[DataFrame, (DataFrame, DataFrame, DataFrame)]) = {
     ensureKnown(gRaw, customerId)
     // cooc feeds both the co-occurrence scores and the PPR adjacency, and
     // the incidence feeds seeds + jaccard sizes + jaccard pairs — cache
-    // the shared inputs so the blend evaluates each subplan once; via the
+    // the shared inputs so each subplan is evaluated once; via the
     // registry so repeated requests over the same graph never re-mark
     val g = gRaw.copy(
       incidence = BuilderCache.ensureCached(spark, "engine.incidence",
         gRaw.incidence),
       cooc = BuilderCache.ensureCached(spark, "engine.cooc", gRaw.cooc))
+    val adjacency = Relational.transitionWeights(g.cooc)
     val seeds = BuilderCache.cacheOnce(g.incidence
       .filter(col("customer_id") === customerId)
       .select(col("product_id").as("sp")))
-    if (seeds.isEmpty) return (globalFallback(spark, g, n), Seq(seeds))
+    if (seeds.isEmpty)
+      return (seeds, Left(PageRank.runMemo(spark, "engine.pprGlobal",
+          g.products.withColumn("pers", lit(1.0)), adjacency)
+        .select(col("id").as("product_id"), round(col("rank"), 6).as("score"))
+        .orderBy(desc("score"), asc("product_id"))))
 
     // seeds (one customer's basket) is data-dependent, not provably
     // bounded, so its inner/outer joins carry NO broadcast hint
-    // (bounded-relation rule) — AQE elects broadcast at runtime. The
-    // LeftAnti seen-exclusion keeps its hint per the guard-list pattern.
+    // (bounded-relation rule) — AQE elects broadcast at runtime.
     // strategy 1: co-occurrence — Σ over seeds of pair counts (A7)
     val cScore = g.cooc.join(seeds, col("src") === col("sp"))
       .groupBy(col("dst").as("product_id"))
@@ -168,65 +178,43 @@ object Engine {
       .select(col("id"), when(col("sp").isNotNull, 1.0).otherwise(0.0)
         .as("pers"))
     boundPprCache(spark)
-    val pScore = PageRank.runMemo(spark, "engine.pprRanks", pers,
-        adjacency(g))
+    val pScore = PageRank.runMemo(spark, "engine.pprRanks", pers, adjacency)
       .select(col("id").as("product_id"), col("rank").as("s_ppr"))
-
-    val cand = cScore
-      .join(jScore, Seq("product_id"), "full_outer")
-      .join(pScore, Seq("product_id"), "full_outer")
-      .select(col("product_id"),
-        coalesce(col("s_cooc"), lit(0L)).as("s_cooc"),
-        coalesce(col("s_jacc"), lit(0.0)).as("s_jacc"),
-        coalesce(col("s_ppr"), lit(0.0)).as("s_ppr"))
-      .join(broadcast(seeds), col("product_id") === col("sp"), "left_anti")
-      // PPR normalizes over its FULL rank dict, seeds included — the
-      // reference's cooc/jaccard loops skip seed candidates while building
-      // their maps (recommendation.py:109-110,117-118) but the PPR map is
-      // the raw rank vector (:135-142); normalizing PPR over non-seed
-      // candidates only would inflate c_ppr (golden C2: 0.136231, not 0.3)
-      .crossJoin(broadcast(
-        pScore.agg(max(col("s_ppr")).as("ppr_max"))))
-    // cooc/jaccard maxes as broadcast scalars too (same pattern as
-    // ppr_max) — A8 max-scaling must not funnel the candidate set into a
-    // single partition, which is what an empty Window.partitionBy() does
-    val candC = BuilderCache.cacheOnce(cand)
-    val maxes = candC.agg(max(col("s_cooc")).as("max_cooc"),
-      max(col("s_jacc")).as("max_jacc"))
-    def norm(c: String, m: String) =
-      when(col(m) > 0, col(c) / col(m)).otherwise(0.0)
-    val out = candC.crossJoin(broadcast(maxes))
-      .withColumn("nc", norm("s_cooc", "max_cooc"))
-      .withColumn("nj", norm("s_jacc", "max_jacc"))
-      .withColumn("np", when(col("ppr_max") > 0,
-        col("s_ppr") / col("ppr_max")).otherwise(0.0))
-      .withColumn("blend", lit(BlendCooc) * col("nc")
-        + lit(BlendSim) * col("nj") + lit(BlendPpr) * col("np"))
-      .filter(col("blend") > 0)
-      .select(col("product_id"),
-        round(col("blend"), 6).as("score"),
-        round(lit(BlendCooc) * col("nc"), 6).as("c_cooc"),
-        round(lit(BlendSim) * col("nj"), 6).as("c_sim"),
-        round(lit(BlendPpr) * col("np"), 6).as("c_ppr"),
-        lit(0.0).as("c_global"))
-      .orderBy(desc("score"), asc("product_id"))
-      .limit(n)
-    (out, Seq(seeds, candC))
+    (seeds, Right((cScore, jScore, pScore)))
   }
 
-  /** G2: seedless customers get the global PageRank top-N, labeled
-    * `global_pagerank` (`recommendation.py:224-229`). */
-  private def globalFallback(spark: SparkSession, g: ProductGraph,
-      topN: Int): DataFrame = {
-    val v = g.products.withColumn("pers", lit(1.0))
-    PageRank.runMemo(spark, "engine.pprGlobal", v, adjacency(g))
-      .select(col("id").as("product_id"),
-        round(col("rank"), 6).as("score"),
-        lit(0.0).as("c_cooc"), lit(0.0).as("c_sim"), lit(0.0).as("c_ppr"),
-        round(col("rank"), 6).as("c_global"))
-      .orderBy(desc("score"), asc("product_id"))
-      .limit(topN)
-  }
+  /** [[recommend]] for a clamped `n`, with the per-request cached frames
+    * its serving path releases. */
+  private def recommendInternal(spark: SparkSession, gRaw: ProductGraph,
+      customerId: Long, n: Int): (DataFrame, Seq[DataFrame]) =
+    strategies(spark, gRaw, customerId) match {
+      case (seeds, Left(global)) =>
+        (global.limit(n).select(col("product_id"), col("score"),
+          lit(0.0).as("c_cooc"), lit(0.0).as("c_sim"), lit(0.0).as("c_ppr"),
+          col("score").as("c_global")), Seq(seeds))
+      case (seeds, Right((cScore, jScore, pScore))) =>
+        // the LeftAnti seen-exclusion keeps its hint per the guard-list
+        // pattern
+        val cand = cScore
+          .join(jScore, Seq("product_id"), "full_outer")
+          .join(pScore, Seq("product_id"), "full_outer")
+          .select(col("product_id"),
+            coalesce(col("s_cooc"), lit(0L)).as("s_cooc"),
+            coalesce(col("s_jacc"), lit(0.0)).as("s_jacc"),
+            coalesce(col("s_ppr"), lit(0.0)).as("s_ppr"))
+          .join(broadcast(seeds), col("product_id") === col("sp"), "left_anti")
+          // PPR normalizes over its FULL rank dict, seeds included — the
+          // reference's cooc/jaccard loops skip seed candidates while
+          // building their maps (recommendation.py:109-110,117-118) but
+          // the PPR map is the raw rank vector (:135-142); normalizing PPR
+          // over non-seed candidates only would inflate c_ppr (golden C2:
+          // 0.136231, not 0.3)
+          .crossJoin(broadcast(
+            pScore.agg(max(col("s_ppr")).as("ppr_max"))))
+        val candC = BuilderCache.cacheOnce(cand)
+        (Recommend.blend(candC, n).withColumn("c_global", lit(0.0)),
+          Seq(seeds, candC))
+    }
 
   /** `strategy_breakdown` (`recommendation.py:70-89`): raw un-normalized
     * per-strategy rankings for debugging. Returns
@@ -245,59 +233,31 @@ object Engine {
   /** [[breakdownRows]] with the kernel's row limit as a parameter. */
   private[graft] def breakdownRowsWithin(spark: SparkSession,
       g: ProductGraph, customerId: Long, limit: Long): Array[Row] =
-    serveLocal(spark, g, customerId, None, limit).getOrElse {
-      val (df, perRequest) = breakdownInternal(spark, g, customerId)
-      val rows = df.collect()
-      perRequest.foreach(_.unpersist(blocking = true))
-      rows
-    }
+    rowsWithin(spark, g, customerId, None, limit)
 
+  /** [[strategyBreakdown]] with the per-request seed cache its serving
+    * path releases: each strategy's scores, seeds excluded, labeled and
+    * rounded to 6 dp. */
   private def breakdownInternal(spark: SparkSession, g: ProductGraph,
-      customerId: Long): (DataFrame, Seq[DataFrame]) = {
-    ensureKnown(g, customerId)
-    val seeds = BuilderCache.cacheOnce(g.incidence
-      .filter(col("customer_id") === customerId)
-      .select(col("product_id").as("sp")))
-    if (seeds.isEmpty)
-      return (PageRank.runMemo(spark, "engine.pprGlobal",
-          g.products.withColumn("pers", lit(1.0)), adjacency(g))
-        .select(lit("global_pagerank").as("strategy"),
-          col("id").as("product_id"), round(col("rank"), 6).as("score"))
-        .orderBy(desc("score"), asc("product_id")), Seq(seeds))
-    def dropSeeds(df: DataFrame): DataFrame =
-      df.join(broadcast(seeds), col("product_id") === col("sp"), "left_anti")
-    // as in recommendInternal: no hint on the unbounded seeds side of
-    // inner/outer joins, AQE decides; the anti-join guard keeps its hint
-    val cScore = dropSeeds(
-      g.cooc.join(seeds, col("src") === col("sp"))
-        .groupBy(col("dst").as("product_id"))
-        .agg(sum("cnt").cast("double").as("score")))
-      .select(lit("co_occurrence").as("strategy"), col("product_id"),
-        round(col("score"), 6).as("score"))
-    val jp = Recommend.jaccardPairsFrom(g.incidence)
-    val sym = jp.select(col("p1").as("a"), col("p2").as("bb"), col("jaccard"))
-      .unionAll(jp.select(col("p2").as("a"), col("p1").as("bb"),
-        col("jaccard")))
-    val jScore = dropSeeds(
-      sym.join(seeds, col("a") === col("sp"))
-        .groupBy(col("bb").as("product_id"))
-        .agg(sum("jaccard").as("score")))
-      .select(lit("similarity").as("strategy"), col("product_id"),
-        round(col("score"), 6).as("score"))
-    val pers = g.products
-      .join(seeds, col("id") === col("sp"), "left_outer")
-      .select(col("id"), when(col("sp").isNotNull, 1.0).otherwise(0.0)
-        .as("pers"))
-    boundPprCache(spark)
-    val pScore = dropSeeds(
-      PageRank.runMemo(spark, "engine.pprRanks", pers, adjacency(g))
-        .select(col("id").as("product_id"), col("rank").as("score")))
-      .select(lit("personalized_pagerank").as("strategy"), col("product_id"),
-        round(col("score"), 6).as("score"))
-    (cScore.unionAll(jScore).unionAll(pScore)
-      .orderBy(asc("strategy"), desc("score"), asc("product_id")),
-      Seq(seeds))
-  }
+      customerId: Long): (DataFrame, Seq[DataFrame]) =
+    strategies(spark, g, customerId) match {
+      case (seeds, Left(global)) =>
+        (global.select(lit("global_pagerank").as("strategy"),
+          col("product_id"), col("score")), Seq(seeds))
+      case (seeds, Right((cScore, jScore, pScore))) =>
+        // the anti-join guard keeps its broadcast hint
+        def strategy(name: String, scores: DataFrame, s: String) =
+          scores
+            .join(broadcast(seeds), col("product_id") === col("sp"),
+              "left_anti")
+            .select(lit(name).as("strategy"), col("product_id"),
+              round(col(s).cast("double"), 6).as("score"))
+        (strategy("co_occurrence", cScore, "s_cooc")
+          .unionAll(strategy("similarity", jScore, "s_jacc"))
+          .unionAll(strategy("personalized_pagerank", pScore, "s_ppr"))
+          .orderBy(asc("strategy"), desc("score"), asc("product_id")),
+          Seq(seeds))
+    }
 
   /** Rows the one-task serving kernel may read per request: the
     * customer's row and basket, `engine.cooc`, the Jaccard pairs and
@@ -495,12 +455,12 @@ object Engine {
     a > b || (a == b && idA < idB)
 
   /** The answer of [[serveLocal]] from its inputs: the arithmetic and
-    * order of [[recommendInternal]] / [[globalFallback]] /
-    * [[breakdownInternal]] over arrays. Empties `out`. */
+    * order of [[recommendInternal]] / [[breakdownInternal]] over arrays.
+    * Empties `out`. */
   private def answer(seeds: mutable.LongMap[Unit], products: Array[Long],
       out: mutable.LongMap[OutEdges], p1: Array[Long], p2: Array[Long],
       jac: Array[Double], topN: Option[Int]): Array[Row] = {
-    // the row-normalized adjacency of [[adjacency]]: cnt / Σcnt per src,
+    // [[Relational.transitionWeights]]: cnt / Σcnt per src,
     // each src's builders dropped as its weights are made; the seeds'
     // out-edges also give the co-occurrence sums
     val sCooc = mutable.LongMap.empty[Long]
@@ -567,18 +527,21 @@ object Engine {
         val maxJacc = cand.iterator.map(sJacc.getOrElse(_, 0.0))
           .foldLeft(0.0)(math.max)
         val maxPpr = sPpr.valuesIterator.foldLeft(0.0)(math.max)
+        // [[Recommend.blend]]'s weighting, term for term
+        val (wCooc, wSim, wPpr) = Recommend.BlendWeights
         val scored = cand.flatMap { id =>
-          val nc = if (maxCooc > 0)
-            sCooc.getOrElse(id, 0L).toDouble / maxCooc else 0.0
-          val nj = if (maxJacc > 0) sJacc.getOrElse(id, 0.0) / maxJacc else 0.0
-          val np = if (maxPpr > 0) sPpr.getOrElse(id, 0.0) / maxPpr else 0.0
-          val blend = BlendCooc * nc + BlendSim * nj + BlendPpr * np
-          if (blend > 0) Some((id, round6(blend), nc, nj, np)) else None
+          val wc = wCooc * (if (maxCooc > 0)
+            sCooc.getOrElse(id, 0L).toDouble / maxCooc else 0.0)
+          val ws = wSim *
+            (if (maxJacc > 0) sJacc.getOrElse(id, 0.0) / maxJacc else 0.0)
+          val wp = wPpr *
+            (if (maxPpr > 0) sPpr.getOrElse(id, 0.0) / maxPpr else 0.0)
+          val blend = wc + ws + wp
+          if (blend > 0) Some((id, round6(blend), wc, ws, wp)) else None
         }
         scored.sortWith((a, b) => byScore(a._1, a._2, b._1, b._2))
-          .take(n).map { case (id, s, nc, nj, np) =>
-            Row(id, s, round6(BlendCooc * nc), round6(BlendSim * nj),
-              round6(BlendPpr * np), 0.0)
+          .take(n).map { case (id, s, wc, ws, wp) =>
+            Row(id, s, round6(wc), round6(ws), round6(wp), 0.0)
           }
     }
   }

@@ -261,7 +261,11 @@ final class HttpApi private[graft] (spark: SparkSession, dir: String,
 object HttpApi {
   // ---- JSON (hand-rolled: values are numbers, strings, null only) ----
 
-  private def jStr(s: String): String =
+  /** `s` as a JSON string literal: quotes, backslashes and every control
+    * character (< 0x20) escaped. The one JSON string escaper of the
+    * server, `graft.Bench`'s summary lines and `graft.Verify`'s oracle
+    * dump, where a raw tab or CR would make `json.load` fail. */
+  private[graft] def jStr(s: String): String =
     "\"" + s.flatMap {
       case '"' => "\\\""
       case '\\' => "\\\\"

@@ -138,14 +138,8 @@ object CorpusStream {
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Distill.sumsOf(
-            graft.operators.Distill.featuredSlice(batch))
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
-        ()
+        EventStream.writeBatch(graft.operators.Distill.sumsOf(
+          graft.operators.Distill.featuredSlice(batch)), batchId, stateDir)
       }
       .start()
 
@@ -223,23 +217,16 @@ object CorpusStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
         val featured = graft.operators.Distill.featuredSlice(batch).cache()
-        graft.operators.Distill.sumsOf(featured)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(stateDir)
+        EventStream.writeBatch(graft.operators.Distill.sumsOf(featured),
+          batchId, stateDir)
         // (0,0,0) on an unsolvable fit mirrors the batch mixQuality
         // convention: q_pred = 0 < qLow ⇒ every row tiers to 0 and
         // drops, exactly what the batch query emits on that state
         val w = runningFitThrough(spark, stateDir, batchId)
           .getOrElse((0.0, 0.0, 0.0))
-        Corpus.mixQualityOf(spark, featured, w, rates, qLow, qHigh)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
+        EventStream.writeBatch(
+          Corpus.mixQualityOf(spark, featured, w, rates, qLow, qHigh),
+          batchId, outDir)
         featured.unpersist()
         ()
       }
@@ -281,11 +268,7 @@ object CorpusStream {
     docs.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        prepareSlice(batch).withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "split")
-          .parquet(outDir)
+        EventStream.writeBatch(prepareSlice(batch), batchId, outDir, "split")
       }
       .start()
 
@@ -464,17 +447,10 @@ object CorpusStream {
           .select("doc_id").distinct()
         val kept = prepareSlice(
           batch.join(dupIds, Seq("doc_id"), "left_anti")).cache()
-        kept.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "split")
-          .parquet(outDir)
-        bands.join(kept.select("doc_id"), Seq("doc_id"), "left_semi")
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id", "band")
-          .parquet(stateDir)
+        EventStream.writeBatch(kept, batchId, outDir, "split")
+        EventStream.writeBatch(
+          bands.join(kept.select("doc_id"), Seq("doc_id"), "left_semi"),
+          batchId, stateDir, "band")
         bands.unpersist()
         kept.unpersist()
         ()

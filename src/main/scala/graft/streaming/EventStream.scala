@@ -534,15 +534,19 @@ object EventStream {
     df.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.withColumn("batch_id", lit(batchId))
-          .write.mode("overwrite")
-          // per-write option, NOT session conf: only the partitions in
-          // this batch (its own batch_id dir) are replaced
-          .option("partitionOverwriteMode", "dynamic")
-          .partitionBy("batch_id")
-          .parquet(outDir)
+        writeBatch(batch, batchId, outDir)
       }
       .start()
+
+  private[graft] def writeBatch(batch: DataFrame, batchId: Long,
+      dir: String, parts: String*): Unit =
+    batch.withColumn("batch_id", lit(batchId))
+      .write.mode("overwrite")
+      // per-write option, NOT session conf: only the partitions in
+      // this batch (its own batch_id dir) are replaced
+      .option("partitionOverwriteMode", "dynamic")
+      .partitionBy("batch_id" +: parts: _*)
+      .parquet(dir)
 
   /** Drive a streaming frame to completion into an in-memory table —
     * batch-parity harness for tests (spark_guide.md: memory sink +
