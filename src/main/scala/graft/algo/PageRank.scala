@@ -24,31 +24,25 @@ import graft.operators.Relational
   *   - convergence on Σ|Δrank| < tol (`recommendation.py:175-178`).
   *
   * Catalyst cannot express a convergence loop, so this is the one operator
-  * that drops below the DataFrame API (SURVEY §4.2). It is a co-partitioned
-  * RDD loop rather than GraphX `Pregel`: Pregel has no per-iteration global
-  * aggregate for the sink/teleport terms, and a hand-rolled
-  * `aggregateMessages` loop re-derives the replicated vertex view each
-  * step, growing per-iteration cost super-linearly unless Pregel's exact
-  * materialization discipline is replicated (measured: 4-node toy graph,
-  * 10 iters ≈ 5 s, 20 iters > 5 min). The RDD loop makes the physics
-  * explicit and cheap:
-  *   - edges and vertex state share one HashPartitioner → the edge⋈rank
-  *     join and the state⋈contribs join are narrow (no shuffle);
-  *   - the only shuffle per iteration is the reduceByKey of contributions
-  *     on dst — identical to what Pregel/aggregateMessages would shuffle;
-  *   - one action per iteration (fused L1-delta + next sink mass reduce);
-  *   - `localCheckpoint` EVERY iteration truncates lineage so 50
-  *     iterations stay O(iterations), not O(iterations²) — and, as
-  *     important at scale, releases the previous iteration's shuffle
-  *     files for cleanup: shuffle files stay on disk while any live
-  *     lineage references their ShuffleDependency, so an 8-iteration
-  *     cadence held ~8 edge-sized shuffle generations live at once
-  *     (measured: the sf10 rec_blend_fixed dump accumulated >70 GB and
-  *     disk-died; per-iteration truncation + the driver's periodic GC
-  *     caps live shuffle at ~1 generation). The checkpoint itself is
-  *     free-ish: `stepped` is already cached and immediately reduced,
-  *     and vertex state is orders of magnitude smaller than the
-  *     per-iteration edge shuffle it releases.
+  * that drops below the DataFrame API (SURVEY §4.2): a co-partitioned RDD
+  * loop, not GraphX `Pregel`, which has no per-iteration global aggregate
+  * for the sink/teleport terms (a hand-rolled `aggregateMessages` loop
+  * re-derives the replicated vertex view each step: 4-node toy graph,
+  * 10 iterations ≈ 5 s, 20 > 5 min). Its rounds run under [[Fixpoint]],
+  * which owns the cap, the stop test and the per-round record. Each
+  * round:
+  *   - joins edges and vertex state under one HashPartitioner, so both
+  *     joins are narrow; the one shuffle is the reduceByKey of
+  *     contributions on dst, what Pregel would shuffle too;
+  *   - runs one action, the fused L1-delta + next sink mass reduce,
+  *     whose delta is the round's record;
+  *   - `localCheckpoint`s the new state. That keeps 50 rounds
+  *     O(rounds), not O(rounds²), and releases the previous round's
+  *     shuffle files, which stay on disk while any live lineage
+  *     references their ShuffleDependency (an 8-round cadence held ~8
+  *     edge-sized generations live: >70 GB at sf10). The state is
+  *     already cached and immediately reduced, and orders of magnitude
+  *     smaller than the edge shuffle it releases.
   * At 100 TB the same structure holds: edges partitioned once, ~50 narrow
   * stages + 50 shuffles bounded by |V| message traffic.
   */
@@ -63,21 +57,11 @@ object PageRank {
       damping: Double = 0.85, tol: Double = 1e-6, maxIter: Int = 50,
       localThreshold: Long = 8L * 1000 * 1000)
 
-  /** @param vertices (id: Long, pers: Double) — every node, raw
-    *                 (un-normalized) personalization weights
-    * @param edges    (src: Long, dst: Long, weight: Double) — row-normalized
-    *                 transition weights (out-weights sum to 1 per src)
-    * @return (id: Long, rank: Double), Σrank ≈ 1
-    */
-  /** Per-source adjacency as parallel primitive arrays. NOT
-    * `Array[(Long, Double)]`: an array of tuples is an object per edge
-    * (~56 B of header/box/pointer for 16 B of payload), which at the
-    * sf30 co-purchase graph (720 M edges) is ~40 GB of heap for ~11 GB
-    * of data — the round-17 run where `cache()` partitions
-    * (782 MiB each, deserialized) failed storage admission and the
-    * adjacency was silently REBUILT from the groupByKey shuffle every
-    * iteration. Primitive `Array[Long]`/`Array[Double]` pairs hold the
-    * same edges at ~16 B each, in memory and on the wire. */
+  /** Per-source adjacency as parallel primitive arrays, ~16 B an edge
+    * in memory and on the wire. NOT `Array[(Long, Double)]`: an object
+    * per edge (~56 B for 16 B of payload) is ~40 GB of heap for the
+    * sf30 graph's 720 M edges, whose partitions then fail storage
+    * admission and rebuild from the groupByKey shuffle every round. */
   private[graft] type Adj = (Array[Long], Array[Double])
 
   /** Session-level memo of the grouped adjacency, keyed by the edge
@@ -116,32 +100,21 @@ object PageRank {
           .map { case (s, d, w) => (s, (d, w)) }
           .persist(StorageLevel.MEMORY_AND_DISK_SER)
         val m = eRaw.count()
-        // Partition the iteration by graph size, not cluster width:
-        // vertices dominate task sizing once edges are grouped to
-        // adjacency lists; edges matter via the flatMap emission volume.
-        // Tiny graphs on defaultParallelism partitions are pure
-        // scheduling overhead across 50 iterations. NO cluster-width
-        // cap (the pre-r17 `defaultParallelism * 4` min): the cap
-        // contradicted the comment above — at the sf30 graph (720 M
-        // edges) it clamped 360 data-sized partitions to 128, and the
-        // per-iteration reduceByKey's map-side combine then held a
-        // near-|V|-entry AppendOnlyMap in EVERY concurrent task
-        // (~5.6 M edges/task reach ~all 6 M dst keys), 32 of which
-        // doubling their tables together heap-OOM'd a 64 g driver.
-        // Edge-sized tasks (~2 M edges) keep the combine map bounded
-        // by the keys one task's edges actually touch; the scheduling
-        // cost of more tasks per iteration is noise next to it.
+        // Partition by graph size, not cluster width: tiny graphs on
+        // defaultParallelism partitions are pure scheduling overhead
+        // across 50 rounds, and no cluster-width cap either — edge-sized
+        // tasks (~2 M edges) keep each reduceByKey map-side combine
+        // bounded by the keys one task's edges touch, where a capped
+        // count (sf30: 128 tasks of ~5.6 M edges reaching ~all 6 M dst
+        // keys) heap-OOM'd a 64 g driver.
         val numParts = math.max(1, math.min(4096,
           math.ceil(math.max(n / 100000.0, m / 2000000.0)).toInt))
         val p = new HashPartitioner(numParts)
-        // MEMORY_AND_DISK_SER, not cache(): the adjacency is the one
-        // structure the loop touches every iteration, so a partition
-        // that fails memory admission must land on local disk — a miss
-        // here silently re-runs the groupByKey SHUFFLE once per
-        // iteration (observed at sf30 before this was explicit). The
-        // serialized form is also the compact one (primitive arrays,
-        // see [[Adj]]), so at 100 TB the working set is edge bytes,
-        // not JVM object graphs.
+        // MEMORY_AND_DISK_SER, not cache(): the loop reads the
+        // adjacency every round, so a partition that fails memory
+        // admission must land on local disk — a miss re-runs the
+        // groupByKey SHUFFLE each round. Serialized primitive arrays
+        // (see [[Adj]]) keep the working set at edge bytes.
         val grouped = eRaw.groupByKey(p)
           .mapValues { it =>
             val a = it.toArray
@@ -266,6 +239,12 @@ object PageRank {
     (ids, rank)
   }
 
+  /** @param vertices (id: Long, pers: Double) — every node, raw
+    *                 (un-normalized) personalization weights
+    * @param edges    (src: Long, dst: Long, weight: Double) — row-normalized
+    *                 transition weights (out-weights sum to 1 per src)
+    * @return (id: Long, rank: Double), Σrank ≈ 1
+    */
   def run(spark: SparkSession, vertices: DataFrame, edges: DataFrame,
       params: Params = Params()): DataFrame = {
     import spark.implicits._
@@ -289,26 +268,18 @@ object PageRank {
     val hasOut: RDD[(Long, Boolean)] = eBySrc.mapValues(_ => true)
 
     // state: id -> (rank, pers, isSink); co-partitioned with edges
-    var state: RDD[(Long, (Double, Double, Boolean))] = vRaw
+    val state0: RDD[(Long, (Double, Double, Boolean))] = vRaw
       .mapValues(p => if (persTotal > 0) p / persTotal else 1.0 / n)
       .partitionBy(part)
       .leftOuterJoin(hasOut, part)
       .mapValues { case (p, out) => (1.0 / n, p, out.isEmpty) }
       .cache()
-    var sinkMass = state
+    val sinkMass0 = state0
       .map { case (_, (r, _, s)) => if (s) r else 0.0 }.sum()
 
     val d = params.damping
-    var iter = 0
-    var delta = Double.MaxValue
-    // env-gated per-iteration instrumentation (round-13: the SCALING.md
-    // distributed-loop timing at sf10); zero cost
-    // when unset, and it adds no action: the timed reduce below is the
-    // loop's one action either way
-    val logIters = sys.env.contains("SPARK_GRAFT_PR_LOG")
-    while (iter < params.maxIter && delta >= params.tol) {
-      val iterT0 = System.nanoTime()
-      val sm = sinkMass
+    val (state, _) = Fixpoint.run("pagerank", (state0, sinkMass0),
+        params.maxIter)(_ < params.tol) { case ((state, sm), _) =>
       val contribs = eBySrc.join(state, part)
         .flatMap { case (_, ((dsts, ws), (r, _, _))) =>
           Iterator.tabulate(dsts.length)(k => (dsts(k), ws(k) * r)) }
@@ -323,14 +294,8 @@ object PageRank {
       val (dl, nsm) = stepped
         .map { case (_, (nr, _, s, ad)) => (ad, if (s) nr else 0.0) }
         .reduce((a, b) => (a._1 + b._1, a._2 + b._2))
-      delta = dl
-      sinkMass = nsm
       state.unpersist(blocking = false)
-      state = stepped.mapValues { case (nr, p, s, _) => (nr, p, s) }
-      iter += 1
-      if (logIters)
-        println(f"PRITER iter=$iter delta=$delta%.3e " +
-          f"sec=${(System.nanoTime() - iterT0) / 1e9}%.2f")
+      ((stepped.mapValues { case (nr, p, s, _) => (nr, p, s) }, nsm), dl, n)
     }
     state.map { case (id, (r, _, _)) => (id, r) }.toDF("id", "rank")
   }

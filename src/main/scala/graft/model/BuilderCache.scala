@@ -2,7 +2,8 @@ package graft.model
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.functions.{count, count_if, lit}
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Session-level registry for the shared cached builders (co-occurrence
@@ -57,6 +58,22 @@ object BuilderCache {
     * so the PlanSpec sweeps see the full plan instead. */
   def checkpoint(df: DataFrame): DataFrame =
     if (bypass.value) df else df.localCheckpoint()
+
+  /** [[checkpoint]] that also counts `df`'s rows and the rows where
+    * `changed` holds, by an `Observation` that completes with the eager
+    * cut's own action: no job of its own. Inside [[uncached]] there is
+    * no cut to ride, so no counts. */
+  def checkpointCounting(df: DataFrame, changed: Column = lit(false))
+      : (DataFrame, Option[(Long, Long)]) =
+    if (bypass.value) (df, None)
+    else {
+      val obs = Observation()
+      val cut = checkpoint(df.observe(obs, count(lit(1)).as("rows"),
+        count_if(changed).as("changed")))
+      val m = obs.get
+      (cut, Some((m("rows").asInstanceOf[Long],
+        m("changed").asInstanceOf[Long])))
+    }
 
   /** (sessionKey, builderKey) → the shared cached DataFrame. */
   private val entries = TrieMap.empty[(String, String), DataFrame]

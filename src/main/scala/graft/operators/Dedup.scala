@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.algo.Fixpoint
 import graft.model.{BuilderCache, Tables}
 import graft.operators.TextOps.h32
 
@@ -625,40 +626,38 @@ object Dedup {
     * O(diameter). Each round is two equi-joins + an agg on the label
     * table (one row per node appearing in a pair — bounded by 2×|pairs|,
     * which the candidate generators' guards bound in turn; the full
-    * corpus never enters the loop). `localCheckpoint` truncates the
-    * iterative lineage exactly as [[graft.algo.PageRank]] does, and the
-    * loop stops the first round nothing changes (converged is proven,
-    * not assumed — `require` fails loudly rather than returning a
-    * half-merged clustering).
+    * corpus never enters the loop). The rounds run under
+    * [[graft.algo.Fixpoint]] and stop after the first that changed no
+    * label: converged is proven, a loop that reaches `maxRounds` fails.
+    * Each round's labels are cut by [[BuilderCache.checkpointCounting]],
+    * whose one action also counts the changed labels. Inside
+    * [[BuilderCache.uncached]] nothing is cut: the plan is the whole
+    * unrolled loop down to the pair pipeline's scans, and each round
+    * counts with a direct aggregate.
     *
     * Output: (doc_id, cluster_id, is_survivor), cluster_id = min doc_id
     * of the component. Oracle-checked via DuckDB's recursive-CTE
     * transitive closure — unusual for a distributed CC implementation. */
   def dupClusters(pairs: DataFrame, maxRounds: Int = 50): DataFrame = {
-    val edges = pairs
+    // pairs may be a full query — cut, so it runs ONCE
+    val edges = BuilderCache.checkpoint(pairs
       .select(col("p1").as("a"), col("p2").as("b"))
-      .unionAll(pairs.select(col("p2").as("a"), col("p1").as("b")))
-      .localCheckpoint(true) // pairs may be a full query — run it ONCE
+      .unionAll(pairs.select(col("p2").as("a"), col("p1").as("b"))))
     // round 0 fused into initialization: label = min(self, neighbors) —
     // the identity-label round's hop join is a no-op, so starting from
     // the neighbor-min saves one full iteration
-    var labels = edges.groupBy("a").agg(min("b").as("nmin"))
-      .select(col("a").as("v"), least(col("a"), col("nmin")).as("lbl"))
-      .localCheckpoint(true)
-    var round = 0
-    var converged = false
-    while (!converged && round < maxRounds) {
+    val init = BuilderCache.checkpoint(
+      edges.groupBy("a").agg(min("b").as("nmin"))
+        .select(col("a").as("v"), least(col("a"), col("nmin")).as("lbl")))
+    val labels = Fixpoint.run("dupClusters", init, maxRounds,
+        mustConverge = true)(_ == 0) { (labels, _) =>
       val nbr = edges.join(labels, col("b") === col("v"))
         .groupBy(col("a")).agg(min("lbl").as("nmin"))
       val hop = labels.as("x")
         .join(labels.as("y"), col("x.lbl") === col("y.v"))
         .select(col("x.v").as("a2"), col("y.lbl").as("hmin"))
-      // prev rides along so convergence is a filter over the checkpoint,
-      // not another join against the previous round. The checkpoint is
-      // LAZY and the convergence count is the action that materializes
-      // it: one job per round (the count's scan computes and persists
-      // every checkpoint partition on the way through), vs the old
-      // eager-checkpoint-then-isEmpty's two.
+      // prev rides along so the changed-label count is an aggregate
+      // over the round's own rows, taken on the cut's action
       val next = labels
         .join(nbr, col("v") === col("a"), "left_outer")
         .join(hop, col("v") === col("a2"), "left_outer")
@@ -666,12 +665,14 @@ object Dedup {
           coalesce(col("nmin"), col("lbl")),
           coalesce(col("hmin"), col("lbl"))).as("lbl"),
           col("lbl").as("prev"))
-        .localCheckpoint(false)
-      converged = next.filter(col("lbl") =!= col("prev")).count() == 0L
-      labels = next.select("v", "lbl")
-      round += 1
+      val changed = col("lbl") =!= col("prev")
+      val (cut, counts) = BuilderCache.checkpointCounting(next, changed)
+      val (rows, nChanged) = counts.getOrElse {
+        val r = next.agg(count(lit(1)), count_if(changed)).head()
+        (r.getLong(0), r.getLong(1))
+      }
+      (cut.select("v", "lbl"), nChanged.toDouble, rows)
     }
-    require(converged, s"dupClusters did not converge in $maxRounds rounds")
     labels.select(col("v").as("doc_id"), col("lbl").as("cluster_id"),
       (col("v") === col("lbl")).as("is_survivor"))
   }

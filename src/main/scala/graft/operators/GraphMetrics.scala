@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.algo.Fixpoint
 import graft.model.BuilderCache
 
 /** Structural graph metrics over the derived co-purchase graph — the
@@ -137,8 +138,8 @@ object GraphMetrics {
     * graphs). Nothing is hinted: frontier size is data-dependent (565 →
     * 9 392 → 38 on sf0.01's near-saturating co-purchase graph), so AQE
     * elects broadcast per level from measured sizes. maxHops is a fixed
-    * small constant → a statically unrolled loop of one materializing
-    * action per level (eager localCheckpoint, see below) — the visited
+    * small constant → exactly maxHops [[graft.algo.Fixpoint]] rounds,
+    * one materializing action per level (see below) — the visited
     * set lives as a union chain of checkpointed level frames, never
     * driver-collected. */
   def reachHops(spark: SparkSession, dir: String, nSeeds: Int = 5,
@@ -149,41 +150,15 @@ object GraphMetrics {
     * relation — the fixture-testable form. */
   private[graft] def reachHopsOf(cc: DataFrame, nSeeds: Int = 5,
       maxHops: Int = 3): DataFrame = {
-    // Each level is materialized once (BuilderCache.checkpoint): level
-    // h's frame is referenced three times downstream (result union, the
-    // next level's frontier, and every later level's visited
-    // anti-join), and without the lineage cut each reference
-    // re-executes the whole join chain back to the seeds — measured
-    // 2.8× slower at sf0.1 (8.9 s → 3.2 s warm). Frames are level sets
-    // (≤ nSeeds·|V| rows), never path sets, so the materialization is
-    // bounded.
-    // Partition the edge list by the join vertex ONCE and iterate over
-    // the CACHED result (round 17; the distributed-PageRank discipline —
-    // edges and state share one partitioner): every level's frontier
-    // join keys on `src`, and without this each level re-ran the
-    // identical edge exchange — maxHops full shuffles of the edge list
-    // for one query (stage profile: 3 × 22 MB edge shuffles at sf0.1).
-    // Cache, NOT localCheckpoint: a checkpoint's LogicalRDD advertises
-    // no output partitioning (verified on this Spark — EnsureRequirements
-    // re-inserted the exchange above a checkpointed repartition), while
-    // an InMemoryRelation preserves its cached plan's hashpartitioning,
-    // so levels 1..maxHops all consume the one materialized layout with
-    // no further edge exchange; only the (bounded) frontier side moves
-    // per level — the shape that matters at 100 TB, where the edge list
-    // is the big side (guide §2.4). Registered in BuilderCache (the
-    // shared-builder policy: releasable, listed, bypassed under plan
-    // inspection). The partition COUNT is pinned to the session's
-    // shuffle parallelism (conf-driven — cpus locally, cluster-sized on
-    // a real deployment) because a count-less repartition(col) is
-    // AQE-coalescible below what the level joins require.
-    // Registry-scope contract (r17 advice): memoByPlan keys on the
-    // caller's cc PLAN, so the production reachHops(dir) path pins
-    // exactly one entry per table dir (coocCounts is itself memoized —
-    // a stable plan), while fixture/ad-hoc callers pin one entry per
-    // distinct input frame for the life of their session and must
-    // BuilderCache.release when long-lived — the cacheOnce per-request
-    // discipline. Test sessions are per-suite and drop with the
-    // session, which is why the suites carry no explicit release.
+    require(maxHops >= 1, s"reach_hops needs maxHops >= 1, got $maxHops")
+    // The edge list is partitioned by the join vertex ONCE and cached:
+    // every level's join on `src` reads that layout, and only the
+    // frontier moves (3 × 22 MB edge shuffles at sf0.1 without it). Not a
+    // checkpoint: its LogicalRDD advertises no output partitioning, an
+    // InMemoryRelation keeps it. The count is pinned because a count-less
+    // repartition(col) is AQE-coalescible below what the joins require.
+    // memoByPlan keys on cc's plan: one entry per table dir for
+    // reachHops(dir); long-lived ad-hoc callers must release theirs.
     val edges = BuilderCache.memoByPlan(
         cc.sparkSession, "reachEdges", cc) {
       cc.select("src", "dst").repartition(
@@ -191,27 +166,29 @@ object GraphMetrics {
     }
     val seeds = edges.select("src").distinct().orderBy("src").limit(nSeeds)
       .select(col("src").as("seed"))
-    val h1 = BuilderCache.checkpoint(
-      seeds.join(edges, col("seed") === col("src"))
-        .filter(col("dst") =!= col("seed"))
-        .select(col("seed"), col("dst").as("v")).distinct()
-        .withColumn("hops", lit(1L)))
-    var visited = h1.select("seed", "v")
-    var frontier = h1
-    var acc = h1
-    for (h <- 2 to maxHops) {
-      val next = BuilderCache.checkpoint(
+    // Each level is cut once, its rows counted on the cut's action: it
+    // is read by the result union, the next frontier and every later
+    // anti-join, and uncut each read re-runs the chain (2.8× at sf0.1).
+    // Inside BuilderCache.uncached nothing is cut or counted: no job.
+    val levels = Fixpoint.run("reach_hops", Vector.empty[DataFrame],
+        maxHops)(_ => false) { (levels, h) =>
+      val reached = levels.lastOption.fold(
+        seeds.join(edges, col("seed") === col("src"))) { frontier =>
         frontier.select(col("seed"), col("v").as("u"))
           .join(edges, col("u") === col("src"))
-          .filter(col("dst") =!= col("seed"))
-          .select(col("seed"), col("dst").as("v")).distinct()
-          .join(visited, Seq("seed", "v"), "left_anti")
-          .withColumn("hops", lit(h.toLong)))
-      acc = acc.unionByName(next)
-      visited = visited.unionByName(next.select("seed", "v"))
-      frontier = next
+      }
+      val fresh = reached.filter(col("dst") =!= col("seed"))
+        .select(col("seed"), col("dst").as("v")).distinct()
+      val unseen = if (levels.isEmpty) fresh else fresh.join(
+        levels.map(_.select("seed", "v")).reduce(_ unionByName _),
+        Seq("seed", "v"), "left_anti")
+      val (next, counts) = BuilderCache.checkpointCounting(
+        unseen.withColumn("hops", lit(h.toLong)))
+      val rows = counts.fold(-1L)(_._1)
+      (levels :+ next, rows.toDouble, rows)
     }
-    acc.select(col("seed"), col("v").as("product_id"), col("hops"))
+    levels.reduce(_ unionByName _)
+      .select(col("seed"), col("v").as("product_id"), col("hops"))
       .orderBy("seed", "hops", "product_id")
   }
 

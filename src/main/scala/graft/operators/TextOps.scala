@@ -700,42 +700,28 @@ object TextOps {
     * the join char is safe here: corpus tokens are `[a-z0-9]+`, and
     * split-derived tokens can never contain the space separator.
     *
-    * Iterative like [[graft.algo.PageRank]]'s fixed-step twins: the loop
-    * is a driver-side unroll of nMerges deterministic rounds, each
-    * collecting exactly ONE row (the winning pair — a bounded collect,
-    * same contract as the 1-row min seed in SparkEntry). Scale posture:
-    * the token stream itself NEVER shuffles — each round is scan →
-    * map-only pair extraction → partial-aggregated count shuffle whose
-    * key space is bounded by distinct-pair cardinality (≤ vocab², not
-    * corpus size) → top-1. Merge application is map-only, so round k's
-    * corpus is a replace composition pipelined into the same scan
-    * stage. A realistic tokenizer runs 10³–10⁴·5 merges, so the chain
-    * depth is CAPPED: every [[BpeCheckpointEvery]] rounds the rewritten
-    * corpus is cut ([[graft.model.BuilderCache.checkpoint]]) — plan
-    * depth and codegen nesting stay ≤ the cadence no matter how many
-    * rounds run, and each round's count pass
-    * re-scans at most BpeCheckpointEvery replaces past the last
-    * materialization instead of the whole merge history. Checkpoint
-    * frames are corpus-sized strings at MEMORY_AND_DISK
-    * (⌈nMerges/cadence⌉ of them, evictable); on a cluster the same
-    * cadence would use reliable checkpoints and unpersist the
-    * superseded frame once the next one lands. BpeSpec's depth test
-    * pins nMerges = 64 (4 checkpoint generations) against the
-    * independent reference;
-    * measured 64-round walls: 21.6 s cold sf0.01, 46.3 s sf0.1
-    * (SCALING.md round-11 section has the cadence A/B).
+    * The rounds are [[bpeLearn]]'s, under [[graft.algo.Fixpoint]], each
+    * collecting exactly ONE row (the winning pair — a bounded collect).
+    * Scale posture: the token stream NEVER shuffles — each round is
+    * scan → map-only pair extraction → a count shuffle keyed by distinct
+    * pair (≤ vocab², not corpus size) → top-1, and the merge apply is
+    * map-only, pipelined into the next round's scan. A realistic
+    * tokenizer runs 10³–10⁴·5 merges, so every [[BpeCheckpointEvery]]
+    * rounds the rewritten corpus is cut: plan depth and codegen nesting
+    * stay ≤ the cadence, and each count re-scans at most that many
+    * replaces past the last cut. The cuts are corpus-sized strings at
+    * MEMORY_AND_DISK (⌈nMerges/cadence⌉ of them, evictable); a cluster
+    * would use reliable checkpoints and unpersist the superseded one.
+    * BpeSpec's depth test pins nMerges = 64 (4 cut generations) against
+    * the independent reference; 64-round walls: 21.6 s cold sf0.01,
+    * 46.3 s sf0.1 (SCALING.md round-11 has the cadence A/B).
     *
-    * The incremental-counting refinement (update pair counts only
-    * around rewritten occurrences instead of recounting the corpus —
-    * the learn_bpe.py trick) is deliberately NOT taken here: per-round
-    * deltas require carrying a mutable pair-count state across rounds
-    * (a 2nd stateful frame to shuffle or a driver-held map of up to
-    * vocab² entries), and on this engine the full recount is one
-    * map-side-combined shuffle of ≤ distinct-pair cardinality — at
-    * sf0.01 the measured 64-round wall time is dominated by fixed
-    * per-job scheduling overhead, not counting (see SCALING.md), so the
-    * delta path would buy nothing until corpora where a single scan is
-    * minutes; it composes with this loop unchanged if that day comes. */
+    * Incremental counting (learn_bpe.py's update of pair counts around
+    * rewritten occurrences) is deliberately NOT taken: it carries a
+    * mutable pair-count state across rounds (a 2nd stateful frame or a
+    * driver map of up to vocab² entries), while the full recount is one
+    * map-side-combined shuffle, and the measured 64-round wall at sf0.01
+    * is per-job scheduling, not counting (SCALING.md). */
   def bpeMerges(spark: SparkSession, dir: String,
       nMerges: Int = 4): DataFrame =
     // Session-memoized (the simhash/pagerank-fixpoint pattern): the
@@ -754,12 +740,9 @@ object TextOps {
     }
 
   /** Plan-depth cap for [[bpeLearn]]: rounds between lineage cuts of
-    * the rewritten table. Measured at sf0.1 with the 64-round depth
-    * test's workload — see the SCALING.md round-11
-    * section for the cadence A/B that picked this value (and the
-    * round-13 section re-validating it for the byte domain). Cadence
-    * changes materialization boundaries, never merge results (BpeSpec's
-    * 64-round parity cases cross checkpoint generations). */
+    * the rewritten table, picked by SCALING.md's round-11 cadence A/B
+    * (round 13 re-validates it for the byte domain). Cadence moves cuts,
+    * never merge results (BpeSpec's 64-round cases cross generations). */
   val BpeCheckpointEvery: Int = 16
 
   /** One BPE merge application, the doubled-space replace both the
@@ -797,21 +780,17 @@ object TextOps {
     * f: long weight) table, shared by both granularities: word level
     * passes one row per document with f = 1 and glues merges with `_`,
     * byte level passes its word-type table and glues with "". Each
-    * round is ONE Spark job: map-only pair extraction, a
-    * partial-aggregated Σf shuffle keyed by distinct pair, and a 1-row
-    * TakeOrderedAndProject collect of the winner by (count DESC, lhs
-    * ASC, rhs ASC). The merge apply is map-only, pipelined into the
-    * next round's scan; every [[BpeCheckpointEvery]] rounds the
-    * rewritten table is cut to cap plan depth. `raw` says the input
-    * `s` is raw text (see [[bpeApply]]). */
+    * [[graft.algo.Fixpoint]] round is ONE Spark job, the 1-row collect
+    * of the winner by (count DESC, lhs ASC, rhs ASC), whose count is the
+    * round's delta (see [[bpeMerges]] for the scale posture). `raw` says
+    * the input `s` is raw text (see [[bpeApply]]). */
   private def bpeLearn(spark: SparkSession, table: DataFrame, nMerges: Int,
       glue: String, raw: Boolean): DataFrame = {
     import spark.implicits._
-    var cur = table
-    val merges = scala.collection.mutable.ArrayBuffer.empty[
-      (Int, String, String, String, Long)]
-    var step = 1
-    while (step <= nMerges) {
+    val none = Vector.empty[(Int, String, String, String, Long)]
+    // a round with no pair left records delta 0 and ends the loop
+    val (_, merges) = graft.algo.Fixpoint.run("bpe_learn", (table, none),
+        nMerges)(_ == 0) { case ((cur, merges), step) =>
       val winner = cur
         .select(split(col("s"), " ").as("t"), col("f"))
         .select(explode(expr(
@@ -828,16 +807,15 @@ object TextOps {
       winner.headOption match {
         case Some((a, b, cnt)) =>
           val m = a + glue + b
-          merges += ((step, a, b, m, cnt))
-          cur = cur.select(
+          val next = cur.select(
             bpeApply(col("s"), a, b, m, raw && step == 1).as("s"), col("f"))
-        case None => step = nMerges // no pair left: nothing to merge
+          val cut = if (step % BpeCheckpointEvery == 0 && step < nMerges)
+            graft.model.BuilderCache.checkpoint(next) else next
+          ((cut, merges :+ ((step, a, b, m, cnt))), cnt.toDouble, -1L)
+        case None => ((cur, merges), 0.0, -1L)
       }
-      if (step % BpeCheckpointEvery == 0 && step < nMerges)
-        cur = graft.model.BuilderCache.checkpoint(cur)
-      step += 1
     }
-    merges.toSeq
+    merges
       .toDF("step", "lhs", "rhs", "merged", "pair_count")
       .orderBy("step")
   }

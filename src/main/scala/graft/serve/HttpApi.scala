@@ -87,6 +87,10 @@ final class HttpApi private[graft] (spark: SparkSession, dir: String,
   // tests (SURVEY §3.1 via FIXTURES §A.2) serve the exact toy
   // ProductGraph; production servers use the order-derived default
   private val g = graph.getOrElse(Engine.fromOrders(spark, dir))
+  // Headers and body go out in separate writes: without TCP_NODELAY the
+  // client's delayed ACK holds the body ~40 ms. Read once, when the JDK
+  // server's config class loads, so set before the first server.
+  System.setProperty("sun.net.httpserver.nodelay", "true")
   private val server =
     HttpServer.create(new InetSocketAddress("127.0.0.1", port), 0)
   // null executor = the dispatcher thread handles every exchange in

@@ -20,7 +20,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * the last run adds its per-stage table, the Catalyst phases and
   * join/exchange census of the write that ran, and the residual: wall
   * time outside every stage and outside those phases (construct-time
-  * analysis, driver work, scheduling gaps).
+  * analysis, driver work, scheduling gaps). Last come the round records
+  * ([[graft.algo.Fixpoint]]) of every fixpoint loop the runs ran — a
+  * memoized fixpoint runs only in run 1 — one `fixpoint` line per round.
   *
   * Usage: SPARK_GRAFT_SF_DIR=<dir> runMain graft.tools.Profile <query>...
   * build.sbt sizes the driver heap from the same variable. */
@@ -77,6 +79,7 @@ object Profile extends AdaptiveSparkPlanHelper {
       out += f"run $i  construct $constructS%.2f s  wall $wallS%.2f s"
       wallS
     }
+    val loopsBefore = graft.algo.Fixpoint.lastRuns
     (1 until Runs).foreach(run)
     val sc = spark.sparkContext
     sc.addSparkListener(stageListener)
@@ -124,6 +127,10 @@ object Profile extends AdaptiveSparkPlanHelper {
     val phaseS = phases.map(_._2).sum / 1e3
     out += f"residual ${lastWallS - stageWallS - phaseS}%.2f s  " +
       f"(wall $lastWallS%.2f - stages $stageWallS%.2f - phases $phaseS%.2f)"
+    // each finished run of a loop publishes a new record list
+    for ((loop, rounds) <- graft.algo.Fixpoint.lastRuns.toSeq.sortBy(_._1)
+         if !loopsBefore.get(loop).exists(_ eq rounds))
+      rounds.foreach(out += _.line)
     out.result()
   }
 }

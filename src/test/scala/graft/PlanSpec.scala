@@ -123,6 +123,19 @@ class PlanSpec extends SparkSpec {
     graft.model.BuilderCache.uncached(body)
   }
 
+  test("dedup_clusters under uncachedSweep plans its whole pair pipeline " +
+      "(no LogicalRDD leaf) and answers the cached build's rows") {
+    val cached = graft.operators.Dedup.dedupClusters(spark, dir).collect()
+    val (leaves, rows) = uncachedSweep {
+      val df = graft.operators.Dedup.dedupClusters(spark, dir)
+      (df.queryExecution.optimizedPlan.collectLeaves(), df.collect())
+    }
+    assert(leaves.nonEmpty && leaves.forall(_.isInstanceOf[
+      org.apache.spark.sql.execution.datasources.LogicalRelation]),
+      leaves.map(_.nodeName).distinct)
+    assert(rows.nonEmpty && rows.toSeq == cached.toSeq)
+  }
+
   test("no declared query forces a broadcast of a data-dependent Distinct relation") {
     uncachedSweep {
       SparkEntry.queries.foreach { case (name, fn) =>

@@ -16,4 +16,13 @@ class ProfileSpec extends SparkSpec {
     assert(lines.exists(_.startsWith("census broadcastHash=")), text)
     assert(lines.exists(_.startsWith("residual ")), text)
   }
+
+  test("Profile prints the round records of the fixpoint a query runs") {
+    val lines = Profile.report(spark, Fixtures.write(spark), "reach_hops")
+    val rounds = lines.filter(_.startsWith("fixpoint reach_hops round "))
+    assert(rounds.map(_.split("\\s+")(3).toInt) == Seq(1, 2, 3),
+      lines.mkString("\n"))
+    assert(rounds.forall(_.matches(".* delta .* rows -?\\d+  wall \\d+ ms")),
+      rounds.mkString("\n"))
+  }
 }

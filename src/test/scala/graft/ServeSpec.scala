@@ -5,7 +5,6 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 
 import scala.collection.mutable
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.BeforeAndAfterAll
 
 import graft.model.BuilderCache
@@ -52,6 +51,18 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
   test("GET /health is a liveness probe") {
     val (code, body) = get("/health")
     assert(code == 200 && body.contains("\"ok\":true"), body)
+  }
+
+  test("a warm response is not held back by Nagle's algorithm") {
+    // the JDK server writes headers and body separately: without
+    // TCP_NODELAY the body waits on the client's delayed ACK, ~40 ms
+    (1 to 5).foreach(_ => get("/health"))
+    val ms = (1 to 21).map { _ =>
+      val t0 = System.nanoTime()
+      assert(get("/health")._1 == 200)
+      (System.nanoTime() - t0) / 1e6
+    }.sorted
+    assert(ms(ms.size / 2) < 20.0, ms)
   }
 
   test("GET / lists the endpoints") {
@@ -179,25 +190,6 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
       val (code, body) = get(path)
       assert(code == 404 && body == """{"detail":"Not found"}""", path)
     }
-  }
-
-  /** Spark jobs started while `body` runs, the listener bus drained as
-    * `tools/Profile` drains it. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      // listenerBus is private[spark] in Scala, public in bytecode
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    } finally sc.removeSparkListener(listener)
-    jobs.get
   }
 
   test("a warm blended request is one Spark job") {
