@@ -299,6 +299,10 @@ def main():
             ).fetchone()[0]
             print(f"ok   {name} ({n} rows, envelope: {desc})"); n_ok += 1
 
+    # a misspelt subset name must not pass as "0 ok, 0 fail"
+    for name in sorted(only - set(oracle) - {n for n, _ in envelopes}):
+        print(f"FAIL {name}: no such query"); n_bad += 1
+
     print(f"== {n_ok} ok, {n_bad} fail ==")
     sys.exit(1 if n_bad else 0)
 

@@ -1,11 +1,36 @@
 package graft
 import java.nio.file.{Files, Paths}
 
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+
 import graft.serve.HttpApi.jStr
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+
+  /** Write each query's answer to `outDir/<name>` as parquet and return
+    * the names that failed. Each old dump is deleted first: a query that
+    * throws, while its frame is built or while it runs, then leaves no
+    * dump, and the oracle gate fails it instead of checking a previous
+    * run's answer. */
+  private[graft] def dump(spark: SparkSession, sfDir: String, outDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)])
+      : Seq[String] =
+    queries.flatMap { case (name, fn) =>
+      val out = new Path(s"$outDir/$name")
+      out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(out, true)
+      try {
+        fn(spark, sfDir).coalesce(1).write.parquet(out.toString)
+        None
+      } catch { case e: Throwable =>
+        System.err.println(s"[verify] $name failed: ${e.getMessage}")
+        Some(name)
+      }
+    }
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional extra args restrict the dump to named queries (iteration
@@ -13,15 +38,8 @@ object Verify {
     val only = args.drop(2).toSet
     val spark = Session()
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-    }
+    val failed = dump(spark, sfDir, outDir, SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.isEmpty || only(name) })
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jStr(k)}: ${jStr(v)}" }
       .mkString("{", ",", "}")
@@ -39,6 +57,9 @@ object Verify {
     }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_stages.json"),
       s"""{"stages": $stages, "queries": $staged}""")
+    if (failed.nonEmpty)
+      System.err.println(s"[verify] ${failed.size} failed: " +
+        failed.sorted.mkString(" "))
     spark.stop()
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.model.Tables
+import graft.model.{BuilderCache, Tables}
 
 /** Approximate-nearest-neighbor search over the embedding column
   * (extension surface, SURVEY §7.4). Vectors are float32 in the parquet;
@@ -12,45 +12,92 @@ import graft.model.Tables
   * bits. The dot/norm folds are `aggregate`/`zip_with` array expressions —
   * codegen'd, no UDF.
   *
-  * Scale posture: brute force is the correctness baseline (O(N) per probe,
-  * broadcast the probes); the bucketed variant is the 100 TB path — a
-  * deterministic sign-quantization over the leading dimensions plays the
-  * role of an IVF coarse quantizer, turning the scan into an equi-join on
-  * bucket id. Recall/cost trades by bucket bit-width exactly as IVF nlist
-  * does; a learned quantizer would drop in behind the same bucket column.
+  * Every search is one pipeline (REPOSE, ICDE 2021, PAPERS.md): a probe
+  * set ([[lowest]]), candidate buckets per probe, an equi-join on bucket
+  * id, the exact [[cosine]], and a per-probe top-k ([[search]]). Only the
+  * bucket differs: a deterministic sign-quantization over the leading
+  * dimensions ([[bucketSearch]]) or the nearest centroid cell, fixed or
+  * learned ([[ivfSearch]], [[nearestCells]]). Brute force is the
+  * correctness baseline (O(N) per probe, broadcast the probes); the
+  * bucketed variants are the 100 TB path, where the scan becomes one
+  * shuffle on bucket id and recall/cost trade by bucket bit-width exactly
+  * as IVF nlist does.
   */
 object Similarity {
 
   // plain cast, not a transform lambda: float→double widening is exact
   // and the Cast stays inside whole-stage codegen (HOF lambdas don't)
-  private def asDouble(c: Column): Column =
-    c.cast("array<double>")
-
-  // native codegen'd expressions (graft.functions.VectorExpressions) —
-  // bit-identical to the aggregate/zip_with folds (VectorExprSpec) but a
-  // fused primitive loop with no intermediate array
-  private val dot = "graft_dot(v, pv)"
-  private val norm2 = (c: String) => s"graft_norm2($c)"
-
-  private def vectors(spark: SparkSession, dir: String): DataFrame = {
+  private def vectors(spark: SparkSession, dir: String,
+      more: Column*): DataFrame = {
     graft.functions.VectorExpressions.register(spark)
     Tables.embeddings(spark, dir)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"))
+      .select(Seq(col("vec_id"), col("embedding").cast("array<double>")
+        .as("v")) ++ more: _*)
+  }
+
+  /** The `n` lowest vec_ids of `e` with `vec_id`/`v` renamed `id`/`vec`:
+    * the probe set (pid, pv; the same deterministic-parameter convention
+    * as the seed customer) and the fixed centroid table (cell, cv). */
+  private def lowest(e: DataFrame, n: Int, id: String, vec: String)
+      : DataFrame =
+    e.orderBy("vec_id").limit(n).select(col("vec_id").as(id), col("v").as(vec))
+
+  /** Cosine from a dot product and two squared norms, rounded to 6
+    * places. `try_divide`: a zero-norm side scores NULL, as the DuckDB
+    * oracle's division does, instead of throwing DIVIDE_BY_ZERO under
+    * ANSI mode; NULL ranks after every score under `desc`, and `max`
+    * skips it. */
+  private def cosineOf(dot: Column, na2: Column, nb2: Column): Column =
+    round(try_divide(dot, sqrt(na2) * sqrt(nb2)), 6)
+
+  /** Float cosine of array columns `a` and `b` through the native
+    * codegen'd expressions (graft.functions.VectorExpressions) —
+    * bit-identical to the aggregate/zip_with folds (VectorExprSpec) but a
+    * fused primitive loop with no intermediate array. */
+  private def cosine(a: String, b: String): Column =
+    cosineOf(expr(s"graft_dot($a, $b)"), expr(s"graft_norm2($a)"),
+      expr(s"graft_norm2($b)"))
+
+  /** The `n` cells of `cents` (cell, cv) nearest each row's vector `vec`,
+    * ranked per `key` by |c|² − 2c·x (|x|² is constant per row, so this
+    * is distance order), ties on the lower cell; `n` = 1 is the argmin
+    * assignment. `cents` is bounded (a `limit` or a fitted model's
+    * centres), so the cross join broadcasts it. */
+  private def nearestCells(rows: DataFrame, key: String, vec: String,
+      cents: DataFrame, n: Int): DataFrame = {
+    val w = Window.partitionBy(key).orderBy(asc("d2"), asc("cell"))
+    rows.crossJoin(broadcast(cents))
+      .withColumn("d2",
+        expr("graft_norm2(cv)") - lit(2.0) * expr(s"graft_dot(cv, $vec)"))
+      .withColumn("crk", row_number().over(w))
+      .filter(col("crk") <= n)
+      .drop("d2", "crk")
+  }
+
+  /** Per-probe top-k: each probe (pid, pv, cb) meets the corpus rows
+    * (vec_id, v, bucket) of its candidate bucket `cb`, its own vector
+    * excluded; `score` ranks them per pid, ties on the lower vec_id. The
+    * probe side is nProbes × buckets rows, so it broadcasts. */
+  private def search(corpus: DataFrame, cand: DataFrame, k: Int,
+      score: Column = cosine("v", "pv")): DataFrame = {
+    val w = Window.partitionBy("pid").orderBy(desc("cosine"), asc("vec_id"))
+    corpus.join(broadcast(cand),
+        col("bucket") === col("cb") && col("vec_id") =!= col("pid"))
+      .select(col("pid"), col("vec_id"), score.as("cosine"))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("pid"), col("rank").cast("long").as("rank"),
+        col("vec_id"), col("cosine"))
+      .orderBy("pid", "rank")
   }
 
   /** `sim_topk`: brute-force cosine top-k for the probe vector (min
-    * vec_id — same deterministic-parameter convention as the seed
-    * customer). */
+    * vec_id). */
   def simTopk(spark: SparkSession, dir: String, k: Int = 10): DataFrame = {
     val e = vectors(spark, dir)
-    val probe = e.orderBy("vec_id").limit(1)
-      .select(col("vec_id").as("pid"), col("v").as("pv"))
-    e.crossJoin(broadcast(probe))
+    e.crossJoin(broadcast(lowest(e, 1, "pid", "pv")))
       .filter(col("vec_id") =!= col("pid"))
-      .select(col("vec_id"),
-        round(expr(dot) /
-          (sqrt(expr(norm2("v"))) * sqrt(expr(norm2("pv")))), 6)
-          .as("cosine"))
+      .select(col("vec_id"), cosine("v", "pv").as("cosine"))
       .orderBy(desc("cosine"), asc("vec_id"))
       .limit(k)
   }
@@ -70,7 +117,112 @@ object Similarity {
           .otherwise(0L))
       .reduce(_ + _)
 
-  private def bucketOf(signDims: Int): Column = signBucket(col("v"), signDims)
+  /** Sign-bucket ANN over (vec_id, v): each of the `nProbes` probes
+    * searches its own bucket plus the buckets one flipped bit away for
+    * bits 0 until `flips` (multi-probe LSH). Still an equi-join: the
+    * probe side explodes to flips+1 candidate bucket ids, the corpus side
+    * never fans out, and cost stays bounded by bucket sizes. */
+  private def bucketSearch(e: DataFrame, signDims: Int, nProbes: Int,
+      k: Int, flips: Int, score: Column = cosine("v", "pv")): DataFrame = {
+    val cand = lowest(e, nProbes, "pid", "pv")
+      .withColumn("cb", signBucket(col("pv"), signDims))
+      .withColumn("cb", explode(array(col("cb") +: (0 until flips)
+        .map(b => col("cb").bitwiseXOR(lit(1L << b))): _*)))
+    search(e.withColumn("bucket", signBucket(col("v"), signDims)), cand, k,
+      score)
+  }
+
+  /** `knn_bucketed`: ANN — probes (the `nProbes` lowest vec_ids) matched
+    * only against vectors in the same sign-bucket. The bucket equi-join
+    * replaces the all-pairs cross join: at 100 TB this is one shuffle on
+    * bucket id instead of a broadcast scan per probe batch. */
+  def knnBucketed(spark: SparkSession, dir: String, signDims: Int = 8,
+      nProbes: Int = 5, k: Int = 5): DataFrame =
+    bucketSearch(vectors(spark, dir), signDims, nProbes, k, flips = 0)
+
+  /** `knn_multiprobe`: [[knnBucketed]] with the IVF `nprobe` lever — each
+    * probe also searches every bucket at hamming distance 1, the standard
+    * multi-probe LSH recall fix: a near neighbor on the other side of one
+    * hyperplane is no longer missed. Recall grows from 1 bucket to
+    * signDims+1 buckets of candidates per probe at the same shuffle
+    * shape. */
+  def knnMultiProbe(spark: SparkSession, dir: String, signDims: Int = 8,
+      nProbes: Int = 5, k: Int = 5): DataFrame =
+    bucketSearch(vectors(spark, dir), signDims, nProbes, k, flips = signDims)
+
+  /** IVF search over a (cell, cv) centroid table: `assigned` holds every
+    * corpus vector in its argmin cell (`bucket`), and each of the
+    * `nProbes` lowest vec_ids of `probesOf` searches its `nCells` nearest
+    * cells — the assigned cell is always among them, and nCells = the
+    * number of cells is the exhaustive scan (ExtensionSpec). */
+  private def ivfSearch(probesOf: DataFrame, assigned: DataFrame,
+      cents: DataFrame, nProbes: Int, k: Int, nCells: Int): DataFrame =
+    search(assigned, nearestCells(lowest(probesOf, nProbes, "pid", "pv"),
+        "pid", "pv", cents, nCells)
+      .select(col("pid"), col("pv"), col("cell").as("cb")), k)
+
+  private def assign(e: DataFrame, cents: DataFrame): DataFrame =
+    nearestCells(e, "vec_id", "v", cents, 1)
+      .select(col("vec_id"), col("v"), col("cell").as("bucket"))
+
+  /** `knn_ivf`: ANN with a LEARNED coarse quantizer — k-means centroids
+    * (Spark ML, fixed seed + bounded iterations) instead of fixed ones:
+    * actual IVF, where cells adapt to the data distribution and occupancy
+    * stays balanced even when the corpus doesn't straddle the axes. The
+    * search is [[knnIvfFixed]]'s over the learned table. Like PageRank,
+    * the k-means fixpoint is iterative and float-order-sensitive → no
+    * DuckDB oracle by design; ScalaTest pins the invariants instead
+    * (every returned score is brute-force-exact; probing every cell is
+    * the exhaustive scan).
+    *
+    * At 100 TB: training runs on a seeded SAMPLE ([[ivfTrainingSet]]) —
+    * k-means needs only enough rows to place `nClusters` centroids, not
+    * the corpus — and the full table is touched once by the argmin
+    * assignment against the broadcast centroid table. Both the table and
+    * the assignment are builders, so a warm call fits nothing and assigns
+    * nothing; an empty corpus fits no model and has no cells. */
+  def knnIvf(spark: SparkSession, dir: String, nClusters: Int = 16,
+      nProbes: Int = 5, k: Int = 5, nCells: Int = 3): DataFrame = {
+    lazy val e = vectors(spark, dir) // read only when a builder runs
+    val cents = BuilderCache.memo(spark, s"ivfCentroids:$dir:$nClusters") {
+      import spark.implicits._
+      import org.apache.spark.ml.clustering.KMeans
+      import org.apache.spark.ml.functions.array_to_vector
+      val train = ivfTrainingSet(e, nClusters)
+      val centres = if (train.isEmpty) Array.empty[Array[Double]]
+        else new KMeans().setK(nClusters).setSeed(7L).setMaxIter(5)
+          .setFeaturesCol("fv")
+          .fit(train.withColumn("fv", array_to_vector(col("v"))))
+          .clusterCenters.map(_.toArray)
+      centres.toSeq.zipWithIndex.map { case (c, i) => (i.toLong, c) }
+        .toDF("cell", "cv")
+    }
+    val assigned = BuilderCache.memo(spark, s"ivfAssigned:$dir:$nClusters") {
+      assign(e, cents)
+    }
+    ivfSearch(assigned, assigned, cents, nProbes, k, nCells)
+  }
+
+  /** `knn_ivf_fixed`: the hash-checkable twin of [[knnIvf]] — the SAME
+    * IVF search, but with FIXED centroids (the vectors of the first
+    * `nClusters` vec_ids, cell id = that vec_id) instead of learned
+    * k-means means. No iterative float state → every step is
+    * SQL-expressible and the DuckDB oracle replays the whole pipeline
+    * bit-for-bit, moving the IVF candidate-generation + scoring machinery
+    * into the hash gate. The cell ranking runs on the codegen'd
+    * [[graft.functions.VectorExpressions]] folds whose index order the
+    * DuckDB `list_transform` oracles are proven to match.
+    *
+    * Scale posture: the centroid table is a `limit(nClusters)` bounded
+    * relation (broadcast-safe by maxRows), the argmin is a per-vector
+    * window over nClusters rows, and the candidate join fans each vector
+    * out to at most the probes sharing its cell. */
+  def knnIvfFixed(spark: SparkSession, dir: String, nClusters: Int = 16,
+      nProbes: Int = 5, k: Int = 5, nCells: Int = 3): DataFrame = {
+    val e = vectors(spark, dir)
+    val cents = lowest(e, nClusters, "cell", "cv")
+    ivfSearch(e, assign(e, cents), cents, nProbes, k, nCells)
+  }
 
   /** `dedup_embedding`: embedding-cosine near-duplicate pairs — all pairs
     * sharing a sign-bucket (the LSH-style candidate filter: near-identical
@@ -84,21 +236,16 @@ object Similarity {
     * oracle-checked data. */
   def dedupEmbedding(spark: SparkSession, dir: String, signDims: Int = 8,
       limit: Int = 100, maxBucket: Int = 1000): DataFrame = {
-    val e = graft.model.BuilderCache.memo(spark,
-        s"embBuckets:$dir:$signDims:$maxBucket") {
-      Dedup.dropHotBuckets(
-        vectors(spark, dir).withColumn("bucket", bucketOf(signDims)),
+    val e = BuilderCache.memo(spark, s"embBuckets:$dir:$signDims:$maxBucket") {
+      Dedup.dropHotBuckets(vectors(spark, dir)
+        .withColumn("bucket", signBucket(col("v"), signDims)),
         Seq("bucket"), maxBucket)
     }
-    val pairs = e.as("x").join(e.as("y"),
+    e.as("x").join(e.as("y"),
         col("x.bucket") === col("y.bucket") &&
           col("x.vec_id") < col("y.vec_id"))
       .select(col("x.vec_id").as("p1"), col("y.vec_id").as("p2"),
-        col("x.v").as("v"), col("y.v").as("pv"))
-    pairs.select(col("p1"), col("p2"),
-        round(expr(dot) /
-          (sqrt(expr(norm2("v"))) * sqrt(expr(norm2("pv")))), 6)
-          .as("cosine"))
+        cosine("x.v", "y.v").as("cosine"))
       .orderBy(desc("cosine"), asc("p1"), asc("p2"))
       .limit(limit)
   }
@@ -116,11 +263,11 @@ object Similarity {
     * score (its closest in-cluster neighbor), the quantity SemDeDup
     * thresholds on. Priority = lower vec_id (deterministic, the repo's
     * min-id survivor convention, [[Dedup.dedupSurvivors]]); clustering =
-    * the [[knnIvfFixed]] fixed centroids (first `nClusters` vec_ids,
-    * same argmin arithmetic — the three fixed-centroid queries pin each
-    * other), so every step is SQL-expressible and the DuckDB oracle
-    * replays the verdicts bit-for-bit. A vector with no cluster peer
-    * keeps `max_cos` NULL and `keep = true`.
+    * the [[knnIvfFixed]] fixed centroids and argmin (the three
+    * fixed-centroid queries pin each other), so every step is
+    * SQL-expressible and the DuckDB oracle replays the verdicts
+    * bit-for-bit. A vector with no cluster peer keeps `max_cos` NULL and
+    * `keep = true`.
     *
     * Scale posture: the published algorithm's whole point is that
     * clustering BOUNDS the quadratic — pairwise cosine runs only inside
@@ -146,15 +293,8 @@ object Similarity {
     * [[graft.functions.VectorExpressions]] registered). */
   private[graft] def semdedupFixedOf(e: DataFrame, nClusters: Int = 16,
       tau: Double = 0.4, maxCell: Int = 1000): DataFrame = {
-    val cents = e.orderBy("vec_id").limit(nClusters)
-      .select(col("vec_id").as("cell"), col("v").as("cv"))
-    val argmin = Window.partitionBy("vec_id")
-      .orderBy(asc("d2"), asc("cell"))
-    val assigned = e.crossJoin(broadcast(cents))
-      .withColumn("d2",
-        expr("graft_norm2(cv)") - lit(2.0) * expr("graft_dot(cv, v)"))
-      .withColumn("ark", row_number().over(argmin))
-      .filter(col("ark") === 1)
+    val assigned = nearestCells(e, "vec_id", "v",
+        lowest(e, nClusters, "cell", "cv"), 1)
       .select(col("vec_id"), col("v"), col("cell"))
     val cool = Dedup.dropHotBuckets(assigned, Seq("cell"), maxCell)
     // both orientations of each in-cell pair, so the per-vector max and
@@ -163,10 +303,7 @@ object Similarity {
       .join(cool.select(col("cell"), col("vec_id").as("pid"),
         col("v").as("pv")).as("b"),
         col("a.cell") === col("b.cell") && col("vec_id") =!= col("pid"))
-      .select(col("vec_id"), col("pid"),
-        round(expr(dot) /
-          (sqrt(expr(norm2("v"))) * sqrt(expr(norm2("pv")))), 6)
-          .as("cosine"))
+      .select(col("vec_id"), col("pid"), cosine("v", "pv").as("cosine"))
     val perVec = pairs.groupBy("vec_id")
       .agg(max(col("cosine")).as("max_cos"),
         max(when(col("pid") < col("vec_id") && col("cosine") >= tau, 1)
@@ -177,190 +314,11 @@ object Similarity {
       .orderBy("vec_id")
   }
 
-  /** `knn_multiprobe`: ANN with the IVF `nprobe` lever — each probe
-    * searches its own sign-bucket PLUS every bucket at hamming distance 1
-    * (one flipped quantization bit), the standard multi-probe LSH recall
-    * fix: a near neighbor that lands on the other side of one hyperplane
-    * is no longer missed. Still an equi-join — the probe side explodes to
-    * (signDims+1) candidate bucket ids (tiny, broadcast), the corpus side
-    * never fans out. Recall grows from 1 bucket to signDims+1 buckets of
-    * candidates per probe at the same shuffle shape; cost stays bounded
-    * by bucket sizes, monotone in `signDims`. */
-  def knnMultiProbe(spark: SparkSession, dir: String, signDims: Int = 8,
-      nProbes: Int = 5, k: Int = 5): DataFrame = {
-    val e = vectors(spark, dir).withColumn("bucket", bucketOf(signDims))
-    val probes = e.orderBy("vec_id").limit(nProbes)
-      .select(col("vec_id").as("pid"), col("v").as("pv"),
-        col("bucket").as("pbucket"))
-    val candBuckets = probes.select(col("pid"), col("pv"),
-      explode(array(col("pbucket") +:
-        (0 until signDims).map(b => col("pbucket")
-          .bitwiseXOR(lit(1L << b))): _*)).as("cb"))
-    val scored = e.join(broadcast(candBuckets),
-        col("bucket") === col("cb") && col("vec_id") =!= col("pid"))
-      .select(col("pid"), col("vec_id"),
-        round(expr(dot) /
-          (sqrt(expr(norm2("v"))) * sqrt(expr(norm2("pv")))), 6)
-          .as("cosine"))
-    val w = Window.partitionBy("pid")
-      .orderBy(desc("cosine"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("pid"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("cosine"))
-      .orderBy("pid", "rank")
-  }
-
-  /** `knn_ivf`: ANN with a LEARNED coarse quantizer — k-means centroids
-    * (Spark ML, fixed seed + bounded iterations) instead of the fixed
-    * sign hyperplanes: this is actual IVF, where cells adapt to the data
-    * distribution and occupancy stays balanced even when the corpus
-    * doesn't straddle the axes. The query shape is unchanged — bucket =
-    * nearest centroid, probes equi-join candidate cells, per-probe
-    * top-k window — and the multiprobe lever is real: each probe
-    * searches its `nCells` nearest centroid cells (IVF nprobe), with
-    * nCells = nClusters provably equal to the exhaustive scan
-    * (ExtensionSpec). Like PageRank, the k-means fixpoint is
-    * iterative and float-order-sensitive → no DuckDB oracle by design;
-    * ScalaTest pins the invariants instead (every returned score is
-    * brute-force-exact; every assignment is the argmin centroid).
-    * At 100 TB: training runs on a seeded SAMPLE ([[ivfTrainingSet]]) —
-    * k-means needs only enough rows to place `nClusters` centroids, not
-    * the corpus — and the full table is touched exactly once per
-    * iteration-free ASSIGNMENT pass (`model.transform`, a narrow map
-    * against the driver-broadcast centroid table); the bucket column
-    * then behaves exactly like [[bucketOf]]'s. */
-  /** Memoized k-means quantizer per (application, dir, k): fixed seed +
-    * deterministic training set → refits would be identical, the memo
-    * just avoids paying them. */
-  private val models = scala.collection.concurrent.TrieMap
-    .empty[(String, String, Int), org.apache.spark.ml.clustering.KMeansModel]
-
-  private def ivfModel(spark: SparkSession, dir: String, nClusters: Int,
-      e: DataFrame) =
-    models.getOrElseUpdate(
-      (spark.sparkContext.applicationId, dir, nClusters), {
-        import org.apache.spark.ml.clustering.KMeans
-        new KMeans().setK(nClusters).setSeed(7L).setMaxIter(5)
-          .setFeaturesCol("fv").setPredictionCol("bucket")
-          .fit(ivfTrainingSet(e, nClusters))
-      })
-
-  def knnIvf(spark: SparkSession, dir: String, nClusters: Int = 16,
-      nProbes: Int = 5, k: Int = 5, nCells: Int = 3): DataFrame = {
-    import spark.implicits._
-    val e = graft.model.BuilderCache.memo(spark, s"ivfVectors:$dir") {
-      import org.apache.spark.ml.functions.array_to_vector
-      vectors(spark, dir).withColumn("fv", array_to_vector(col("v")))
-    }
-    if (e.isEmpty) // no vectors → no quantizer to train, empty result
-      return e.select(col("vec_id").as("pid"), lit(0L).as("rank"),
-        col("vec_id"), lit(0.0).as("cosine")).limit(0)
-    val model = ivfModel(spark, dir, nClusters, e)
-    // the fitted assignment is itself a builder: one k-means fit + one
-    // assignment pass per (session, dir, k), however many probes ask
-    val eb = graft.model.BuilderCache.memo(spark,
-        s"ivfAssigned:$dir:$nClusters") {
-      model.transform(e)
-        .select(col("vec_id"), col("v"), col("bucket").cast("long").as("bucket"))
-    }
-    val probes = eb.orderBy("vec_id").limit(nProbes)
-      .select(col("vec_id").as("pid"), col("v").as("pv"))
-    // IVF nprobe: each probe searches its `nCells` NEAREST centroid
-    // cells (the assigned cell is always among them — it is the argmin).
-    // The centroid table is a literal bounded relation (nClusters rows,
-    // driver-held by Spark ML itself), so the cross join + broadcast are
-    // provably bounded; |pv|² is constant per probe, so ranking cells by
-    // |c|² − 2·c·p ranks by true distance.
-    val cents = model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i.toLong, c.toArray) }.toSeq.toDF("cell", "cv")
-    val cellRank = Window.partitionBy("pid")
-      .orderBy(asc("d2"), asc("cell"))
-    val candBuckets = probes.crossJoin(broadcast(cents))
-      .withColumn("d2",
-        expr("graft_norm2(cv)") - lit(2.0) * expr("graft_dot(cv, pv)"))
-      .withColumn("crk", row_number().over(cellRank))
-      .filter(col("crk") <= nCells)
-      .select(col("pid"), col("pv"), col("cell").as("cb"))
-    val scored = eb.join(broadcast(candBuckets),
-        col("bucket") === col("cb") && col("vec_id") =!= col("pid"))
-      .select(col("pid"), col("vec_id"),
-        round(expr(dot) /
-          (sqrt(expr(norm2("v"))) * sqrt(expr(norm2("pv")))), 6)
-          .as("cosine"))
-    val w = Window.partitionBy("pid")
-      .orderBy(desc("cosine"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("pid"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("cosine"))
-      .orderBy("pid", "rank")
-  }
-
-  /** `knn_ivf_fixed`: the hash-checkable twin of [[knnIvf]] — the SAME
-    * IVF topology (assign each vector to its nearest centroid cell →
-    * each probe searches its `nCells` nearest cells → exact cosine
-    * within the candidate cells → top-k), but with FIXED centroids (the
-    * vectors of the first `nClusters` vec_ids, cell id = that vec_id)
-    * instead of learned k-means means. No iterative float state →
-    * every step is SQL-expressible and the DuckDB oracle replays the
-    * whole pipeline bit-for-bit, moving the IVF candidate-generation +
-    * scoring machinery into the hash gate (knn_ivf itself stays
-    * invariant-tested: learned centroids are engine-specific by
-    * design). Assignment ranks cells by |c|² − 2·c·v (|v|² is constant
-    * per vector), ties by cell id — the same arithmetic [[knnIvf]]
-    * uses for its probe-side cell ranking, computed by the codegen'd
-    * [[graft.functions.VectorExpressions]] folds whose index order the
-    * DuckDB `list_transform` oracles are proven to match.
-    *
-    * Scale posture: identical to [[knnIvf]]'s assignment pass — the
-    * centroid table is a `limit(nClusters)` bounded relation
-    * (broadcast-safe by maxRows), the argmin is a per-vector window
-    * over nClusters rows, and the candidate join fans each vector out
-    * to at most the probes sharing its cell. */
-  def knnIvfFixed(spark: SparkSession, dir: String, nClusters: Int = 16,
-      nProbes: Int = 5, k: Int = 5, nCells: Int = 3): DataFrame = {
-    val e = vectors(spark, dir)
-    val cents = e.orderBy("vec_id").limit(nClusters)
-      .select(col("vec_id").as("cell"), col("v").as("cv"))
-    val d2 = expr("graft_norm2(cv)") - lit(2.0) * expr("graft_dot(cv, v)")
-    val argmin = Window.partitionBy("vec_id")
-      .orderBy(asc("d2"), asc("cell"))
-    val assigned = e.crossJoin(broadcast(cents))
-      .withColumn("d2", d2)
-      .withColumn("ark", row_number().over(argmin))
-      .filter(col("ark") === 1)
-      .select(col("vec_id"), col("v"), col("cell").as("bucket"))
-    val probes = e.orderBy("vec_id").limit(nProbes)
-      .select(col("vec_id").as("pid"), col("v").as("pv"))
-    val cellRank = Window.partitionBy("pid")
-      .orderBy(asc("d2"), asc("cell"))
-    val candBuckets = probes.crossJoin(broadcast(cents))
-      .withColumn("d2",
-        expr("graft_norm2(cv)") - lit(2.0) * expr("graft_dot(cv, pv)"))
-      .withColumn("crk", row_number().over(cellRank))
-      .filter(col("crk") <= nCells)
-      .select(col("pid"), col("pv"), col("cell").as("cb"))
-    val scored = assigned.join(broadcast(candBuckets),
-        col("bucket") === col("cb") && col("vec_id") =!= col("pid"))
-      .select(col("pid"), col("vec_id"),
-        round(expr(dot) /
-          (sqrt(expr(norm2("v"))) * sqrt(expr(norm2("pv")))), 6)
-          .as("cosine"))
-    val w = Window.partitionBy("pid")
-      .orderBy(desc("cosine"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("pid"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("cosine"))
-      .orderBy("pid", "rank")
-  }
-
   /** `cluster_stats`: the semantic-cluster audit over the embedding
     * space — assign every vector to its nearest of the [[knnIvfFixed]]
-    * fixed centroids (same argmin arithmetic, so the two queries pin
-    * each other), then per cluster: size, mean cosine-to-centroid (the
-    * cluster's coherence), and the label MODE with its purity (how well
+    * fixed centroids (same argmin, so the two queries pin each other),
+    * then per cluster: size, mean cosine-to-centroid (the cluster's
+    * coherence), and the label MODE with its purity (how well
     * unsupervised cells recover the labeled classes — the topic-balance
     * report a curation pipeline reads before up/down-weighting semantic
     * regions, and the standard external cluster-quality check while
@@ -377,23 +335,11 @@ object Similarity {
     * nClusters × nLabels rows survive the map side. */
   def clusterStats(spark: SparkSession, dir: String,
       nClusters: Int = 16): DataFrame = {
-    graft.functions.VectorExpressions.register(spark)
-    val e = Tables.embeddings(spark, dir)
-      .select(col("vec_id"), asDouble(col("embedding")).as("v"),
-        col("label").cast("long").as("label"))
-    val cents = e.orderBy("vec_id").limit(nClusters)
-      .select(col("vec_id").as("cell"), col("v").as("cv"))
-    val argmin = Window.partitionBy("vec_id")
-      .orderBy(asc("d2"), asc("cell"))
-    val assigned = e.crossJoin(broadcast(cents))
-      .withColumn("d2",
-        expr("graft_norm2(cv)") - lit(2.0) * expr("graft_dot(cv, v)"))
-      .withColumn("ark", row_number().over(argmin))
-      .filter(col("ark") === 1)
+    val e = vectors(spark, dir, col("label").cast("long").as("label"))
+    val assigned = nearestCells(e, "vec_id", "v",
+        lowest(e, nClusters, "cell", "cv"), 1)
       .select(col("vec_id"), col("label"), col("cell"),
-        round(round(expr("graft_dot(cv, v)") /
-          (sqrt(expr(norm2("v"))) * sqrt(expr("graft_norm2(cv)"))), 6)
-          * 1000000).cast("long").as("cos_micro"))
+        round(cosine("v", "cv") * 1000000).cast("long").as("cos_micro"))
     val perCell = assigned.groupBy("cell")
       .agg(count(lit(1)).as("n_vecs"), sum("cos_micro").as("sum_micro"))
     val lrk = Window.partitionBy("cell").orderBy(desc("ln"), asc("label"))
@@ -434,37 +380,29 @@ object Similarity {
     * smaller than float32, SIMD-friendly dot products): per vector,
     * scale = 127/max|x| and q_i = floor(x_i·scale + 0.5), so values
     * span [-127, 127] with the sign structure preserved. Declared
-    * output is the quantization SUMMARY (scale, q_min/q_max/q_sum) —
-    * exact integers plus one rounded double, chosen so DuckDB replays
-    * it bit-for-bit: max is order-insensitive, 127/maxabs is a single
-    * correctly-rounded division, each x·scale+0.5→floor chain is three
-    * exact-deterministic double ops, and the q-sums are integer
-    * arithmetic. The full q-vector stays internal (same contract as
-    * [[graft.operators.Multimodal]]'s float features).
+    * output is the quantization SUMMARY (scale, q_min/q_max/q_sum) of
+    * [[quantizedVectors]] — exact integers plus one rounded double,
+    * chosen so DuckDB replays it bit-for-bit: max is order-insensitive,
+    * 127/maxabs is a single correctly-rounded division, each
+    * x·scale+0.5→floor chain is three exact-deterministic double ops, and
+    * the q-sums are integer arithmetic. The full q-vector stays internal
+    * (same contract as [[graft.operators.Multimodal]]'s float features).
     *
     * Scale posture: embarrassingly parallel — scan→project, zero
     * shuffles except the deterministic output sort; the quantized
     * array would be written columnar next to the bucket id, and the
     * reconstruction bound (|x − q/scale| ≤ 1/(2·scale), ExtensionSpec)
     * is the standard scalar-quantization recall argument. */
-  def embedQuantize(spark: SparkSession, dir: String): DataFrame = {
-    val e = vectors(spark, dir)
-    e.select(col("vec_id"), col("v"),
-        expr("aggregate(v, CAST(0 AS DOUBLE), (a, x) -> greatest(a, abs(x)))")
-          .as("maxabs"))
-      .withColumn("scale",
-        when(col("maxabs") > 0, lit(127.0) / col("maxabs")).otherwise(0.0))
-      .withColumn("qs",
-        expr("transform(v, x -> CAST(floor(x * scale + 0.5D) AS BIGINT))"))
+  def embedQuantize(spark: SparkSession, dir: String): DataFrame =
+    quantizedVectors(spark, dir)
       .select(col("vec_id"), round(col("scale"), 6).as("scale"),
         expr("CAST(array_min(qs) AS BIGINT)").as("q_min"),
         expr("CAST(array_max(qs) AS BIGINT)").as("q_max"),
         expr("aggregate(qs, CAST(0 AS BIGINT), (a, q) -> a + q)").as("q_sum"))
       .orderBy("vec_id")
-  }
 
   /** The quantized vectors themselves (internal form for tests and
-    * downstream index builds): (vec_id, scale, qs). */
+    * downstream index builds): (vec_id, v, scale, qs). */
   private[graft] def quantizedVectors(spark: SparkSession,
       dir: String): DataFrame =
     vectors(spark, dir)
@@ -483,68 +421,26 @@ object Similarity {
     * cos ≈ Σ(qa/sa)(qb/sb) / (|qa|/sa · |qb|/sb) the scales cancel —
     * quantized cosine = Σqa·qb / (√Σqa² · √Σqb²), pure int64 folds plus
     * two square roots. A production index stores only (bucket, qs):
-    * 4× smaller scans, SIMD integer dots, no float payload. Same
-    * bucket-equi-join + per-probe rank shape as [[knnBucketed]]; the
-    * sign bucket is computed FROM the quantized values (quantization
-    * preserves signs), so the float vector is never needed after the
-    * one-time quantization pass. Scores approximate exact cosine within
-    * the scalar-quantization error (ExtensionSpec pins the tolerance
-    * and top-k recall vs the exact scorer) — but the quantized
-    * computation ITSELF is deterministic end-to-end (the quantization
-    * chain is engine-exact, see [[embedQuantize]]; the dots are pure
-    * integer arithmetic), so unlike knn_ivf this path is DuckDB
-    * oracle-checked. */
+    * 4× smaller scans, SIMD integer dots, no float payload. The
+    * [[knnBucketed]] search over the quantized vectors: the sign bucket
+    * is computed FROM the quantized values (quantization preserves
+    * signs), so the float vector is never needed after the one-time
+    * quantization pass. Scores approximate exact cosine within the
+    * scalar-quantization error (ExtensionSpec pins the tolerance and
+    * top-k recall vs the exact scorer) — but the quantized computation
+    * ITSELF is deterministic end-to-end (the quantization chain is
+    * engine-exact, see [[embedQuantize]]; the dots are pure integer
+    * arithmetic), so unlike knn_ivf this path is DuckDB oracle-checked. */
   def knnQuantized(spark: SparkSession, dir: String, signDims: Int = 8,
       nProbes: Int = 5, k: Int = 5): DataFrame = {
-    val q = quantizedVectors(spark, dir)
-      .select(col("vec_id"), col("qs"),
-        signBucket(col("qs"), signDims).as("bucket"))
-    val probes = q.orderBy("vec_id").limit(nProbes)
-      .select(col("vec_id").as("pid"), col("qs").as("ps"),
-        col("bucket").as("pbucket"))
-    val scored = q.join(broadcast(probes),
-        col("bucket") === col("pbucket") && col("vec_id") =!= col("pid"))
-      .select(col("pid"), col("vec_id"),
-        round(
-          expr("aggregate(zip_with(qs, ps, (a, b) -> a * b), " +
-            "CAST(0 AS BIGINT), (acc, x) -> acc + x)").cast("double") /
-            (sqrt(expr("aggregate(qs, CAST(0 AS BIGINT), " +
-              "(acc, x) -> acc + x * x)").cast("double")) *
-             sqrt(expr("aggregate(ps, CAST(0 AS BIGINT), " +
-               "(acc, x) -> acc + x * x)").cast("double"))), 6)
-          .as("cosine"))
-    val w = Window.partitionBy("pid")
-      .orderBy(desc("cosine"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("pid"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("cosine"))
-      .orderBy("pid", "rank")
-  }
-
-  /** `knn_bucketed`: ANN — probes (the `nProbes` lowest vec_ids) matched
-    * only against vectors in the same sign-bucket; per-probe top-k via a
-    * rank window. The bucket equi-join replaces the all-pairs cross join:
-    * at 100 TB this is one shuffle on bucket id instead of a broadcast
-    * scan per probe batch. */
-  def knnBucketed(spark: SparkSession, dir: String, signDims: Int = 8,
-      nProbes: Int = 5, k: Int = 5): DataFrame = {
-    val e = vectors(spark, dir).withColumn("bucket", bucketOf(signDims))
-    val probes = e.orderBy("vec_id").limit(nProbes)
-      .select(col("vec_id").as("pid"), col("v").as("pv"),
-        col("bucket").as("pbucket"))
-    val scored = e.join(broadcast(probes),
-        col("bucket") === col("pbucket") && col("vec_id") =!= col("pid"))
-      .select(col("pid"), col("vec_id"),
-        round(expr(dot) /
-          (sqrt(expr(norm2("v"))) * sqrt(expr(norm2("pv")))), 6)
-          .as("cosine"))
-    val w = Window.partitionBy("pid")
-      .orderBy(desc("cosine"), asc("vec_id"))
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("pid"), col("rank").cast("long").as("rank"),
-        col("vec_id"), col("cosine"))
-      .orderBy("pid", "rank")
+    val sumSq = (c: String) =>
+      expr(s"aggregate($c, CAST(0 AS BIGINT), (acc, x) -> acc + x * x)")
+        .cast("double")
+    bucketSearch(quantizedVectors(spark, dir)
+        .select(col("vec_id"), col("qs").as("v")),
+      signDims, nProbes, k, flips = 0,
+      cosineOf(expr("aggregate(zip_with(v, pv, (a, b) -> a * b), " +
+        "CAST(0 AS BIGINT), (acc, x) -> acc + x)").cast("double"),
+        sumSq("v"), sumSq("pv")))
   }
 }

@@ -46,6 +46,64 @@ class EdgeCaseSpec extends SparkSpec {
     assert(s.filter(col("cosine") < -1 || col("cosine") > 1).count() == 0)
   }
 
+  test("a zero-norm embedding scores NULL cosines under ANSI mode, never aborts") {
+    import graft.operators.Similarity
+    // vec 3 is all zero; vec 4 (all negative) and vec 30 (tiny, all
+    // negative) share its sign bucket 0, and vec 30 sits nearest the zero
+    // vector among the fixed centroids (vec_ids 1-16)
+    val rnd = new scala.util.Random(11)
+    val d = java.nio.file.Files.createTempDirectory("graft-zerovec").toString
+    (1L to 40L).map { id =>
+      val v = id match {
+        case 3L => Array.fill(8)(0.0f)
+        case 4L => Array.tabulate(8)(i => -1.0f + 0.1f * i)
+        case 30L => Array.fill(8)(-0.001f)
+        case _ => Array.fill(8)(rnd.nextGaussian().toFloat)
+      }
+      (id, v, (id % 3).toInt)
+    }.toDF("vec_id", "embedding", "label")
+      .coalesce(1).write.parquet(s"$d/embeddings.parquet")
+    val prior = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try {
+      def nullCosines(rows: Array[org.apache.spark.sql.Row], what: String) =
+        assert(rows.nonEmpty &&
+          rows.forall(r => r.isNullAt(r.fieldIndex("cosine"))),
+          s"$what: ${rows.mkString(",")}")
+      Seq(
+        "knn_bucketed" -> Similarity.knnBucketed(spark, d),
+        "knn_multiprobe" -> Similarity.knnMultiProbe(spark, d),
+        "knn_ivf" -> Similarity.knnIvf(spark, d),
+        "knn_ivf_fixed" -> Similarity.knnIvfFixed(spark, d),
+        "knn_quantized" -> Similarity.knnQuantized(spark, d)).foreach {
+        case (name, df) =>
+          val rows = df.collect()
+          nullCosines(rows.filter(_.getLong(0) == 3L), name)
+          // a NULL ranks after every scored pair
+          val vs4 = rows.filter(_.getLong(0) == 4L)
+          val firstNull = vs4.indexWhere(_.isNullAt(3))
+          assert(firstNull < 0 || vs4.drop(firstNull).forall(_.isNullAt(3)),
+            s"$name: ${vs4.mkString(",")}")
+      }
+      val sim = Similarity.simTopk(spark, d, k = 1000).collect()
+      assert(sim.length == 39)
+      nullCosines(sim.filter(_.getLong(0) == 3L), "sim_topk")
+      assert(sim.last.getLong(0) == 3L, sim.mkString(","))
+      nullCosines(Similarity.dedupEmbedding(spark, d)
+        .filter(col("p1") === 3L || col("p2") === 3L).collect(),
+        "dedup_embedding")
+      val sem = Similarity.semdedupFixed(spark, d)
+        .as[(Long, Long, Option[Double], Boolean)].collect()
+      assert(sem.length == 40)
+      assert(sem.filter(_._1 == 30L).head._2 == 3L) // vec 3 has a peer
+      assert(sem.filter(_._1 == 3L).head == ((3L, 3L, None, true)))
+      val cells = Similarity.clusterStats(spark, d)
+        .as[(Long, Long, Option[Double], Long, Long, Double)].collect()
+      assert(cells.map(_._2).sum == 40L)
+      assert(cells.filter(_._1 == 3L).head._3.isEmpty, cells.mkString(","))
+    } finally spark.conf.set("spark.sql.ansi.enabled", prior)
+  }
+
   test("F6: now() sanity query answers (ref tp2/app/test.py:96-127)") {
     // the reference's test_3 is a bare `SELECT now()` liveness probe;
     // the engine answers the same SQL

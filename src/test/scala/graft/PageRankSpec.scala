@@ -80,6 +80,16 @@ class PageRankSpec extends SparkSpec {
     assert(math.abs(r(1L) - 0.210965) < 2e-6)
   }
 
+  test("default Params stop the toy graph at the round cap, not the tolerance") {
+    // its L1 delta shrinks by about d = 0.85 a round, too slowly to reach
+    // 1e-6 within 50 rounds: the default run is the 50-step run
+    val v = toyVertices(Map(1L -> 1.0, 2L -> 1.0, 3L -> 1.0, 4L -> 1.0))
+    val capped = PageRank.run(spark, v, toyEdges,
+        PageRank.Params(tol = 0.0, maxIter = 50))
+      .as[(Long, Double)].collect().toMap
+    assert(ranks(Map(1L -> 1.0, 2L -> 1.0, 3L -> 1.0, 4L -> 1.0)) == capped)
+  }
+
   test("all-zero personalization falls back to uniform (ref :183-188)") {
     val zero = ranks(Map.empty)
     val unif = ranks(Map(1L -> 1.0, 2L -> 1.0, 3L -> 1.0, 4L -> 1.0))
