@@ -167,7 +167,7 @@ object PageRank {
   }
 
   /** The in-task power iteration shared by [[runLocal]] and
-    * [[graft.rec.Engine]]'s serving kernel: the one copy of the sink /
+    * [[graft.rec.Engine]]'s serving snapshot: the one copy of the sink /
     * teleport / L1 math below the distributed loop.
     *
     * Vertices are indexed in ascending id order, and `contrib(v)` sums

@@ -166,7 +166,7 @@ object BuilderCache {
     * property is stated under exactly that assumption). Only the
     * above-threshold DataFrame path of [[graft.rec.Engine]] caches per
     * request; below `Engine.ServeLocalRows` rows a request is
-    * answered by the one-task kernel, which caches nothing. Two concurrent
+    * answered from a driver snapshot, which caches nothing. Two concurrent
     * IDENTICAL requests would share one live entry here, and the first
     * finisher's blocking unpersist drops it under the other — still
     * CORRECT (Spark recomputes the dropped partitions from lineage), but

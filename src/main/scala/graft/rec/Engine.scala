@@ -87,44 +87,44 @@ object Engine {
     recommendInternal(spark, gRaw, customerId, RecsApi.clampTopN(topN))._1
 
   /** Serving path ([[graft.serve.HttpApi]]): the rows of [[recommend]].
-    * A graph within [[ServeLocalRows]] rows is answered by the one-task
-    * [[serveLocal]] kernel; a larger one by the DataFrame path, which
-    * materializes the top-N and then releases its PER-REQUEST caches
-    * (this customer's seed set and candidate table). A long-lived server
-    * answering many customers would otherwise accumulate one cache entry
-    * per request; the session-level builder caches (incidence, cooc,
-    * jaccard pairs, PageRank adjacency) are shared across customers and
-    * stay. */
-  def recommendRows(spark: SparkSession, gRaw: ProductGraph,
+    * A graph within [[ServeLocalRows]] rows is answered from a
+    * [[serveSnapshot]] read for the call, one Spark job; a larger one by
+    * the DataFrame path, [[frameRows]]. */
+  def recommendRows(spark: SparkSession, g: ProductGraph,
       customerId: Long, topN: Int = 3): Array[Row] =
-    recommendRowsWithin(spark, gRaw, customerId, topN, ServeLocalRows)
+    serveRows(spark, g, customerId, Some(RecsApi.clampTopN(topN)))
 
-  /** [[recommendRows]] with the kernel's row limit as a parameter; limit
-    * 0 sends every request down the DataFrame path. */
-  private[graft] def recommendRowsWithin(spark: SparkSession,
-      gRaw: ProductGraph, customerId: Long, topN: Int,
-      limit: Long): Array[Row] =
-    rowsWithin(spark, gRaw, customerId, Some(RecsApi.clampTopN(topN)), limit)
-
-  /** The serving path of [[recommend]] (`topN` = `Some(n)`, n already
-    * clamped) and [[strategyBreakdown]] (`None`): the [[serveLocal]]
-    * kernel, else the DataFrame answer collected and its per-request
-    * caches released. */
-  private def rowsWithin(spark: SparkSession, g: ProductGraph,
-      customerId: Long, topN: Option[Int], limit: Long): Array[Row] =
-    serveLocal(spark, g, customerId, topN, limit).getOrElse {
-      val (df, perRequest) = topN match {
-        case Some(n) => recommendInternal(spark, g, customerId, n)
-        case None => breakdownInternal(spark, g, customerId)
-      }
-      val rows = df.collect()
-      // blocking: the release must be visible before the response
-      // returns (ServeSpec asserts zero steady-state cache growth);
-      // these are request-sized frames, the synchronous unpersist is
-      // microseconds
-      perRequest.foreach(_.unpersist(blocking = true))
-      rows
+  /** The rows of [[recommend]] (`topN` = `Some(n)`, n already clamped)
+    * or [[strategyBreakdown]] (`None`): a [[ServeSnapshot]]'s answer,
+    * else [[frameRows]]. */
+  private def serveRows(spark: SparkSession, g: ProductGraph,
+      customerId: Long, topN: Option[Int]): Array[Row] =
+    serveSnapshot(spark, g) match {
+      case Some(s) => s.rows(customerId, topN)
+      case None => frameRows(spark, g, customerId, topN)
     }
+
+  /** The DataFrame path of [[recommend]] (`topN` = `Some(n)`, n already
+    * clamped) and [[strategyBreakdown]] (`None`): the answer collected,
+    * then its PER-REQUEST caches (this customer's seed set and candidate
+    * table) released. A long-lived server answering many customers would
+    * otherwise accumulate one cache entry per request; the session-level
+    * builder caches (incidence, cooc, jaccard pairs, PageRank adjacency)
+    * are shared across customers and stay. */
+  private[graft] def frameRows(spark: SparkSession, g: ProductGraph,
+      customerId: Long, topN: Option[Int]): Array[Row] = {
+    val (df, perRequest) = topN match {
+      case Some(n) => recommendInternal(spark, g, customerId, n)
+      case None => breakdownInternal(spark, g, customerId)
+    }
+    val rows = df.collect()
+    // blocking: the release must be visible before the response
+    // returns (ServeSpec asserts zero steady-state cache growth);
+    // these are request-sized frames, the synchronous unpersist is
+    // microseconds
+    perRequest.foreach(_.unpersist(blocking = true))
+    rows
+  }
 
   /** A customer's strategy frames, the one source of
     * [[recommendInternal]] and [[breakdownInternal]]: the per-request
@@ -223,17 +223,10 @@ object Engine {
       customerId: Long): DataFrame =
     breakdownInternal(spark, g, customerId)._1
 
-  /** Serving path twin of [[recommendRows]] for the breakdown endpoint:
-    * the [[serveLocal]] kernel, else collect the DataFrame path and
-    * release its per-request seed cache. */
+  /** Serving path twin of [[recommendRows]] for the breakdown endpoint. */
   def breakdownRows(spark: SparkSession, g: ProductGraph,
       customerId: Long): Array[Row] =
-    breakdownRowsWithin(spark, g, customerId, ServeLocalRows)
-
-  /** [[breakdownRows]] with the kernel's row limit as a parameter. */
-  private[graft] def breakdownRowsWithin(spark: SparkSession,
-      g: ProductGraph, customerId: Long, limit: Long): Array[Row] =
-    rowsWithin(spark, g, customerId, None, limit)
+    serveRows(spark, g, customerId, None)
 
   /** [[strategyBreakdown]] with the per-request seed cache its serving
     * path releases: each strategy's scores, seeds excluded, labeled and
@@ -259,24 +252,28 @@ object Engine {
           Seq(seeds))
     }
 
-  /** Rows the one-task serving kernel may read per request: the
-    * customer's row and basket, `engine.cooc`, the Jaccard pairs and
-    * the product ids; for [[collabLocal]], the basket elements. Past it
-    * a request takes the DataFrame path.
+  /** Rows a serving snapshot may hold: for a [[ServeSnapshot]], every
+    * customer id and incidence row, `engine.cooc`, the Jaccard pairs
+    * and the product ids; for a [[BasketSnapshot]], the basket elements.
+    * Past it every request takes the DataFrame path.
     *
-    * Measured per warm request on `local[2]`, kernel against DataFrame
-    * path, with the JVM's allocation during a kernel request
-    * (recommendations; breakdowns alike):
+    * The bound sizes a snapshot read once and held on the driver, not
+    * per-request work. At sf0.001 (`local[2]`, 4 cores) a
+    * [[ServeSnapshot]] is 43 353 rows, about 1.1 MB on the heap
+    * (Spark's `SizeEstimator`), read in one job of about 0.2 s warm; an
+    * answer from it takes about 1.1 ms, a [[BasketSnapshot]]'s (5 382
+    * elements, 47 kB) about 0.5 ms. The one-task kernel this replaced
+    * ran one job per request, about 85 ms. Measured earlier per warm
+    * request on `local[2]`, that kernel against the DataFrame path, with
+    * the JVM's allocation during a kernel request:
     *   - sf0.001, 38 k rows: 0.36 s against 1.3 s, 58 MB allocated;
     *   - sf0.01, 1.2 M rows: 0.66 s against 1.35 s, 190 MB allocated;
     *   - sf0.1, 15 M rows: 3.1 s against 2.5 s, 1.7 GB allocated.
-    * The kernel also reruns the seeded PageRank on every request, where
-    * the DataFrame path reuses its per-customer memo. The bound is held
-    * just above the largest graph a benchmark workload serves (sf0.001)
-    * until a workload measures the kernel on a larger one. */
+    * The bound is held just above the largest graph a benchmark workload
+    * serves (sf0.001) until a workload measures a larger one. */
   private[graft] final val ServeLocalRows = 1L << 16
 
-  // row tags of the serving kernel's one-task input
+  // row tags of the snapshot's one-task input
   private final val TagKnown = 0
   private final val TagSeed = 1
   private final val TagEdge = 2
@@ -294,138 +291,67 @@ object Engine {
       case _ => None
     }
 
-  /** The one-task serving kernel: everything [[recommend]] (`topN` =
-    * `Some(n)`, n already clamped) or [[strategyBreakdown]] (`None`)
-    * computes, in ONE `coalesce(1).mapPartitions` job. The task reads
-    * the customer's row and incidence rows, `engine.cooc`, the
-    * [[Recommend.jaccardPairsFrom]] memo and the product ids, and
-    * computes the existence check (P5), the seedless fallback (G2), the
-    * co-occurrence and Jaccard sums, and the seeded PageRank through
-    * [[PageRank.solveLocal]], with transition weights cnt / Σcnt per src
-    * taken from the same cooc rows. A warm request is one job and
-    * caches nothing; the DataFrame path runs 14–23 jobs and caches, then
-    * releases, its seeds and candidates.
+  /** Everything [[recommend]] and [[strategyBreakdown]] read, for every
+    * customer, in ONE `coalesce(1).mapPartitions` job: the customer ids,
+    * `engine.incidence`, `engine.cooc`, the [[Recommend.jaccardPairsFrom]]
+    * memo and the product ids. The answers then need no Spark job
+    * ([[ServeSnapshot.rows]]), and the read caches nothing.
     *
-    * This is [[PageRank.run]]'s size-based choice made for the whole
-    * request, and it is made before any job: when the cooc and Jaccard
-    * pair counts the cache already holds sum past `limit`, or either
-    * count is unknown, the answer is `None` and the caller takes the
+    * This is [[PageRank.run]]'s size-based choice made for every request
+    * at once, and it is made before any job: when the incidence, cooc and
+    * Jaccard pair counts the cache already holds sum past `limit`, or one
+    * of them is unknown, the answer is `None` and requests take the
     * DataFrame path. The task itself also stops once it has read more
-    * than `limit` rows in all, which only the product ids and the basket
-    * can still cause. Below the limit the answers are the DataFrame
-    * path's, Double for Double (EngineSpec compares every customer).
-    *
-    * @throws IllegalArgumentException for an unknown customer (P5) */
-  private[graft] def serveLocal(spark: SparkSession, g: ProductGraph,
-      customerId: Long, topN: Option[Int],
-      limit: Long = ServeLocalRows): Option[Array[Row]] = {
+    * than `limit` rows in all, which only the customer and product ids
+    * can still cause. */
+  private[graft] def serveSnapshot(spark: SparkSession, g: ProductGraph,
+      limit: Long = ServeLocalRows): Option[ServeSnapshot] = {
     val incidence =
       BuilderCache.ensureCached(spark, "engine.incidence", g.incidence)
     val cooc = BuilderCache.ensureCached(spark, "engine.cooc", g.cooc)
     val pairs = Recommend.jaccardPairsFrom(incidence)
-    val edges = Seq(cooc, pairs).map(cachedRows)
-    if (edges.exists(_.isEmpty) || edges.flatten.sum > limit) return None
+    val held = Seq(incidence, cooc, pairs).map(cachedRows)
+    if (held.exists(_.isEmpty) || held.flatten.sum > limit) return None
     def tagged(tag: Int, df: DataFrame, a: Column, b: Column = lit(0L),
         c: Column = lit(0L), w: Column = lit(0.0)): DataFrame =
       df.select(lit(tag), a.cast("long"), b.cast("long"), c.cast("long"),
         w.cast("double"))
+    // a null customer id is no customer and seeds no one, as on the
+    // DataFrame path's equality filters
     val input = Seq(
-      tagged(TagKnown, g.customers.filter(col("customer_id") === customerId),
+      tagged(TagKnown, g.customers.filter(col("customer_id").isNotNull),
         col("customer_id")),
-      tagged(TagSeed, incidence.filter(col("customer_id") === customerId),
-        col("product_id")),
+      tagged(TagSeed, incidence.filter(col("customer_id").isNotNull),
+        col("customer_id"), col("product_id")),
       tagged(TagEdge, cooc, col("src"), col("dst"), col("cnt")),
       tagged(TagPair, pairs, col("p1"), col("p2"), w = col("jaccard")),
       tagged(TagProduct, g.products, col("id"))).reduce(_ unionAll _)
-    val out = input.coalesce(1).queryExecution.toRdd
-      .mapPartitions(it => Iterator.single(kernel(it, limit, topN)))
+    input.coalesce(1).queryExecution.toRdd
+      .mapPartitions(it => Iterator.single(readSnapshot(it, limit)))
       .collect()
       // an input Catalyst proves empty is planned as zero partitions
-      .headOption.getOrElse(kernel(Iterator.empty, limit, topN))
-    out.map { case (known, rows) =>
-      require(known, s"unknown customer id: $customerId")
-      rows
-    }
+      .headOption.getOrElse(readSnapshot(Iterator.empty, limit))
   }
 
-  /** The one-task kernel of `/recs?strategy=similarity&customer_id=`:
-    * [[Recommend.collabTopkFor]]'s 3-hop collaborative filter in ONE
-    * `coalesce(1).mapPartitions` job over the cached
-    * [[Relational.baskets]] memo. Each other customer c2 whose basket B2
-    * meets the seed basket P1 in I = B2 ∩ P1 counts once toward every
-    * p ∈ B2 reached from some p1 ∈ I with p ≠ p1. The score is the
-    * number of such c2; the answer is the top `topN` (product_id,
-    * score) by (-score, product_id). An unknown or orderless customer
-    * gets no rows, as on the DataFrame path.
-    *
-    * As in [[serveLocal]], the size choice is made before any job: when
-    * the cache already holds more than `limit` baskets, or the baskets
-    * frame is not cached, the answer is `None` and the caller takes the
-    * DataFrame path. The task also stops once it has read more than
-    * `limit` basket elements. */
-  private[graft] def collabLocal(spark: SparkSession, dir: String,
-      customerId: Long, topN: Int,
-      limit: Long = ServeLocalRows): Option[Array[(Long, Long)]] = {
-    val baskets = Relational.baskets(spark, dir)
-    if (!cachedRows(baskets).exists(_ <= limit)) return None
-    baskets.select(col("customer_id").cast("long"),
-        col("ds").cast("array<bigint>"))
-      .coalesce(1).queryExecution.toRdd
-      .mapPartitions(it =>
-        Iterator.single(collab(it, customerId, topN, limit)))
-      .collect()
-      .headOption.getOrElse(collab(Iterator.empty, customerId, topN, limit))
-  }
-
-  /** The task body of [[collabLocal]]: `None` past `limit` basket
-    * elements read, else the top `topN` (product_id, score). */
-  private def collab(it: Iterator[InternalRow], customerId: Long,
-      topN: Int, limit: Long): Option[Array[(Long, Long)]] = {
+  /** The task body of [[serveSnapshot]]: `None` past `limit` rows read.
+    * Cooc rows are grouped by src as they arrive, so the edges are held
+    * once. */
+  private def readSnapshot(it: Iterator[InternalRow],
+      limit: Long): Option[ServeSnapshot] = {
     var read = 0L
-    var seed = Array.empty[Long]
-    val others = mutable.ArrayBuffer.empty[Array[Long]]
-    while (read <= limit && it.hasNext) {
-      val r = it.next()
-      val ds = r.getArray(1).toLongArray()
-      read += ds.length
-      // a null customer joins no one on the DataFrame path
-      if (!r.isNullAt(0)) {
-        if (r.getLong(0) == customerId) seed = ds else others += ds
-      }
-    }
-    if (read > limit) return None
-    val p1 = mutable.LongMap.from(seed.iterator.map(_ -> ()))
-    val score = mutable.LongMap.empty[Long]
-    others.foreach { b2 =>
-      val in = b2.filter(p1.contains)
-      // with two products in I every p of B2 has some p1 ≠ p; with one,
-      // every p but that one
-      if (in.nonEmpty) b2.foreach { p =>
-        if (in.length > 1 || p != in(0))
-          score(p) = score.getOrElse(p, 0L) + 1
-      }
-    }
-    Some(score.toArray.sortBy { case (p, s) => (-s, p) }.take(topN))
-  }
-
-  /** The task body of [[serveLocal]]: `None` past `limit` rows read,
-    * else whether the customer exists and the answer rows. Cooc rows
-    * are grouped by src as they arrive, so the edges are held once. */
-  private def kernel(it: Iterator[InternalRow], limit: Long,
-      topN: Option[Int]): Option[(Boolean, Array[Row])] = {
-    var read = 0L
-    var known = false
-    val seeds = mutable.LongMap.empty[Unit]
-    val products = new mutable.ArrayBuilder.ofLong
-    val out = mutable.LongMap.empty[OutEdges]
-    val p1, p2 = new mutable.ArrayBuilder.ofLong
+    val known = new mutable.ArrayBuilder.ofLong
+    val seeds = mutable.LongMap.empty[mutable.ArrayBuilder.ofLong]
+    val out = mutable.LongMap.empty[
+      (mutable.ArrayBuilder.ofLong, mutable.ArrayBuilder.ofLong)]
+    val products, p1, p2 = new mutable.ArrayBuilder.ofLong
     val jac = new mutable.ArrayBuilder.ofDouble
     while (read <= limit && it.hasNext) {
       val r = it.next()
       read += 1
       r.getInt(0) match {
-        case TagKnown => known = true
-        case TagSeed => seeds(r.getLong(1)) = ()
+        case TagKnown => known += r.getLong(1)
+        case TagSeed => seeds.getOrElseUpdate(r.getLong(1),
+          new mutable.ArrayBuilder.ofLong) += r.getLong(2)
         case TagEdge =>
           val (d, c) = out.getOrElseUpdate(r.getLong(1),
             (new mutable.ArrayBuilder.ofLong, new mutable.ArrayBuilder.ofLong))
@@ -435,15 +361,192 @@ object Engine {
         case _ => products += r.getLong(1)
       }
     }
-    if (read > limit) None
-    else if (!known) Some((false, Array.empty[Row]))
-    else Some((true, answer(seeds, products.result(), out, p1.result(),
-      p2.result(), jac.result(), topN)))
+    if (read > limit) return None
+    // incidence rows of an unknown customer answer nothing (P5)
+    val baskets = mutable.LongMap.from(known.result().iterator.map(c =>
+      c -> seeds.get(c).fold(Array.emptyLongArray)(_.result())))
+    val cooc = out.mapValuesNow { case (d, c) => (d.result(), c.result()) }
+    // [[Relational.transitionWeights]]: cnt / Σcnt per src
+    val adj = cooc.toArray.map { case (s, (ds, cs)) =>
+      val total = cs.sum
+      (s, (ds, cs.map(_.toDouble / total)))
+    }
+    Some(new ServeSnapshot(read, baskets, products.result(), cooc, adj,
+      p1.result(), p2.result(), jac.result()))
   }
 
-  /** One src's cooc out-edges as read: (dst, cnt) builders. */
-  private type OutEdges =
-    (mutable.ArrayBuilder.ofLong, mutable.ArrayBuilder.ofLong)
+  /** The inputs of [[recommend]] and [[strategyBreakdown]] for every
+    * customer, held on the driver: each known customer's basket, the
+    * cooc out-edges by src with their transition weights cnt / Σcnt
+    * ([[Relational.transitionWeights]]), the Jaccard pair arrays and the
+    * product ids. `size` is the rows read to make it. Immutable once
+    * made. */
+  private[graft] final class ServeSnapshot private[Engine] (val size: Long,
+      baskets: mutable.LongMap[Array[Long]], products: Array[Long],
+      cooc: mutable.LongMap[(Array[Long], Array[Long])],
+      adj: Array[(Long, PageRank.Adj)],
+      p1: Array[Long], p2: Array[Long], jac: Array[Double])
+      extends Serializable {
+
+    /** [[recommend]]'s rows (`topN` = `Some(n)`, n already clamped) or
+      * [[strategyBreakdown]]'s (`None`), with no Spark job: the existence
+      * check (P5), the seedless fallback (G2), the co-occurrence and
+      * Jaccard sums and the seeded PageRank through
+      * [[PageRank.solveLocal]], with the arithmetic and order of
+      * [[recommendInternal]] / [[breakdownInternal]]. The answers are the
+      * DataFrame path's, Double for Double (EngineSpec compares every
+      * customer).
+      *
+      * @throws IllegalArgumentException for an unknown customer (P5) */
+    def rows(customerId: Long, topN: Option[Int]): Array[Row] = {
+      val basket = baskets.get(customerId)
+      require(basket.isDefined, s"unknown customer id: $customerId")
+      val seeds = mutable.LongMap.from(basket.get.iterator.map(_ -> ()))
+      def ranks(pers: Long => Double): mutable.LongMap[Double] = {
+        val pm = mutable.LongMap.empty[Double]
+        var total = 0.0
+        products.foreach { id => val p = pers(id); pm(id) = p; total += p }
+        val (ids, rank) =
+          PageRank.solveLocal(pm, total, adj, PageRank.Params())
+        mutable.LongMap.from(ids.iterator.zip(rank.iterator))
+      }
+      def sorted(scores: Iterable[(Long, Double)]): Array[(Long, Double)] =
+        scores.toArray.sortWith((a, b) => byScore(a._1, a._2, b._1, b._2))
+
+      if (seeds.isEmpty) { // G2
+        val global = sorted(ranks(_ => 1.0).map { case (id, r) =>
+          (id, round6(r)) })
+        return topN match {
+          case Some(n) => global.take(n).map { case (id, s) =>
+            Row(id, s, 0.0, 0.0, 0.0, s) }
+          case None => global.map { case (id, s) =>
+            Row("global_pagerank", id, s) }
+        }
+      }
+      val sCooc = mutable.LongMap.empty[Long]
+      seeds.keysIterator.foreach(s => cooc.get(s).foreach { case (ds, cs) =>
+        var k = 0
+        while (k < ds.length) {
+          sCooc(ds(k)) = sCooc.getOrElse(ds(k), 0L) + cs(k); k += 1
+        }
+      })
+      val sJacc = mutable.LongMap.empty[Double]
+      var i = 0
+      while (i < p1.length) {
+        if (seeds.contains(p1(i)))
+          sJacc(p2(i)) = sJacc.getOrElse(p2(i), 0.0) + jac(i)
+        if (seeds.contains(p2(i)))
+          sJacc(p1(i)) = sJacc.getOrElse(p1(i), 0.0) + jac(i)
+        i += 1
+      }
+      val sPpr = ranks(id => if (seeds.contains(id)) 1.0 else 0.0)
+      topN match {
+        case None =>
+          def strategy(name: String, scores: Iterable[(Long, Double)]) =
+            sorted(scores.filterNot(e => seeds.contains(e._1))
+              .map { case (id, s) => (id, round6(s)) })
+              .map { case (id, s) => Row(name, id, s) }
+          strategy("co_occurrence", sCooc.map { case (id, c) =>
+            (id, c.toDouble) }) ++
+            strategy("personalized_pagerank", sPpr) ++
+            strategy("similarity", sJacc)
+        case Some(n) =>
+          val cand = (sCooc.keySet ++ sJacc.keySet ++ sPpr.keySet)
+            .filterNot(seeds.contains).toArray
+          // cooc/jaccard maxes over the candidates; PPR's over its full
+          // rank vector, seeds included (see recommendInternal)
+          val maxCooc = cand.iterator.map(sCooc.getOrElse(_, 0L))
+            .foldLeft(0L)(math.max)
+          val maxJacc = cand.iterator.map(sJacc.getOrElse(_, 0.0))
+            .foldLeft(0.0)(math.max)
+          val maxPpr = sPpr.valuesIterator.foldLeft(0.0)(math.max)
+          // [[Recommend.blend]]'s weighting, term for term
+          val (wCooc, wSim, wPpr) = Recommend.BlendWeights
+          val scored = cand.flatMap { id =>
+            val wc = wCooc * (if (maxCooc > 0)
+              sCooc.getOrElse(id, 0L).toDouble / maxCooc else 0.0)
+            val ws = wSim *
+              (if (maxJacc > 0) sJacc.getOrElse(id, 0.0) / maxJacc else 0.0)
+            val wp = wPpr *
+              (if (maxPpr > 0) sPpr.getOrElse(id, 0.0) / maxPpr else 0.0)
+            val blend = wc + ws + wp
+            if (blend > 0) Some((id, round6(blend), wc, ws, wp)) else None
+          }
+          scored.sortWith((a, b) => byScore(a._1, a._2, b._1, b._2))
+            .take(n).map { case (id, s, wc, ws, wp) =>
+              Row(id, s, round6(wc), round6(ws), round6(wp), 0.0)
+            }
+      }
+    }
+  }
+
+  /** The baskets memo of the 3-hop collaborative filter
+    * ([[Recommend.collabTopkFor]]) held on the driver: each customer's id
+    * and sorted basket, and `elements`, the basket elements read. */
+  private[graft] final case class BasketSnapshot(elements: Long,
+      ids: Array[Long], baskets: Array[Array[Long]]) {
+
+    /** [[Recommend.collabTopkFor]]'s answer with no Spark job. Each other
+      * customer c2 whose basket B2 meets the seed basket P1 in
+      * I = B2 ∩ P1 counts once toward every p ∈ B2 reached from some
+      * p1 ∈ I with p ≠ p1. The score is the number of such c2; the answer
+      * is the top `topN` (product_id, score) by (-score, product_id). An
+      * unknown or orderless customer gets no rows, as on the DataFrame
+      * path. */
+    def collab(customerId: Long, topN: Int): Array[(Long, Long)] = {
+      val seed = ids.lastIndexOf(customerId)
+      val p1 = mutable.LongMap.from((if (seed < 0) Iterator.empty
+        else baskets(seed).iterator).map(_ -> ()))
+      val score = mutable.LongMap.empty[Long]
+      ids.indices.filter(ids(_) != customerId).foreach { j =>
+        val b2 = baskets(j)
+        val in = b2.filter(p1.contains)
+        // with two products in I every p of B2 has some p1 ≠ p; with one,
+        // every p but that one
+        if (in.nonEmpty) b2.foreach { p =>
+          if (in.length > 1 || p != in(0))
+            score(p) = score.getOrElse(p, 0L) + 1
+        }
+      }
+      score.toArray.sortBy { case (p, s) => (-s, p) }.take(topN)
+    }
+  }
+
+  /** The cached [[Relational.baskets]] memo as a [[BasketSnapshot]], in
+    * ONE `coalesce(1).mapPartitions` job. As in [[serveSnapshot]], the
+    * size choice is made before any job: when the cache already holds
+    * more than `limit` baskets, or the baskets frame is not cached, the
+    * answer is `None` and requests take the DataFrame path. The task also
+    * stops once it has read more than `limit` basket elements. */
+  private[graft] def basketSnapshot(spark: SparkSession, dir: String,
+      limit: Long = ServeLocalRows): Option[BasketSnapshot] = {
+    val baskets = Relational.baskets(spark, dir)
+    if (!cachedRows(baskets).exists(_ <= limit)) return None
+    baskets.select(col("customer_id").cast("long"),
+        col("ds").cast("array<bigint>"))
+      .coalesce(1).queryExecution.toRdd
+      .mapPartitions(it => Iterator.single(readBaskets(it, limit)))
+      .collect()
+      .headOption.getOrElse(readBaskets(Iterator.empty, limit))
+  }
+
+  /** The task body of [[basketSnapshot]]: `None` past `limit` basket
+    * elements read. A null customer joins no one on the DataFrame path,
+    * so its basket is read but not held. */
+  private def readBaskets(it: Iterator[InternalRow],
+      limit: Long): Option[BasketSnapshot] = {
+    var read = 0L
+    val ids = new mutable.ArrayBuilder.ofLong
+    val baskets = mutable.ArrayBuffer.empty[Array[Long]]
+    while (read <= limit && it.hasNext) {
+      val r = it.next()
+      val ds = r.getArray(1).toLongArray()
+      read += ds.length
+      if (!r.isNullAt(0)) { ids += r.getLong(0); baskets += ds }
+    }
+    if (read > limit) None
+    else Some(BasketSnapshot(read, ids.result(), baskets.toArray))
+  }
 
   /** `round(x, 6)` as Spark evaluates it: HALF_UP on the decimal
     * rendering of the double. */
@@ -453,96 +556,4 @@ object Engine {
   /** (-score, product_id) order, the top-N and breakdown tie-break. */
   private def byScore(idA: Long, a: Double, idB: Long, b: Double): Boolean =
     a > b || (a == b && idA < idB)
-
-  /** The answer of [[serveLocal]] from its inputs: the arithmetic and
-    * order of [[recommendInternal]] / [[breakdownInternal]] over arrays.
-    * Empties `out`. */
-  private def answer(seeds: mutable.LongMap[Unit], products: Array[Long],
-      out: mutable.LongMap[OutEdges], p1: Array[Long], p2: Array[Long],
-      jac: Array[Double], topN: Option[Int]): Array[Row] = {
-    // [[Relational.transitionWeights]]: cnt / Σcnt per src,
-    // each src's builders dropped as its weights are made; the seeds'
-    // out-edges also give the co-occurrence sums
-    val sCooc = mutable.LongMap.empty[Long]
-    val adj = mutable.LongMap.empty[PageRank.Adj]
-    out.keys.toArray.foreach { s =>
-      val (d, c) = out.remove(s).get
-      val ds = d.result(); val cs = c.result()
-      if (seeds.contains(s)) {
-        var k = 0
-        while (k < ds.length) {
-          sCooc(ds(k)) = sCooc.getOrElse(ds(k), 0L) + cs(k); k += 1
-        }
-      }
-      val total = cs.sum
-      adj(s) = (ds, cs.map(_.toDouble / total))
-    }
-    def ranks(pers: Long => Double): mutable.LongMap[Double] = {
-      val pm = mutable.LongMap.empty[Double]
-      var total = 0.0
-      products.foreach { id => val p = pers(id); pm(id) = p; total += p }
-      val (ids, rank) = PageRank.solveLocal(pm, total, adj, PageRank.Params())
-      mutable.LongMap.from(ids.iterator.zip(rank.iterator))
-    }
-    def sorted(scores: Iterable[(Long, Double)]): Array[(Long, Double)] =
-      scores.toArray.sortWith((a, b) => byScore(a._1, a._2, b._1, b._2))
-
-    if (seeds.isEmpty) { // G2
-      val global = sorted(ranks(_ => 1.0).map { case (id, r) =>
-        (id, round6(r)) })
-      return topN match {
-        case Some(n) => global.take(n).map { case (id, s) =>
-          Row(id, s, 0.0, 0.0, 0.0, s) }
-        case None => global.map { case (id, s) =>
-          Row("global_pagerank", id, s) }
-      }
-    }
-    val sJacc = mutable.LongMap.empty[Double]
-    var i = 0
-    while (i < p1.length) {
-      if (seeds.contains(p1(i)))
-        sJacc(p2(i)) = sJacc.getOrElse(p2(i), 0.0) + jac(i)
-      if (seeds.contains(p2(i)))
-        sJacc(p1(i)) = sJacc.getOrElse(p1(i), 0.0) + jac(i)
-      i += 1
-    }
-    val sPpr = ranks(id => if (seeds.contains(id)) 1.0 else 0.0)
-    topN match {
-      case None =>
-        def strategy(name: String, scores: Iterable[(Long, Double)]) =
-          sorted(scores.filterNot(e => seeds.contains(e._1))
-            .map { case (id, s) => (id, round6(s)) })
-            .map { case (id, s) => Row(name, id, s) }
-        strategy("co_occurrence", sCooc.map { case (id, c) =>
-          (id, c.toDouble) }) ++
-          strategy("personalized_pagerank", sPpr) ++
-          strategy("similarity", sJacc)
-      case Some(n) =>
-        val cand = (sCooc.keySet ++ sJacc.keySet ++ sPpr.keySet)
-          .filterNot(seeds.contains).toArray
-        // cooc/jaccard maxes over the candidates; PPR's over its full
-        // rank vector, seeds included (see recommendInternal)
-        val maxCooc = cand.iterator.map(sCooc.getOrElse(_, 0L))
-          .foldLeft(0L)(math.max)
-        val maxJacc = cand.iterator.map(sJacc.getOrElse(_, 0.0))
-          .foldLeft(0.0)(math.max)
-        val maxPpr = sPpr.valuesIterator.foldLeft(0.0)(math.max)
-        // [[Recommend.blend]]'s weighting, term for term
-        val (wCooc, wSim, wPpr) = Recommend.BlendWeights
-        val scored = cand.flatMap { id =>
-          val wc = wCooc * (if (maxCooc > 0)
-            sCooc.getOrElse(id, 0L).toDouble / maxCooc else 0.0)
-          val ws = wSim *
-            (if (maxJacc > 0) sJacc.getOrElse(id, 0.0) / maxJacc else 0.0)
-          val wp = wPpr *
-            (if (maxPpr > 0) sPpr.getOrElse(id, 0.0) / maxPpr else 0.0)
-          val blend = wc + ws + wp
-          if (blend > 0) Some((id, round6(blend), wc, ws, wp)) else None
-        }
-        scored.sortWith((a, b) => byScore(a._1, a._2, b._1, b._2))
-          .take(n).map { case (id, s, wc, ws, wp) =>
-            Row(id, s, round6(wc), round6(ws), round6(wp), 0.0)
-          }
-    }
-  }
 }

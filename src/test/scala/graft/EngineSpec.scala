@@ -73,7 +73,7 @@ class EngineSpec extends SparkSpec {
   }
 
   test("serving rows equal the DataFrame answers for every customer") {
-    // the one-task kernel behind recommendRows/breakdownRows against the
+    // the snapshot answers behind recommendRows/breakdownRows against the
     // DataFrame path, exact Double equality; an unknown id must fail
     // alike on both
     def answer(rows: => Array[org.apache.spark.sql.Row])

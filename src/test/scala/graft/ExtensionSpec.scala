@@ -576,11 +576,12 @@ class ExtensionSpec extends SparkSpec {
         (6L, Seq(-0.3f, -0.2f, 0.5f, 0.1f)))
       .toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
+    val prior = spark.conf.get("spark.sql.ansi.enabled")
     spark.conf.set("spark.sql.ansi.enabled", "true")
     try {
       assert(Similarity.knnQuantized(spark, tmp.toString).count() > 0)
       assert(Similarity.knnBucketed(spark, tmp.toString).count() > 0)
-    } finally spark.conf.set("spark.sql.ansi.enabled", "false")
+    } finally spark.conf.set("spark.sql.ansi.enabled", prior)
   }
 
   test("tokenize_unk: full coverage, UNK=0, in-vocab ids shifted by one") {

@@ -19,12 +19,13 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
 
   private lazy val api = new HttpApi(spark, Fixtures.write(spark))
   private lazy val port = api.start()
-  // a twin whose serving kernel row limit is 0: every blended request
+  // a twin whose snapshot row limit is 0: every blended and 3-hop request
   // takes the DataFrame path, with its per-request caches and releases
   private lazy val dfApi =
     new HttpApi(spark, Fixtures.write(spark), 0, None, 0L)
   private lazy val dfPort = dfApi.start()
   private lazy val client = HttpClient.newHttpClient()
+  private val sf = "/root/testdata/sf0.001"
 
   override def afterAll(): Unit = { api.stop(); dfApi.stop() }
 
@@ -51,6 +52,24 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
   test("GET /health is a liveness probe") {
     val (code, body) = get("/health")
     assert(code == 200 && body.contains("\"ok\":true"), body)
+  }
+
+  test("a new server answering /health has started no Spark job") {
+    // both snapshots are read on the first request that needs them, not
+    // at construction: a server given its graph starts no job, one that
+    // reads its graph from a directory only that read's
+    val dir = Fixtures.write(spark)
+    Engine.fromOrders(spark, dir) // the graph's builders
+    val graphJobs = jobsDuring(Engine.fromOrders(spark, dir))
+    Seq(Some(Fixtures.toyGraph(spark)) -> 0, None -> graphJobs).foreach {
+      case (graph, want) =>
+        var fresh: HttpApi = null
+        try assert(jobsDuring {
+          fresh = new HttpApi(spark, dir, graph = graph)
+          assert(get("/health", fresh.start())._1 == 200)
+        } == want)
+        finally if (fresh != null) fresh.stop()
+    }
   }
 
   test("a warm response is not held back by Nagle's algorithm") {
@@ -156,7 +175,6 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
     // sf0.001's 150 customers are asked for their full list only: every
     // limit on both servers would be 2 100 requests, half of them on the
     // DataFrame path at about 0.35 s each on 4 cores
-    val sf = "/root/testdata/sf0.001"
     val sfApi = new HttpApi(spark, sf)
     val sfDfApi = new HttpApi(spark, sf, 0, None, 0L)
     try assertRecsAsLibrary(sf, Seq(sfApi.start(), sfDfApi.start()),
@@ -192,16 +210,19 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
     }
   }
 
-  test("a warm blended request is one Spark job") {
-    Seq("/customers/1/recommendations?top_n=3",
-        "/customers/1/strategies?top_n=3").foreach { path =>
-      get(path) // builders' first touch
-      val jobs = jobsDuring(assert(get(path)._1 == 200, path))
-      assert(jobs == 1, s"$path started $jobs jobs")
+  test("a warm blended request runs no Spark job, an unknown id's 404 " +
+      "neither") {
+    Seq("/customers/1/recommendations?top_n=3" -> 200,
+        "/customers/2/strategies?top_n=3" -> 200,
+        "/customers/9999/recommendations" -> 404,
+        "/customers/9999/strategies" -> 404).foreach { case (path, want) =>
+      get(path) // the snapshot's first read
+      val jobs = jobsDuring(assert(get(path)._1 == want, path))
+      assert(jobs == 0, s"$path started $jobs jobs")
     }
   }
 
-  test("a warm /recs request runs no Spark job, or one with a customer") {
+  test("a warm /recs request runs no Spark job, with a customer too") {
     val held = Seq("/recs?strategy=co_occurrence&customer_id=1",
       "/recs?strategy=pagerank&limit=3", "/recs?strategy=similarity&limit=7")
     val sim = "/recs?strategy=similarity&customer_id=1&limit=5"
@@ -211,7 +232,7 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
       assert(jobs == 0, s"$path started $jobs jobs")
     }
     var body = ""
-    assert(jobsDuring { body = get(sim)._2 } == 1)
+    assert(jobsDuring { body = get(sim)._2 } == 0)
     // past the kernel's limit: the DataFrame path, with the same answer
     get(sim, dfPort)
     var dfBody = ""
@@ -226,13 +247,14 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
     val baskets = Relational.baskets(spark, dir).count() // cached memo
     // the cached basket count alone exceeds the limit: decided before any job
     assert(jobsDuring {
-      assert(Engine.collabLocal(spark, dir, 1L, 10, baskets - 1).isEmpty)
+      assert(Engine.basketSnapshot(spark, dir, baskets - 1).isEmpty)
     } == 0)
     // the baskets fit but their elements do not: the task stops reading
     val elements = Relational.bipartite(spark, dir).count()
     assert(elements > baskets)
-    assert(Engine.collabLocal(spark, dir, 1L, 10, elements - 1).isEmpty)
-    assert(Engine.collabLocal(spark, dir, 1L, 10, elements).nonEmpty)
+    assert(Engine.basketSnapshot(spark, dir, elements - 1).isEmpty)
+    assert(Engine.basketSnapshot(spark, dir, elements)
+      .exists(_.elements == elements))
   }
 
   test("GET /metrics counts requests per route, by status class and " +
@@ -269,24 +291,89 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
     } finally mApi.stop()
   }
 
+  test("GET /metrics counts blended and 3-hop answers by snapshot and " +
+      "DataFrame path") {
+    val dir = Fixtures.write(spark)
+    val asked = Seq("/customers/1/recommendations", "/customers/2/strategies",
+      "/customers/9999/recommendations", "/recs?strategy=pagerank",
+      "/recs?strategy=similarity&customer_id=1",
+      "/recs?strategy=similarity&customer_id=9999")
+    /** The `serving` block before and after `asked`. */
+    def serving(limit: Long): (String, String) = {
+      val sApi = new HttpApi(spark, dir, 0, None, limit)
+      val at = sApi.start()
+      def block = get("/metrics", at)._2.split(""""serving":""")(1)
+      try {
+        val before = block
+        asked.foreach(get(_, at))
+        (before, block)
+      } finally sApi.stop()
+    }
+    def want(rows: String, elements: String, snap: Int, frames: Int) =
+      s"""{"snapshot_rows":$rows,"basket_elements":$elements,""" +
+        s""""blended":{"snapshot":${3 * snap},"dataframe":${3 * frames}},""" +
+        s""""collab":{"snapshot":${2 * snap},"dataframe":${2 * frames}}}}"""
+    val rows = Engine.serveSnapshot(spark, Engine.fromOrders(spark, dir))
+      .get.size
+    val elements = Relational.bipartite(spark, dir).count()
+    assert(serving(Engine.ServeLocalRows) ==
+      (want("null", "null", 0, 0), want(s"$rows", s"$elements", 1, 0)))
+    assert(serving(0L) ==
+      (want("null", "null", 0, 0), want("null", "null", 0, 1)))
+  }
+
+  test("blended and breakdown bodies from the snapshot are the DataFrame " +
+      "path's, byte for byte") {
+    import spark.implicits._
+    def assertSame(snapAt: Int, framesAt: Int, ids: Seq[Long],
+        paths: Seq[String]): Unit =
+      for (id <- ids; p <- paths) {
+        val path = s"/customers/$id/$p"
+        assert(get(path, snapAt) == get(path, framesAt), path)
+      }
+    val all = Seq("recommendations", "recommendations?top_n=10",
+      "strategies?top_n=10")
+    // every Fixtures customer and an unknown id
+    assertSame(port, dfPort, Seq(1L, 2L, 3L, 9999L), all)
+    // the toy graph's C1-C3, a seedless customer (G2) and an unknown id
+    val toy = Fixtures.toyGraph(spark)
+    val g2 = toy.copy(customers = Seq(1L, 2L, 3L, 4L).toDF("customer_id"))
+    def pair(dir: String, g: Option[Engine.ProductGraph]) =
+      Seq(Engine.ServeLocalRows, 0L).map(new HttpApi(spark, dir, 0, g, _))
+    val servers = pair(Fixtures.write(spark), Some(g2)) ++
+      pair(sf, None)
+    try {
+      val Seq(toyAt, toyDfAt, sfAt, sfDfAt) = servers.map(_.start())
+      assertSame(toyAt, toyDfAt, Seq(1L, 2L, 3L, 4L, 99L), all)
+      // ten sf0.001 customers and an unknown id, at the benchmark's top_n:
+      // the DataFrame path takes hundreds of ms per request
+      val ids = spark.read.parquet(s"$sf/customer.parquet")
+        .select("c_custkey").as[Long].collect().sorted
+      assertSame(sfAt, sfDfAt, ids.take(10).toSeq :+ (ids.last + 1),
+        Seq("recommendations?top_n=3", "strategies?top_n=3"))
+    } finally servers.foreach(_.stop())
+  }
+
   test("past its row limit the serving kernel yields to the DataFrame path") {
     val g = Engine.fromOrders(spark, Fixtures.write(spark))
-    Engine.recommendRows(spark, g, 1L) // builders' first touch
-    val edges = g.cooc.count() + Recommend.jaccardPairsFrom(
-      BuilderCache.ensureCached(spark, "engine.incidence", g.incidence))
-      .count()
-    // the cached edge counts alone exceed the limit: decided before any job
+    val rows = Engine.serveSnapshot(spark, g).get.size // builders' first touch
+    val incidence =
+      BuilderCache.ensureCached(spark, "engine.incidence", g.incidence)
+    val held = incidence.count() + g.cooc.count() +
+      Recommend.jaccardPairsFrom(incidence).count()
+    // the cached counts alone exceed the limit: decided before any job
     assert(jobsDuring {
-      assert(Engine.serveLocal(spark, g, 1L, Some(3), edges - 1).isEmpty)
-      assert(Engine.serveLocal(spark, g, 1L, None, edges - 1).isEmpty)
+      assert(Engine.serveSnapshot(spark, g, held - 1).isEmpty)
     } == 0)
-    // the edges fit but the product ids do not: the task stops reading
-    assert(Engine.serveLocal(spark, g, 1L, Some(3), edges).isEmpty)
-    assert(Engine.serveLocal(spark, g, 1L, None, edges).isEmpty)
-    // limit 0 answers through the DataFrame path, with the kernel's rows
-    assert(Engine.recommendRowsWithin(spark, g, 1L, 3, 0L).toSeq ==
+    // the cached counts fit but the customer and product ids do not: the
+    // task stops reading
+    assert(held < rows)
+    assert(Engine.serveSnapshot(spark, g, rows - 1).isEmpty)
+    assert(Engine.serveSnapshot(spark, g, rows).exists(_.size == rows))
+    // the DataFrame path answers with the snapshot's rows
+    assert(Engine.frameRows(spark, g, 1L, Some(3)).toSeq ==
       Engine.recommendRows(spark, g, 1L).toSeq)
-    assert(Engine.breakdownRowsWithin(spark, g, 1L, 0L).toSeq ==
+    assert(Engine.frameRows(spark, g, 1L, None).toSeq ==
       Engine.breakdownRows(spark, g, 1L).toSeq)
   }
 
