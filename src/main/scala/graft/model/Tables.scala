@@ -1,6 +1,12 @@
 package graft.model
 
+import java.util.concurrent.ConcurrentHashMap
+
+import scala.util.Try
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table readers over the driver testdata directory layout
   * (`TESTDATA.md`): one parquet file per table under `<sfDir>/`.
@@ -12,10 +18,68 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * single-file input. Reference analogue: the `SELECT *` extracts at
   * `tp2/app/etl.py:201-206` — except we never materialize all columns;
   * pruning happens per-query.
+  *
+  * A plain `spark.read.parquet` infers the schema with a Spark job
+  * (the footer merge), about 40 ms and one job per call even for an
+  * unchanged file in a warm session, and every query reads its tables
+  * afresh. So [[read]] infers a table's schema once per file version
+  * and hands it to every later read (`spark.read.schema(s)`), which
+  * starts no job. The key is the qualified path and the session's
+  * explicitly set `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*`
+  * entries (they change what inference returns: `binaryAsString`,
+  * `nanosAsLong`, ...); the version is the path's modification time and
+  * length, and for a directory its direct children's too, so a table
+  * rewritten in place (new part-file names) is inferred anew. A new
+  * version replaces the entry, so there is one per table path and
+  * reader settings. The schema holds no data and depends on the file,
+  * not on a session's builders: it is not a [[BuilderCache]] entry and
+  * `release` leaves it alone. A rewrite deeper than the direct
+  * children, or one keeping every name, mtime and length, is not seen.
   */
 object Tables {
-  def read(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private type Version = Seq[(String, Long, Long)]
+
+  /** (qualified path, parquet reader settings) → (version, schema). */
+  private val schemas =
+    new ConcurrentHashMap[(String, Map[String, String]), (Version, StructType)]
+
+  def read(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    versionOf(spark, path) match {
+      // no status: the plain read raises Spark's own error (PATH_NOT_FOUND)
+      case None => spark.read.parquet(path)
+      case Some((qualified, version)) =>
+        val key = (qualified, parquetSettings(spark))
+        val known = schemas.get(key)
+        if (known != null && known._1 == version)
+          spark.read.schema(known._2).parquet(path)
+        else {
+          val df = spark.read.parquet(path)
+          schemas.put(key, (version, df.schema))
+          df
+        }
+    }
+  }
+
+  /** The qualified path and its version, `None` if the lookup fails. */
+  private def versionOf(spark: SparkSession,
+      path: String): Option[(String, Version)] = Try {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val st = fs.getFileStatus(p)
+    val children =
+      if (st.isDirectory) fs.listStatus(p).toSeq.sortBy(_.getPath.toString)
+      else Nil
+    def id(f: FileStatus) =
+      (f.getPath.toString, f.getModificationTime, f.getLen)
+    (fs.makeQualified(p).toString, (st +: children).map(id))
+  }.toOption
+
+  private def parquetSettings(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") ||
+        k.startsWith("spark.sql.legacy.parquet.")
+    }
 
   def region(s: SparkSession, d: String): DataFrame    = read(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = read(s, d, "nation")

@@ -177,9 +177,6 @@ object Retrieval {
     * display, [[nllBucket]] BEFORE ranking: the per-doc sum's
     * accumulation order is engine-dependent in the last ulp, so only
     * the 6-dp value is a cross-engine-stable sort key). */
-  private[graft] def unigramNllOf(docs: DataFrame): DataFrame =
-    unigramNllOfTf(tfOf(docs))
-
   private def unigramNllOfTf(tf: DataFrame): DataFrame = {
     val cnt = tf.groupBy("term").agg(sum("tf").as("cnt"))
     val tot = cnt.agg(sum("cnt").cast("long").as("t_tokens"),

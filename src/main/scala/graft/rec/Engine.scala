@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.columnar.InMemoryRelation
 import org.apache.spark.sql.functions._
 
 import graft.algo.PageRank
-import graft.model.BuilderCache
+import graft.model.{BuilderCache, Tables}
 import graft.operators.{Recommend, Relational}
 
 /** The tp1 `RecommendationEngine` re-expressed over DataFrames
@@ -47,9 +47,9 @@ object Engine {
   /** Testdata builder: order-derived incidence + lineitem co-occurrence. */
   def fromOrders(spark: SparkSession, dir: String): ProductGraph =
     ProductGraph(
-      customers = spark.read.parquet(s"$dir/customer.parquet")
+      customers = Tables.customer(spark, dir)
         .select(col("c_custkey").as("customer_id")),
-      products = spark.read.parquet(s"$dir/part.parquet")
+      products = Tables.part(spark, dir)
         .select(col("p_partkey").as("id")),
       incidence = Relational.bipartite(spark, dir),
       cooc = Relational.coocCounts(spark, dir))

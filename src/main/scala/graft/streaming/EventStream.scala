@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
+import graft.model.Tables
+
 /** Structured Streaming variants of the events analytics (SURVEY §2.10:
   * the reference consumes its stream-shaped `events` table strictly in
   * batch; this is the extension surface's streaming path).
@@ -37,11 +39,10 @@ object EventStream {
   /** Streaming source over the events parquet dir, `ts` normalized to the
     * µs TimestampType like the batch reader. A streaming source needs a
     * static schema up front, so sniff the stored `ts` type from the
-    * parquet footer (one metadata-only batch read at stream-definition
-    * time — no data scan) and declare the matching schema. */
+    * table's batch schema ([[Tables.read]]: inferred from the footer once
+    * per file version, no data scan) and declare the matching schema. */
   def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    val storedTs = spark.read
-      .parquet(s"$dir/events.parquet").schema("ts").dataType
+    val storedTs = Tables.read(spark, dir, "events").schema("ts").dataType
     // the file stream source monitors a DIRECTORY; the testdata ships one
     // parquet file per table in a flat dir, so glob-filter to the table
     val raw = spark.readStream

@@ -47,8 +47,20 @@ object Fixtures {
     ).toDF("event_id", "user_id", "event_type", "value", "ts")
       .select("event_id", "ts", "user_id", "event_type", "value")
 
+    // not in the reference toy set: a five-document corpus (one exact
+    // duplicate) so the corpus-tier queries have a table to read
+    val documents: DataFrame = Seq(
+      (1L, "the quick brown fox", "en", "src0"),
+      (2L, "the quick brown fox", "en", "src1"),
+      (3L, "spark joins scale out", "en", "src1"),
+      (4L, "graph databases store edges", "de", "src2"),
+      (5L, "a small corpus of short documents", "es", "src3")
+    ).toDF("doc_id", "text", "lang", "source")
+      .selectExpr("*", "cast(length(text) as bigint) as n_chars")
+
     Seq("customer" -> customer, "part" -> part, "orders" -> orders,
-      "lineitem" -> lineitem, "events" -> events).foreach { case (n, df) =>
+      "lineitem" -> lineitem, "events" -> events,
+      "documents" -> documents).foreach { case (n, df) =>
       df.coalesce(1).write.mode("overwrite").parquet(s"$d/$n.parquet")
     }
     dir = d

@@ -57,7 +57,8 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
   test("a new server answering /health has started no Spark job") {
     // both snapshots are read on the first request that needs them, not
     // at construction: a server given its graph starts no job, one that
-    // reads its graph from a directory only that read's
+    // reads its graph from a directory only what that read starts (none
+    // once its builders and table schemas are warm)
     val dir = Fixtures.write(spark)
     Engine.fromOrders(spark, dir) // the graph's builders
     val graphJobs = jobsDuring(Engine.fromOrders(spark, dir))
