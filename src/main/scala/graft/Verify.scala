@@ -31,22 +31,16 @@ object Verify {
       }
     }
 
-  def main(args: Array[String]): Unit = {
-    val (sfDir, outDir) = (args(0), args(1))
-    // Optional extra args restrict the dump to named queries (iteration
-    // aid); the driver always runs with exactly two args → full dump.
-    val only = args.drop(2).toSet
-    val spark = Session()
-    new java.io.File(outDir).mkdirs()
-    val failed = dump(spark, sfDir, outDir, SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.isEmpty || only(name) })
+  /** Write the oracle SQL of every [[SparkEntry.oracleSql]] entry to
+    * `outDir/oracle_sql.json`, and the staged renderings of the sf10-wall
+    * oracles ([[SparkEntry.oracleStages]] scaladoc) to
+    * `outDir/oracle_stages.json`, which `scripts/selfcheck.py` reads under
+    * GRAFT_ORACLE_STAGED=1. */
+  private[graft] def writeOracles(outDir: String): Unit = {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${jStr(k)}: ${jStr(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    // Staged renderings for the sf10-wall oracles (SparkEntry
-    // .oracleStages scaladoc): selfcheck.py consumes this under
-    // GRAFT_ORACLE_STAGED=1. The driver's own gate ignores the file.
     val stages = SparkEntry.oracleStages.map { case (n, stmts) =>
       s"[${jStr(n)}, ${stmts.map(jStr).mkString("[", ",", "]")}]"
     }.mkString("[", ",", "]")
@@ -57,6 +51,18 @@ object Verify {
     }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_stages.json"),
       s"""{"stages": $stages, "queries": $staged}""")
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (sfDir, outDir) = (args(0), args(1))
+    // Optional extra args restrict the dump to named queries (iteration
+    // aid); the driver always runs with exactly two args → full dump.
+    val only = args.drop(2).toSet
+    val spark = Session()
+    new java.io.File(outDir).mkdirs()
+    val failed = dump(spark, sfDir, outDir, SparkEntry.queries.toSeq
+      .filter { case (name, _) => only.isEmpty || only(name) })
+    writeOracles(outDir)
     if (failed.nonEmpty)
       System.err.println(s"[verify] ${failed.size} failed: " +
         failed.sorted.mkString(" "))

@@ -2,13 +2,14 @@ package graft.algo
 
 import scala.collection.concurrent.TrieMap
 
-/** The one driver-side round loop of the engine's fixpoints: PageRank's
-  * RDD loop, `Dedup.dupClusters`, `GraphMetrics.reachHopsOf` and the BPE
-  * learn. Each brings its step (plans, lineage cut, arithmetic); this
-  * owns the round counter, the cap, the stop test, the failure of a loop
-  * that must converge and does not, and one [[Round]] record per round,
-  * taken on the action the step runs anyway. The last run of each loop
-  * is published by name when it ends; `tools.Profile` prints it. */
+/** The one round loop of the engine's fixpoints: PageRank's RDD loop
+  * and its one-task solver, `Dedup.dupClusters`,
+  * `GraphMetrics.reachHopsOf` and the BPE learn. Each brings its step
+  * (plans, lineage cut, arithmetic); this owns the round counter, the
+  * cap, the stop test, the failure of a loop that must converge and does
+  * not, and one [[Round]] record per round, taken on the action the step
+  * runs anyway. The last run of each loop is published by name, in the
+  * JVM that ran it, when it ends; `tools.Profile` prints it. */
 object Fixpoint {
 
   /** `delta` is the loop's stop measure; `rows` its state's size after

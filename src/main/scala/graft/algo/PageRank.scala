@@ -168,7 +168,10 @@ object PageRank {
 
   /** The in-task power iteration shared by [[runLocal]] and
     * [[graft.rec.Engine]]'s serving snapshot: the one copy of the sink /
-    * teleport / L1 math below the distributed loop.
+    * teleport / L1 math below the distributed loop. Its rounds run under
+    * [[Fixpoint]] as `pagerankLocal`, one record per power step, kept
+    * in the JVM that solves: the driver for a serving snapshot, the
+    * task's executor for [[runLocal]] (the driver itself in local mode).
     *
     * Vertices are indexed in ascending id order, and `contrib(v)` sums
     * its in-edges in that index order, so neither the order rows arrive
@@ -215,12 +218,11 @@ object PageRank {
       }
     }
     val d = params.damping
-    var rank = Array.fill(nV)(1.0 / nV)
-    var sinkMass = { var s = 0.0; var j = 0
-      while (j < nV) { if (isSink(j)) s += rank(j); j += 1 }; s }
-    var iter = 0
-    var delta = Double.MaxValue
-    while (iter < params.maxIter && delta >= params.tol) {
+    val rank0 = Array.fill(nV)(1.0 / nV)
+    val sinkMass0 = { var s = 0.0; var j = 0
+      while (j < nV) { if (isSink(j)) s += rank0(j); j += 1 }; s }
+    val (rank, _) = Fixpoint.run("pagerankLocal", (rank0, sinkMass0),
+        params.maxIter)(_ < params.tol) { case ((rank, sinkMass), _) =>
       val contrib = new Array[Double](nV)
       var u = 0
       while (u < nV) {
@@ -241,7 +243,7 @@ object PageRank {
         if (isSink(v)) sm += nr
         v += 1
       }
-      rank = next; delta = dl; sinkMass = sm; iter += 1
+      ((next, sm), dl, nV.toLong)
     }
     (ids, rank)
   }

@@ -44,14 +44,6 @@ object Relational {
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
       .orderBy("event_id")
 
-  /** Distinct (order, product) incidence — the CONTAINS edge set. The
-    * reference's Neo4j MERGE collapses duplicate (order,product) rows
-    * (`tp2/app/etl.py:287-303`); `distinct()` reproduces that. */
-  def orderItems(spark: SparkSession, dir: String): DataFrame =
-    Tables.lineitem(spark, dir)
-      .select(col("l_orderkey"), col("l_partkey"))
-      .distinct()
-
   /** Unordered directed co-occurrence counts (src, dst, cnt) — shared
     * builder for cooc_topk / cooc_pairs / adjacency_norm / rec_blend /
     * the PageRank adjacency. Registered in [[BuilderCache]]: within one

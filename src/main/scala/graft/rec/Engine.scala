@@ -252,20 +252,18 @@ object Engine {
           Seq(seeds))
     }
 
-  /** Rows a serving snapshot may hold: for a [[ServeSnapshot]], every
-    * customer id and incidence row, `engine.cooc`, the Jaccard pairs
-    * and the product ids; for a [[BasketSnapshot]], the basket elements.
+  /** Rows the [[ServeSnapshot]] may hold: every customer id and
+    * incidence row, `engine.cooc`, the Jaccard pairs and the product ids.
     * Past it every request takes the DataFrame path.
     *
     * The bound sizes a snapshot read once and held on the driver, not
-    * per-request work. At sf0.001 (`local[2]`, 4 cores) a
-    * [[ServeSnapshot]] is 43 353 rows, about 1.1 MB on the heap
-    * (Spark's `SizeEstimator`), read in one job of about 0.2 s warm; an
-    * answer from it takes about 1.1 ms, a [[BasketSnapshot]]'s (5 382
-    * elements, 47 kB) about 0.5 ms. The one-task kernel this replaced
-    * ran one job per request, about 85 ms. Measured earlier per warm
-    * request on `local[2]`, that kernel against the DataFrame path, with
-    * the JVM's allocation during a kernel request:
+    * per-request work. At sf0.001 (`local[2]`, 4 cores) the snapshot is
+    * 43 353 rows, about 1.1 MB on the heap (Spark's `SizeEstimator`),
+    * read in one job of about 0.2 s warm; a blended answer from it takes
+    * about 1.1 ms. The one-task kernel this replaced ran one job per
+    * request, about 85 ms. Measured earlier per warm request on
+    * `local[2]`, that kernel against the DataFrame path, with the JVM's
+    * allocation during a kernel request:
     *   - sf0.001, 38 k rows: 0.36 s against 1.3 s, 58 MB allocated;
     *   - sf0.01, 1.2 M rows: 0.66 s against 1.35 s, 190 MB allocated;
     *   - sf0.1, 15 M rows: 3.1 s against 2.5 s, 1.7 GB allocated.
@@ -295,7 +293,8 @@ object Engine {
     * customer, in ONE `coalesce(1).mapPartitions` job: the customer ids,
     * `engine.incidence`, `engine.cooc`, the [[Recommend.jaccardPairsFrom]]
     * memo and the product ids. The answers then need no Spark job
-    * ([[ServeSnapshot.rows]]), and the read caches nothing.
+    * ([[ServeSnapshot.rows]], and [[ServeSnapshot.collab]] on a graph
+    * read from a directory), and the read caches nothing.
     *
     * This is [[PageRank.run]]'s size-based choice made for every request
     * at once, and it is made before any job: when the incidence, cooc and
@@ -339,7 +338,7 @@ object Engine {
   private def readSnapshot(it: Iterator[InternalRow],
       limit: Long): Option[ServeSnapshot] = {
     var read = 0L
-    val known = new mutable.ArrayBuilder.ofLong
+    val known = mutable.LongMap.empty[Unit]
     val seeds = mutable.LongMap.empty[mutable.ArrayBuilder.ofLong]
     val out = mutable.LongMap.empty[
       (mutable.ArrayBuilder.ofLong, mutable.ArrayBuilder.ofLong)]
@@ -349,7 +348,7 @@ object Engine {
       val r = it.next()
       read += 1
       r.getInt(0) match {
-        case TagKnown => known += r.getLong(1)
+        case TagKnown => known(r.getLong(1)) = ()
         case TagSeed => seeds.getOrElseUpdate(r.getLong(1),
           new mutable.ArrayBuilder.ofLong) += r.getLong(2)
         case TagEdge =>
@@ -362,27 +361,27 @@ object Engine {
       }
     }
     if (read > limit) return None
-    // incidence rows of an unknown customer answer nothing (P5)
-    val baskets = mutable.LongMap.from(known.result().iterator.map(c =>
-      c -> seeds.get(c).fold(Array.emptyLongArray)(_.result())))
     val cooc = out.mapValuesNow { case (d, c) => (d.result(), c.result()) }
     // [[Relational.transitionWeights]]: cnt / Σcnt per src
     val adj = cooc.toArray.map { case (s, (ds, cs)) =>
       val total = cs.sum
       (s, (ds, cs.map(_.toDouble / total)))
     }
-    Some(new ServeSnapshot(read, baskets, products.result(), cooc, adj,
-      p1.result(), p2.result(), jac.result()))
+    Some(new ServeSnapshot(read, known, seeds.mapValuesNow(_.result()),
+      products.result(), cooc, adj, p1.result(), p2.result(), jac.result()))
   }
 
   /** The inputs of [[recommend]] and [[strategyBreakdown]] for every
-    * customer, held on the driver: each known customer's basket, the
-    * cooc out-edges by src with their transition weights cnt / Σcnt
+    * customer, and of [[Recommend.collabTopkFor]] on a graph read from a
+    * directory, held on the driver: the known customer ids, the basket of
+    * every customer with an incidence row, known or not, the cooc
+    * out-edges by src with their transition weights cnt / Σcnt
     * ([[Relational.transitionWeights]]), the Jaccard pair arrays and the
     * product ids. `size` is the rows read to make it. Immutable once
     * made. */
   private[graft] final class ServeSnapshot private[Engine] (val size: Long,
-      baskets: mutable.LongMap[Array[Long]], products: Array[Long],
+      known: mutable.LongMap[Unit], baskets: mutable.LongMap[Array[Long]],
+      products: Array[Long],
       cooc: mutable.LongMap[(Array[Long], Array[Long])],
       adj: Array[(Long, PageRank.Adj)],
       p1: Array[Long], p2: Array[Long], jac: Array[Double])
@@ -399,9 +398,9 @@ object Engine {
       *
       * @throws IllegalArgumentException for an unknown customer (P5) */
     def rows(customerId: Long, topN: Option[Int]): Array[Row] = {
-      val basket = baskets.get(customerId)
-      require(basket.isDefined, s"unknown customer id: $customerId")
-      val seeds = mutable.LongMap.from(basket.get.iterator.map(_ -> ()))
+      // incidence rows of an unknown customer answer nothing (P5)
+      require(known.contains(customerId), s"unknown customer id: $customerId")
+      val seeds = basketSet(customerId)
       def ranks(pers: Long => Double): mutable.LongMap[Double] = {
         val pm = mutable.LongMap.empty[Double]
         var total = 0.0
@@ -478,29 +477,21 @@ object Engine {
             }
       }
     }
-  }
 
-  /** The baskets memo of the 3-hop collaborative filter
-    * ([[Recommend.collabTopkFor]]) held on the driver: each customer's id
-    * and sorted basket, and `elements`, the basket elements read. */
-  private[graft] final case class BasketSnapshot(elements: Long,
-      ids: Array[Long], baskets: Array[Array[Long]]) {
-
-    /** [[Recommend.collabTopkFor]]'s answer with no Spark job. Each other
-      * customer c2 whose basket B2 meets the seed basket P1 in
-      * I = B2 ∩ P1 counts once toward every p ∈ B2 reached from some
-      * p1 ∈ I with p ≠ p1. The score is the number of such c2; the answer
-      * is the top `topN` (product_id, score) by (-score, product_id). An
-      * unknown or orderless customer gets no rows, as on the DataFrame
-      * path. */
+    /** [[Recommend.collabTopkFor]]'s answer with no Spark job, for a
+      * snapshot of a graph read from a directory, whose incidence is
+      * `explode(`[[Relational.baskets]]`)`. Each other customer c2 whose
+      * basket B2 meets the seed basket P1 in I = B2 ∩ P1 counts once
+      * toward every p ∈ B2 reached from some p1 ∈ I with p ≠ p1. The
+      * score is the number of such c2; the answer is the top `topN`
+      * (product_id, score) by (-score, product_id). An unknown or
+      * orderless customer gets no rows, as on the DataFrame path. */
     def collab(customerId: Long, topN: Int): Array[(Long, Long)] = {
-      val seed = ids.lastIndexOf(customerId)
-      val p1 = mutable.LongMap.from((if (seed < 0) Iterator.empty
-        else baskets(seed).iterator).map(_ -> ()))
+      val p1 = basketSet(customerId)
       val score = mutable.LongMap.empty[Long]
-      ids.indices.filter(ids(_) != customerId).foreach { j =>
-        val b2 = baskets(j)
-        val in = b2.filter(p1.contains)
+      baskets.foreachEntry { (c2, b2) =>
+        val in = if (c2 == customerId) Array.emptyLongArray
+          else b2.filter(p1.contains)
         // with two products in I every p of B2 has some p1 ≠ p; with one,
         // every p but that one
         if (in.nonEmpty) b2.foreach { p =>
@@ -510,42 +501,12 @@ object Engine {
       }
       score.toArray.sortBy { case (p, s) => (-s, p) }.take(topN)
     }
-  }
 
-  /** The cached [[Relational.baskets]] memo as a [[BasketSnapshot]], in
-    * ONE `coalesce(1).mapPartitions` job. As in [[serveSnapshot]], the
-    * size choice is made before any job: when the cache already holds
-    * more than `limit` baskets, or the baskets frame is not cached, the
-    * answer is `None` and requests take the DataFrame path. The task also
-    * stops once it has read more than `limit` basket elements. */
-  private[graft] def basketSnapshot(spark: SparkSession, dir: String,
-      limit: Long = ServeLocalRows): Option[BasketSnapshot] = {
-    val baskets = Relational.baskets(spark, dir)
-    if (!cachedRows(baskets).exists(_ <= limit)) return None
-    baskets.select(col("customer_id").cast("long"),
-        col("ds").cast("array<bigint>"))
-      .coalesce(1).queryExecution.toRdd
-      .mapPartitions(it => Iterator.single(readBaskets(it, limit)))
-      .collect()
-      .headOption.getOrElse(readBaskets(Iterator.empty, limit))
-  }
-
-  /** The task body of [[basketSnapshot]]: `None` past `limit` basket
-    * elements read. A null customer joins no one on the DataFrame path,
-    * so its basket is read but not held. */
-  private def readBaskets(it: Iterator[InternalRow],
-      limit: Long): Option[BasketSnapshot] = {
-    var read = 0L
-    val ids = new mutable.ArrayBuilder.ofLong
-    val baskets = mutable.ArrayBuffer.empty[Array[Long]]
-    while (read <= limit && it.hasNext) {
-      val r = it.next()
-      val ds = r.getArray(1).toLongArray()
-      read += ds.length
-      if (!r.isNullAt(0)) { ids += r.getLong(0); baskets += ds }
-    }
-    if (read > limit) None
-    else Some(BasketSnapshot(read, ids.result(), baskets.toArray))
+    /** A customer's basket as a set; empty for an orderless or unknown
+      * one. */
+    private def basketSet(customerId: Long): mutable.LongMap[Unit] =
+      mutable.LongMap.from(baskets.getOrElse(customerId, Array.emptyLongArray)
+        .iterator.map(_ -> ()))
   }
 
   /** `round(x, 6)` as Spark evaluates it: HALF_UP on the decimal

@@ -26,24 +26,23 @@ import graft.rec.{Engine, RecsApi}
   *   - `GET /metrics` → per route: requests, answers by status class and
   *     a latency histogram in power-of-two ms buckets; paths that name
   *     no route count under `other`. Under `serving`: the rows of the
-  *     held snapshot and basket elements (null before their first
-  *     request or past the bound), and the blended and 3-hop requests
-  *     answered from them and by the DataFrame path.
+  *     held snapshot (null before its first request or past the bound),
+  *     and the blended and 3-hop requests answered from it and by the
+  *     DataFrame path.
   * Each route answers its exact path only; any other path is 404.
   *
-  * How the blended routes are served. On the first
-  * `/customers/{id}/...` request the server reads every input of the
-  * blended engine, for every customer, into one driver-side
-  * [[graft.rec.Engine.ServeSnapshot]] in one Spark job: the known
-  * customers, each one's basket, the cooc out-edges with their transition
-  * weights, the Jaccard pairs and the product ids. Every later request,
-  * an unknown id included, is answered from it with no Spark job. At
-  * sf0.001 the snapshot is 43 353 rows, about 1.1 MB, and a warm
-  * blended request takes 1.4–1.7 ms over HTTP (route medians of a
-  * traced `serve` run, `local[2]` on 4 cores), against about 85 ms for
-  * the one-job kernel it replaced. When the cached inputs sum past
+  * How the blended routes are served. On the first request that needs
+  * it the server reads every input of the blended engine, for every
+  * customer, into one driver-side [[graft.rec.Engine.ServeSnapshot]] in
+  * one Spark job: the known customers, the baskets, the cooc out-edges
+  * with their transition weights, the Jaccard pairs and the product ids.
+  * Every later request, an unknown id included, is answered from it with
+  * no Spark job. At sf0.001 the snapshot is 43 353 rows, about 1.1 MB,
+  * and a warm blended request takes 1.4–1.7 ms over HTTP (route medians
+  * of a traced `serve` run, `local[2]` on 4 cores), against about 85 ms
+  * for the one-job kernel it replaced. When the cached inputs sum past
   * `Engine.ServeLocalRows` rows the snapshot is not made and every
-  * request takes the DataFrame path. Neither snapshot is read before
+  * request takes the DataFrame path. The snapshot is not read before
   * the first request that needs it; only the graph is read at
   * construction, so a server given its graph answers `/health` having
   * started no Spark job.
@@ -54,14 +53,15 @@ import graft.rec.{Engine, RecsApi}
   * without a customer (popularity). The server computes each one's
   * top-10 through [[graft.rec.RecsApi.recs]] on the strategy's first
   * request, holds the rendered rows, and answers every later request
-  * with their first `limit`, no Spark job run. The held lists and both
-  * snapshots reflect the tables at their first request, just as `g` and
+  * with their first `limit`, no Spark job run. The held lists and the
+  * snapshot reflect the tables at their first request, just as `g` and
   * the builder memos pin them. Similarity with a customer, the 3-hop
-  * collaborative filter, is answered with no Spark job from the cached
-  * baskets, read once into a [[graft.rec.Engine.BasketSnapshot]] on its
-  * first request while they are within `Engine.ServeLocalRows`
-  * elements, and by `RecsApi.recs`' DataFrame plan above that bound.
-  * Every answer is the library's, byte for byte (ServeSpec).
+  * collaborative filter, is answered with no Spark job from the
+  * snapshot's baskets when the server read its graph from `dir`, whose
+  * incidence is the exploded baskets the filter reads. A server given
+  * its graph, or one past the bound, answers it by `RecsApi.recs`'
+  * DataFrame plan. Every answer is the library's, byte for byte
+  * (ServeSpec).
   *
   * Built on the JDK's `HttpServer` — no added dependency, sufficient for
   * the reference's GET-only surface. The server is a thin JSON mapper:
@@ -96,7 +96,7 @@ final class HttpApi private[graft] (spark: SparkSession, dir: String,
     port: Int, graph: Option[Engine.ProductGraph], localRows: Long) {
   import HttpApi.{detail, jStr}
 
-  // `localRows` is the snapshots' row limit; only tests pass one (0
+  // `localRows` is the snapshot's row limit; only tests pass one (0
   // sends every blended and 3-hop `/recs` request down the DataFrame
   // path)
   def this(spark: SparkSession, dir: String, port: Int = 0,
@@ -205,15 +205,18 @@ final class HttpApi private[graft] (spark: SparkSession, dir: String,
       return (400, detail(s"Unknown strategy: $strategy. Use: " +
         RecsApi.Strategies.mkString(", ")))
     val items = (strategy, cid) match {
-      case ("similarity", Some(c)) => baskets.get match {
-        case Some(b) =>
-          collab.snapshot += 1
-          b.collab(c, n).map { case (id, s) =>
-            s"""{"product_id":$id,"score":$s}""" }
-        case None =>
-          collab.dataFrame += 1
-          rows(RecsApi.recs(spark, dir, strategy, cid, n))
-      }
+      // an injected graph's incidence is not `dir`'s: its snapshot cannot
+      // answer the 3-hop filter
+      case ("similarity", Some(c)) =>
+        (if (graph.isEmpty) snapshot.get else None) match {
+          case Some(snap) =>
+            collab.snapshot += 1
+            snap.collab(c, n).map { case (id, s) =>
+              s"""{"product_id":$id,"score":$s}""" }
+          case None =>
+            collab.dataFrame += 1
+            rows(RecsApi.recs(spark, dir, strategy, cid, n))
+        }
       // (-score, product_id) is a total order: the first n of the top-10
       // are the top-n
       case _ => held.getOrElseUpdate(strategy,
@@ -276,13 +279,11 @@ final class HttpApi private[graft] (spark: SparkSession, dir: String,
 
   // ---- held serving inputs ----
 
-  /** The blended engine's inputs, read on the first blended request;
-    * `None` inside past `localRows`. */
+  /** The blended engine's inputs and, on a graph read from `dir`, the
+    * 3-hop filter's, read on the first request that needs them; `None`
+    * inside past `localRows`. */
   private val snapshot =
     new HttpApi.Held(Engine.serveSnapshot(spark, g, localRows))
-  /** The 3-hop filter's baskets, read on its first request. */
-  private val baskets =
-    new HttpApi.Held(Engine.basketSnapshot(spark, dir, localRows))
   private val blended, collab = new HttpApi.Answered
 
   // ---- /metrics ----
@@ -293,14 +294,11 @@ final class HttpApi private[graft] (spark: SparkSession, dir: String,
     * this one (a request is counted once it is answered), then the
     * serving side. */
   private def metricsJson: String = {
-    def rows(n: Option[Option[Long]]) =
-      n.flatten.map(_.toString).getOrElse("null")
-    val snapshotRows = rows(snapshot.peek.map(_.map(_.size)))
-    val basketElements = rows(baskets.peek.map(_.map(_.elements)))
+    val snapshotRows =
+      snapshot.peek.flatten.map(_.size.toString).getOrElse("null")
     HttpApi.Routes.map(r => jStr(r) + ":" + stats(r).json)
       .mkString("""{"routes":{""", ",", "},") +
       s""""serving":{"snapshot_rows":$snapshotRows,""" +
-      s""""basket_elements":$basketElements,""" +
       s""""blended":${blended.json},"collab":${collab.json}}}"""
   }
 

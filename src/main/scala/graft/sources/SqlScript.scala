@@ -83,12 +83,4 @@ object SqlScript {
     }
     (n, last)
   }
-
-  def runFile(spark: SparkSession, path: String,
-      lenient: Boolean = false): (Int, Option[DataFrame]) = {
-    val p = java.nio.file.Paths.get(path)
-    require(java.nio.file.Files.exists(p), s"script not found: $path")
-    run(spark, new String(java.nio.file.Files.readAllBytes(p),
-      java.nio.charset.StandardCharsets.UTF_8), lenient)
-  }
 }

@@ -54,6 +54,19 @@ class FixpointSpec extends SparkSpec {
     assert(rec.forall(_.rows == 4L), rec)
   }
 
+  test("the one-task PageRank on the toy graph under default Params runs " +
+      "to the 50-round cap") {
+    val v = Seq(1L, 2L, 3L, 4L).map((_, 1.0)).toDF("id", "pers")
+    val e = Seq((1L, 2L, 1.0), (2L, 1L, 0.5), (2L, 4L, 0.5), (4L, 2L, 1.0))
+      .toDF("src", "dst", "weight")
+    val params = PageRank.Params()
+    PageRank.run(spark, v, e, params).collect()
+    val rec = Fixpoint.lastRuns("pagerankLocal")
+    assert(rec.map(_.round) == (1 to params.maxIter), rec)
+    assert(rec.last.delta >= params.tol, rec)
+    assert(rec.forall(_.rows == 4L), rec)
+  }
+
   test("dupClusters on the 200-node path graph ends with a round that " +
       "changed no label") {
     val chain = (0L until 199L).map(i => (i, i + 1)).toDF("p1", "p2")

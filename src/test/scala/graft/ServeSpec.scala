@@ -8,7 +8,7 @@ import scala.collection.mutable
 import org.scalatest.BeforeAndAfterAll
 
 import graft.model.BuilderCache
-import graft.operators.{Recommend, Relational}
+import graft.operators.Recommend
 import graft.rec.{Engine, RecsApi}
 import graft.serve.HttpApi
 
@@ -55,8 +55,8 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("a new server answering /health has started no Spark job") {
-    // both snapshots are read on the first request that needs them, not
-    // at construction: a server given its graph starts no job, one that
+    // the snapshot is read on the first request that needs it, not at
+    // construction: a server given its graph starts no job, one that
     // reads its graph from a directory only what that read starts (none
     // once its builders and table schemas are warm)
     val dir = Fixtures.write(spark)
@@ -242,22 +242,6 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
     assert(dfBody == body)
   }
 
-  test("past its row limit the collaborative-filter kernel yields to the " +
-      "DataFrame path") {
-    val dir = Fixtures.write(spark)
-    val baskets = Relational.baskets(spark, dir).count() // cached memo
-    // the cached basket count alone exceeds the limit: decided before any job
-    assert(jobsDuring {
-      assert(Engine.basketSnapshot(spark, dir, baskets - 1).isEmpty)
-    } == 0)
-    // the baskets fit but their elements do not: the task stops reading
-    val elements = Relational.bipartite(spark, dir).count()
-    assert(elements > baskets)
-    assert(Engine.basketSnapshot(spark, dir, elements - 1).isEmpty)
-    assert(Engine.basketSnapshot(spark, dir, elements)
-      .exists(_.elements == elements))
-  }
-
   test("GET /metrics counts requests per route, by status class and " +
       "latency") {
     // the toy graph serves /customers; the missing dir fails /recs inside
@@ -310,17 +294,33 @@ class ServeSpec extends SparkSpec with BeforeAndAfterAll {
         (before, block)
       } finally sApi.stop()
     }
-    def want(rows: String, elements: String, snap: Int, frames: Int) =
-      s"""{"snapshot_rows":$rows,"basket_elements":$elements,""" +
+    def want(rows: String, snap: Int, frames: Int) =
+      s"""{"snapshot_rows":$rows,""" +
         s""""blended":{"snapshot":${3 * snap},"dataframe":${3 * frames}},""" +
         s""""collab":{"snapshot":${2 * snap},"dataframe":${2 * frames}}}}"""
     val rows = Engine.serveSnapshot(spark, Engine.fromOrders(spark, dir))
       .get.size
-    val elements = Relational.bipartite(spark, dir).count()
     assert(serving(Engine.ServeLocalRows) ==
-      (want("null", "null", 0, 0), want(s"$rows", s"$elements", 1, 0)))
-    assert(serving(0L) ==
-      (want("null", "null", 0, 0), want("null", "null", 0, 1)))
+      (want("null", 0, 0), want(s"$rows", 1, 0)))
+    assert(serving(0L) == (want("null", 0, 0), want("null", 0, 1)))
+  }
+
+  test("a server given its graph answers the 3-hop /recs filter by the " +
+      "DataFrame path") {
+    // the toy graph's incidence is not the directory's baskets, so its
+    // snapshot cannot answer the filter: from the toy incidence customer
+    // 1 would get products 2, 3 and 4, from the directory's baskets none
+    val dir = Fixtures.write(spark)
+    val path = "/recs?strategy=similarity&customer_id=1"
+    val gApi = new HttpApi(spark, dir, graph = Some(Fixtures.toyGraph(spark)))
+    val at = gApi.start()
+    try {
+      assert(get(path, at) == (200, libraryRecs(dir, "similarity", Some(1L),
+        10)))
+      assert(get("/metrics", at)._2.split(""""serving":""")(1) ==
+        """{"snapshot_rows":null,"blended":{"snapshot":0,"dataframe":0},""" +
+        """"collab":{"snapshot":0,"dataframe":1}}}""")
+    } finally gApi.stop()
   }
 
   test("blended and breakdown bodies from the snapshot are the DataFrame " +
